@@ -140,6 +140,11 @@ def _canonical_pairs(pairs: DataFrame, id_a: str, id_b: str, score: str) -> Data
     )
 
 
+def _side_key(side: str, col: str):
+    """Node key of one pair endpoint, tagged with its side ('a:'/'b:')."""
+    return F.concat(F.lit(side), F.col(col).cast("string"))
+
+
 def dedupe_matches_lsap(
     pairs: DataFrame,
     *,
@@ -157,18 +162,23 @@ def dedupe_matches_lsap(
     from .cluster import connected_components
 
     slim = _canonical_pairs(pairs, id_a, id_b, score)
-    # component per a-side node; over-grouping from numeric id collisions
-    # across the two sides is harmless (LSAP over a union of disconnected
-    # blocks has the same optimum as solving them separately)
-    comp = connected_components(slim.select(id_a, id_b), materializer=materializer)
-    tagged = slim.join(
-        comp.select(F.col("id").alias(id_a), F.col("cluster_id").alias("__comp")), id_a
+    # CC over side-tagged node keys: the two sides are separate id
+    # namespaces, so a-side 5 and b-side 5 must be two nodes. Raw ids
+    # would glue unrelated blocks into one component that can cross
+    # max_lsap_block and be solved greedily instead of exactly.
+    comp = connected_components(
+        slim.select(_side_key("a:", id_a), _side_key("b:", id_b)),
+        materializer=materializer,
+    )
+    tagged = slim.withColumn("__ka", _side_key("a:", id_a)).join(
+        comp.select(F.col("id").alias("__ka"), F.col("cluster_id").alias("__comp")),
+        "__ka",
     )
 
     out_schema = slim.schema
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["__comp"])
+        pdf = pdf.drop(columns=["__ka", "__comp"])
         n_nodes = pdf[id_a].nunique() + pdf[id_b].nunique()
         if n_nodes > max_lsap_block:
             return _solve_block_greedy(pdf, id_a, id_b, score)

@@ -210,6 +210,70 @@ def candidate_pairs(
     )
 
 
+def _two_table_grid(
+    blocked_a: DataFrame,
+    blocked_b: DataFrame,
+    *,
+    id_col: str,
+    skew_threshold: int,
+    target_block: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides of candidate_pairs_two's S x T skew grid, each row
+    keyed by its cell: A as (__bk_a, __i, __j), B as (__bk_b, __i_b,
+    __j_b), every other column prefixed a_/b_. Joining the two on the
+    cell emits each in-block pair exactly once."""
+    prof = (
+        blocked_a.groupBy("block_key").agg(F.count("*").alias("__na"))
+        .join(
+            blocked_b.groupBy("block_key").agg(F.count("*").alias("__nb")),
+            "block_key",
+        )
+        .withColumn("__n", F.col("__na") + F.col("__nb"))
+    )
+    plan = (
+        prof.filter(F.col("__n") > skew_threshold)
+        .select(
+            "block_key",
+            F.least(F.ceil(F.col("__na") / target_block), F.lit(MAX_SALTS)).cast("int").alias("__s_cnt"),
+            F.least(F.ceil(F.col("__nb") / target_block), F.lit(MAX_SALTS)).cast("int").alias("__t_cnt"),
+        )
+    )
+
+    a_side_cols = [c for c in blocked_a.columns if c != "block_key"]
+    b_side_cols = [c for c in blocked_b.columns if c != "block_key"]
+    a = (
+        blocked_a.join(F.broadcast(plan), "block_key", "left")
+        .withColumn("__s_cnt", F.coalesce(F.col("__s_cnt"), F.lit(1)))
+        .withColumn("__t_cnt", F.coalesce(F.col("__t_cnt"), F.lit(1)))
+        .withColumn(
+            "__i", F.pmod(F.xxhash64(F.col(id_col)), F.col("__s_cnt")).cast("int")
+        )
+        .withColumn("__j", F.explode(F.sequence(F.lit(0), F.col("__t_cnt") - F.lit(1))))
+        .select(
+            F.col("block_key").alias("__bk_a"),
+            "__i",
+            F.col("__j").cast("int").alias("__j"),
+            *[F.col(c).alias(f"a_{c}") for c in a_side_cols],
+        )
+    )
+    b = (
+        blocked_b.join(F.broadcast(plan), "block_key", "left")
+        .withColumn("__s_cnt", F.coalesce(F.col("__s_cnt"), F.lit(1)))
+        .withColumn("__t_cnt", F.coalesce(F.col("__t_cnt"), F.lit(1)))
+        .withColumn(
+            "__j", F.pmod(F.xxhash64(F.col(id_col)), F.col("__t_cnt")).cast("int")
+        )
+        .withColumn("__i", F.explode(F.sequence(F.lit(0), F.col("__s_cnt") - F.lit(1))))
+        .select(
+            F.col("block_key").alias("__bk_b"),
+            F.col("__i").cast("int").alias("__i_b"),
+            F.col("__j").alias("__j_b"),
+            *[F.col(c).alias(f"b_{c}") for c in b_side_cols],
+        )
+    )
+    return a, b
+
+
 def candidate_pairs_two(
     blocked_a: DataFrame,
     blocked_b: DataFrame,
@@ -233,23 +297,6 @@ def candidate_pairs_two(
 
     Inputs: (block_key, id, attrs...) per side; outputs a_*/b_* columns.
     """
-    prof = (
-        blocked_a.groupBy("block_key").agg(F.count("*").alias("__na"))
-        .join(
-            blocked_b.groupBy("block_key").agg(F.count("*").alias("__nb")),
-            "block_key",
-        )
-        .withColumn("__n", F.col("__na") + F.col("__nb"))
-    )
-    plan = (
-        prof.filter(F.col("__n") > skew_threshold)
-        .select(
-            "block_key",
-            F.least(F.ceil(F.col("__na") / target_block), F.lit(MAX_SALTS)).cast("int").alias("__s_cnt"),
-            F.least(F.ceil(F.col("__nb") / target_block), F.lit(MAX_SALTS)).cast("int").alias("__t_cnt"),
-        )
-    )
-
     a_cols = [c for c in blocked_a.columns if c != "block_key"]
     b_cols = [c for c in blocked_b.columns if c != "block_key"]
     a_others = [c for c in a_cols if c != id_col]
@@ -263,40 +310,12 @@ def candidate_pairs_two(
     if slim:
         blocked_a_j = blocked_a.select("block_key", id_col)
         blocked_b_j = blocked_b.select("block_key", id_col)
-        a_side_cols, b_side_cols = [id_col], [id_col]
     else:
         blocked_a_j, blocked_b_j = blocked_a, blocked_b
-        a_side_cols, b_side_cols = a_cols, b_cols
 
-    a = (
-        blocked_a_j.join(F.broadcast(plan), "block_key", "left")
-        .withColumn("__s_cnt", F.coalesce(F.col("__s_cnt"), F.lit(1)))
-        .withColumn("__t_cnt", F.coalesce(F.col("__t_cnt"), F.lit(1)))
-        .withColumn(
-            "__i", F.pmod(F.xxhash64(F.col(id_col)), F.col("__s_cnt")).cast("int")
-        )
-        .withColumn("__j", F.explode(F.sequence(F.lit(0), F.col("__t_cnt") - F.lit(1))))
-        .select(
-            F.col("block_key").alias("__bk_a"),
-            "__i",
-            F.col("__j").cast("int").alias("__j"),
-            *[F.col(c).alias(f"a_{c}") for c in a_side_cols],
-        )
-    )
-    b = (
-        blocked_b_j.join(F.broadcast(plan), "block_key", "left")
-        .withColumn("__s_cnt", F.coalesce(F.col("__s_cnt"), F.lit(1)))
-        .withColumn("__t_cnt", F.coalesce(F.col("__t_cnt"), F.lit(1)))
-        .withColumn(
-            "__j", F.pmod(F.xxhash64(F.col(id_col)), F.col("__t_cnt")).cast("int")
-        )
-        .withColumn("__i", F.explode(F.sequence(F.lit(0), F.col("__s_cnt") - F.lit(1))))
-        .select(
-            F.col("block_key").alias("__bk_b"),
-            F.col("__i").cast("int").alias("__i_b"),
-            F.col("__j").alias("__j_b"),
-            *[F.col(c).alias(f"b_{c}") for c in b_side_cols],
-        )
+    a, b = _two_table_grid(
+        blocked_a_j, blocked_b_j, id_col=id_col,
+        skew_threshold=skew_threshold, target_block=target_block,
     )
     pairs = a.join(
         b,

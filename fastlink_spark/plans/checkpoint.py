@@ -35,6 +35,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def atomic_write_text(path: str, text: str) -> None:
+    """THE commit protocol for every small state file (stage manifests,
+    the EM fit, the incremental MANIFEST.json): tmp-write + fsync +
+    atomic rename + directory fsync. A reader sees the old file or the
+    new one, never a torn write."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 def _fp_aggs(df: DataFrame) -> list:
     """THE fingerprint aggregate recipe — one definition shared by the
     standalone scan (content_fingerprint) and the piggybacked
@@ -159,8 +177,13 @@ class CheckpointManager:
             f"|fp={upstream_fp}|extra={extra_token}"
         )
         if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                man = json.load(f)
+            try:
+                with open(manifest_path) as f:
+                    man = json.load(f)
+            except ValueError:
+                # torn manifest (a crash mid-write under a non-atomic
+                # writer): unreadable lineage is stale lineage
+                man = {}
             if man.get("token") == token and os.path.exists(
                 os.path.join(data_path, "_SUCCESS")
             ):
@@ -203,8 +226,7 @@ class CheckpointManager:
             )
             man["partitions"] = {int(r["pid"]): int(r["rows"]) for r in per_part}
         man["wall_sec"] = round(time.time() - t0, 3)
-        with open(manifest_path, "w") as f:
-            json.dump(man, f, indent=1)
+        atomic_write_text(manifest_path, json.dumps(man, indent=1))
         self.metrics[name] = {"rows": rows, "resumed": False, "wall_sec": man["wall_sec"]}
         self.fingerprints[name] = fingerprint
         return out
@@ -251,8 +273,7 @@ class CheckpointManager:
         if self.root is None:
             return
         os.makedirs(self.root, exist_ok=True)
-        with open(os.path.join(self.root, f"{name}.json"), "w") as f:
-            f.write(payload)
+        atomic_write_text(os.path.join(self.root, f"{name}.json"), payload)
 
     def get_json(self, name: str) -> str | None:
         if self.root is None:

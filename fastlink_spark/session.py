@@ -29,7 +29,8 @@ def get_spark(
       salting (operators/pairs.py), AQE is the safety net (SURVEY.md X5).
     - shuffle.partitions defaults to DEFAULT_SHUFFLE_PARTITIONS (32)
       unless overridden; on a real cluster set it to 2-3x total
-      executor cores via --conf (bench.py passes 2x cores explicitly).
+      executor cores via --conf (perfbench/run.py passes 2x cores
+      explicitly).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:

@@ -80,6 +80,7 @@ from pyspark.sql import functions as F
 from ..em import EMResult, apply_em
 from ..operators import gammas
 from ..operators.pairs import candidate_pairs_two
+from ..plans.checkpoint import atomic_write_text
 from ..plans.materialize import ScopedMaterializer
 from ..plans.pipeline import (
     LinkageConfig,
@@ -213,17 +214,7 @@ class IncrementalLinker:
         fsync. Everything a batch changes (segments, seq, batch_id,
         relabel map) becomes visible in this single rename or not at
         all."""
-        tmp = self._path("MANIFEST.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._path("MANIFEST.json"))
-        dfd = os.open(self.state_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        atomic_write_text(self._path("MANIFEST.json"), json.dumps(manifest))
         # legacy side files are stale the moment a real manifest exists
         for leftover in ("meta.json", "relabels.json"):
             p = self._path(leftover)

@@ -65,6 +65,50 @@ def test_resume_byte_identical(spark, tmp_path):
     assert c1 == c3
 
 
+def test_truncated_stage_manifest_rebuilds(spark, tmp_path):
+    """Crash injection: a half-written stage manifest is stale lineage.
+    Resume rebuilds that stage (it used to raise JSONDecodeError) and
+    the clusters come out identical."""
+    import json
+
+    fx = generate_pages(n_base=40)
+    pages = spark.createDataFrame(fx.pages)
+    ck = str(tmp_path / "ckpt")
+    cfg = LinkageConfig(checkpoint_dir=ck)
+    r1 = link_dedupe(spark, pages, cfg)
+    c1 = {r["url"]: r["cluster_id"] for r in r1.entities.collect()}
+    man = os.path.join(ck, "matched_pairs.manifest.json")
+    with open(man, "rb") as f:
+        body = f.read()
+    with open(man, "wb") as f:
+        f.write(body[: len(body) // 2])
+    r2 = link_dedupe(spark, pages, cfg)
+    assert r2.metrics["candidate_pairs"]["resumed"] is True
+    assert r2.metrics["matched_pairs"]["resumed"] is False
+    with open(man) as f:
+        assert json.load(f)["stage"] == "matched_pairs"
+    c2 = {r["url"]: r["cluster_id"] for r in r2.entities.collect()}
+    assert c1 == c2
+
+
+def test_put_json_crash_before_rename_keeps_old_payload(spark, tmp_path, monkeypatch):
+    """put_json commits through the shared atomic protocol: a crash
+    before the rename leaves the previous payload readable."""
+    from fastlink_spark.plans.checkpoint import CheckpointManager
+
+    ckpt = CheckpointManager(spark, str(tmp_path / "ck"))
+    ckpt.put_json("em_x", '{"v": 1}')
+
+    def crash(src, dst):
+        raise OSError("injected crash before rename")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="injected"):
+        ckpt.put_json("em_x", '{"v": 2}')
+    monkeypatch.undo()
+    assert ckpt.get_json("em_x") == '{"v": 1}'
+
+
 def test_config_change_invalidates_checkpoint(spark, tmp_path):
     fx = generate_pages(n_base=40)
     pages = spark.createDataFrame(fx.pages)

@@ -94,6 +94,24 @@ def test_lsap_disconnected_components_and_fallback(spark):
     assert len({r.a_rec_id for r in fb}) == len(fb)
 
 
+def test_lsap_components_keep_sides_apart(spark):
+    """a-side and b-side ids are separate namespaces, also for the CC
+    that splits the problem into blocks: a chain whose b-side ids reach
+    the block's a-side id 10 must not glue the two into one component
+    (that component would exceed max_lsap_block and be solved greedily,
+    total 0.9, instead of exactly, total 1.6)."""
+    from fastlink_spark.operators.dedupe_matches import dedupe_matches_lsap
+
+    block = [(10, 900001, 0.9), (10, 900002, 0.8), (900003, 900001, 0.8)]
+    chain = [(i, i + 1, 0.5) for i in range(10)]
+    pairs = spark.createDataFrame(block + chain, "a_rec_id long, b_rec_id long, zeta double")
+    out = {
+        (r.a_rec_id, r.b_rec_id)
+        for r in dedupe_matches_lsap(pairs, max_lsap_block=5).collect()
+    }
+    assert out == {(10, 900002), (900003, 900001)} | {(a, b) for a, b, _ in chain}
+
+
 # ---------------------------------------------------- Damerau-Levenshtein
 
 def test_osa_distance_transpositions():

@@ -837,33 +837,6 @@ def test_pairwise_f1_counts_lost_records(spark):
     assert (m["tp"], m["fp"], m["fn"], m["tn"]) == (1, 0, 1, 1)
 
 
-def test_streaming_dedup_string_ids(spark, tmp_path):
-    """streaming_exact_dedup with wide hex STRING ids — output/state
-    schemas must follow the input types (LongType was hardcoded)."""
-    from fastlink_spark.streaming.windowed import streaming_exact_dedup
-
-    src = tmp_path / "in"
-    spark.createDataFrame(
-        [("aa" * 16, 7), ("bb" * 16, 7), ("cc" * 16, 9)],
-        "doc_id string, text_hash long",
-    ).write.parquet(str(src))
-    stream = spark.readStream.schema("doc_id string, text_hash long").parquet(str(src))
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_str_ids")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r["doc_id"], r["text_hash"])
-        for r in spark.sql("select * from dedup_str_ids").collect()
-    }
-    assert rows == {("aa" * 16, 7), ("cc" * 16, 9)}
-
-
 def test_incremental_wide_rec_id_compact(spark, tmp_path):
     """compact() under wide_rec_id: batch CC over 128-bit hex STRING
     keys, entities rewritten with string labels, relabel map emptied."""

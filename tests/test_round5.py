@@ -569,25 +569,6 @@ def test_ivf_refine_survives_null_low_id_seeds(spark):
     assert {r["query_id"] for r in out} == {16, 17, 18, 19}
 
 
-def test_streaming_dedup_null_ids_survive(spark, tmp_path):
-    """A hash group whose batch rows all carry null ids made pandas
-    .min() return NaN and int(NaN) killed the whole streaming query
-    (r5 review). Null ids are skipped; groups with a real id emit it."""
-    from fastlink_spark.streaming.windowed import run_streaming_dedup
-    from tests.test_streaming_windowed import SCHEMA_DOCS, _write_chunk
-
-    indir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-    _write_chunk(
-        spark, [(None, 100), (5, 100), (None, 400), (9, 200)], SCHEMA_DOCS, indir, "b1"
-    )
-    q = run_streaming_dedup(spark, indir + "/*", ck, out, SCHEMA_DOCS)
-    q.awaitTermination(120)
-    got = {(r["doc_id"], r["text_hash"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(5, 100), (9, 200)}  # all-null group 400 emits nothing
-
-
 # --------------------------- review pass 5 fixes (assignment/EM-log/media)
 
 

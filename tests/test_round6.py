@@ -1,6 +1,6 @@
 """Round-6 tests: the five r5 ADVICE fixes, then the r6 verdict items
-(entities-state pruning, auto-compaction, bench self-healing — added
-further down as they land)."""
+(entities-state pruning, auto-compaction — added further down as they
+land)."""
 
 from __future__ import annotations
 
@@ -307,92 +307,6 @@ def test_should_compact_thresholds(spark, tmp_path):
     # default: never
     lk2 = IncrementalLinker(spark, str(tmp_path / "s2"), em, LinkageConfig())
     assert not lk2.should_compact({"records": ["a"] * 99, "entities": [], "relabels": {}})
-
-
-# --------------------------- verdict item 2: bench retry-until-clean
-
-
-def _fake_bench_out(contended, steal, foreign, value):
-    return {
-        "metric": "candidate_pairs_scored_per_sec",
-        "value": value,
-        "sentinel": {
-            "contended": contended,
-            "steal_pct": steal,
-            "foreign_busy_pct": foreign,
-        },
-    }
-
-
-def test_bench_main_emits_clean_attempt(monkeypatch, capsys):
-    """r7 update (verdict r6 item 6): the loop now collects up to
-    BENCH_TARGET_CLEAN clean attempts and emits the MEDIAN one; with
-    target 1 it degenerates to the r6 first-clean behavior tested
-    here."""
-    import json
-
-    import bench
-
-    outs = iter(
-        [
-            _fake_bench_out(True, 5.0, 1.0, 100.0),
-            _fake_bench_out(False, 0.1, 0.2, 900.0),
-        ]
-    )
-    # multi-attempt runs go through _attempt (fresh subprocess per
-    # attempt — r6 review: an in-process retry reads a warm JVM)
-    monkeypatch.setattr(bench, "_attempt", lambda: next(outs))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    monkeypatch.setenv("BENCH_MAX_ATTEMPTS", "3")
-    monkeypatch.setenv("BENCH_TARGET_CLEAN", "1")
-    bench.main()
-    line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
-    assert got["value"] == 900.0
-    assert got["sentinel"]["contended"] is False
-    assert got["clean_attempts"] == 1
-    assert len(got["attempts"]) == 2
-    assert "all_attempts_contended" not in got
-
-
-def test_bench_main_all_contended_marks_and_picks_least(monkeypatch, capsys):
-    import json
-
-    import bench
-
-    outs = iter(
-        [
-            _fake_bench_out(True, 5.0, 4.0, 100.0),
-            _fake_bench_out(True, 2.5, 0.5, 300.0),  # least contended
-            _fake_bench_out(True, 9.0, 9.0, 200.0),
-        ]
-    )
-    monkeypatch.setattr(bench, "_attempt", lambda: next(outs))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    monkeypatch.setenv("BENCH_MAX_ATTEMPTS", "3")
-    bench.main()
-    line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
-    assert got["value"] == 300.0
-    assert got["all_attempts_contended"] is True
-    assert len(got["attempts"]) == 3
-
-
-def test_bench_single_attempt_env(monkeypatch, capsys):
-    """BENCH/run.py pins BENCH_MAX_ATTEMPTS=1 — a contended single
-    attempt is emitted as-is, marked, with one sentinel recorded."""
-    import json
-
-    import bench
-
-    monkeypatch.setattr(
-        bench, "run_once", lambda: _fake_bench_out(True, 5.0, 4.0, 100.0)
-    )
-    monkeypatch.setenv("BENCH_MAX_ATTEMPTS", "1")
-    bench.main()
-    line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
-    assert got["all_attempts_contended"] is True and len(got["attempts"]) == 1
 
 
 _ = np  # imported for later round-6 sections

@@ -135,77 +135,6 @@ def test_skew_stress_one_hot_block(spark):
     assert hot * (hot - 1) // 2 > 15 * max_cell
 
 
-# --------------------------- verdict item 6: bench median-of-clean
-
-
-def _fake_out(contended, steal, foreign, value, total_sec=0.0):
-    return {
-        "metric": "candidate_pairs_scored_per_sec",
-        "value": value,
-        "total_sec": total_sec,
-        "sentinel": {
-            "contended": contended,
-            "steal_pct": steal,
-            "foreign_busy_pct": foreign,
-        },
-    }
-
-
-def test_bench_main_median_of_clean(monkeypatch, capsys):
-    """r7 verdict item 6: the driver snapshot is the MEDIAN of
-    BENCH_TARGET_CLEAN clean attempts (median_low — a real attempt, so
-    value/queries/calibration stay mutually consistent); contended
-    attempts don't count toward the target but ride in `attempts`."""
-    import json
-
-    import bench
-
-    outs = iter(
-        [
-            _fake_out(False, 0.1, 0.2, 900.0),
-            _fake_out(True, 6.0, 1.0, 100.0),
-            _fake_out(False, 0.2, 0.1, 700.0),
-            _fake_out(False, 0.1, 0.1, 800.0),
-        ]
-    )
-    monkeypatch.setattr(bench, "_attempt", lambda: next(outs))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    monkeypatch.setenv("BENCH_MAX_ATTEMPTS", "5")
-    monkeypatch.setenv("BENCH_TARGET_CLEAN", "3")
-    bench.main()
-    line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
-    assert got["value"] == 800.0  # median of {900, 700, 800}
-    assert got["clean_attempts"] == 3
-    assert len(got["attempts"]) == 4
-
-
-def test_bench_main_time_budget_stops_early(monkeypatch, capsys):
-    """The attempt loop respects BENCH_TIME_BUDGET_SEC: when the next
-    attempt would overshoot, it stops and emits the median of the
-    clean attempts collected so far."""
-    import json
-
-    import bench
-
-    outs = iter(
-        [
-            _fake_out(False, 0.1, 0.2, 500.0, total_sec=10_000.0),
-            _fake_out(False, 0.1, 0.2, 999.0),
-        ]
-    )
-    monkeypatch.setattr(bench, "_attempt", lambda: next(outs))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    monkeypatch.setenv("BENCH_MAX_ATTEMPTS", "5")
-    monkeypatch.setenv("BENCH_TARGET_CLEAN", "3")
-    monkeypatch.setenv("BENCH_TIME_BUDGET_SEC", "1500")
-    bench.main()
-    line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
-    got = json.loads(line)
-    assert got["value"] == 500.0 and got["clean_attempts"] == 1
-    assert len(got["attempts"]) == 1
-
-
 # --------------------------- ADVICE 2: PPM ambiguous CRLF + trailing ws
 
 

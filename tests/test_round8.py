@@ -202,15 +202,11 @@ def test_two_table_skew_stress_one_hot_block(spark):
     """Mirror of r7's self-join one-hot-block stress for
     candidate_pairs_two: ONE block key owns 30% of BOTH sides. The
     S x T grid must (a) emit exactly sum(na*nb) pairs and (b) bound
-    every reduce cell — recomputed from the plan's own salt assignment
-    (A: i = pmod(xxhash64(id), S), B: j = pmod(xxhash64(id), T)) — to
-    2x target^2 comparisons, vs the na*nb = 7.2M a one-sided or
-    unsalted plan would put in a single task."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from fastlink_spark.operators.pairs import candidate_pairs_two
+    every reduce cell — read off the grid's own cell keys, not a copy
+    of its salt formula — to 2x target^2 comparisons, vs the
+    na*nb = 7.2M a one-sided or unsalted plan would put in a single
+    task."""
+    from fastlink_spark.operators.pairs import _two_table_grid, candidate_pairs_two
 
     n_a, n_b, hot_a, hot_b, target = 10_000, 8_000, 3_000, 2_400, 500
     dfa = spark.range(n_a).select(
@@ -232,23 +228,25 @@ def test_two_table_skew_stress_one_hot_block(spark):
     nb = {r["block_key"]: r["n"] for r in dfb.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
     expected = sum(n * nb[k] for k, n in na.items() if k in nb)
     assert pairs.count() == expected
-    # per-cell bound from the plan's own S x T salt assignment
-    s_cnt = math.ceil(hot_a / target)
-    t_cnt = math.ceil(hot_b / target)
-    per_i = {
-        r["s"]: r["n"]
-        for r in dfa.where(F.col("block_key") == "hot")
-        .select(F.pmod(F.xxhash64("rec_id"), F.lit(s_cnt)).alias("s"))
-        .groupBy("s").agg(F.count("*").alias("n")).collect()
-    }
-    per_j = {
-        r["s"]: r["n"]
-        for r in dfb.where(F.col("block_key") == "hot")
-        .select(F.pmod(F.xxhash64("rec_id"), F.lit(t_cnt)).alias("s"))
-        .groupBy("s").agg(F.count("*").alias("n")).collect()
-    }
-    assert sum(per_i.values()) == hot_a and sum(per_j.values()) == hot_b
-    max_cell = max(per_i.values()) * max(per_j.values())
+    # per-cell load from the cell keys the grid actually assigned
+    a, b = _two_table_grid(
+        dfa, dfb, id_col="rec_id", skew_threshold=1_000, target_block=target
+    )
+    cell_a = a.groupBy("__bk_a", "__i", "__j").agg(F.count("*").alias("na"))
+    cell_b = b.groupBy(
+        F.col("__bk_b").alias("__bk_a"),
+        F.col("__i_b").alias("__i"),
+        F.col("__j_b").alias("__j"),
+    ).agg(F.count("*").alias("nb"))
+    loads = (
+        cell_a.join(cell_b, ["__bk_a", "__i", "__j"])
+        .select("__bk_a", (F.col("na") * F.col("nb")).alias("load"))
+        .collect()
+    )
+    assert sum(r["load"] for r in loads) == expected
+    hot_cells = sum(r["__bk_a"] == "hot" for r in loads)
+    assert hot_cells > 1, "the hot block must be split over several cells"
+    max_cell = max(r["load"] for r in loads)
     assert max_cell <= 2 * target * target, f"cell load {max_cell} breaks the bound"
     # and the single-task disaster the grid prevents, for the record
     assert hot_a * hot_b > 10 * 2 * target * target
