@@ -230,13 +230,26 @@ def dedupe_matches(
         return dedupe_matches_lsap(
             pairs, id_a=id_a, id_b=id_b, score=score, materializer=materializer
         )
+    from ..plans.checkpoint import observation
+
     mat = resolve(materializer)
-    remaining = mat(_canonical_pairs(pairs, id_a, id_b, score), "greedy_remaining")
+
+    def cut(df: DataFrame, name: str) -> tuple[DataFrame, int]:
+        """Materialize ``df``; its row count rides the cut's own write
+        as an observation (an isEmpty() probe after the cut would be
+        one more Spark job per cut)."""
+        observed, rows = observation(df, F.count(F.lit(1)).alias("rows"))
+        out = mat(observed, name)
+        return out, rows(fallback_df=out)["rows"]
+
+    remaining, n_remaining = cut(
+        _canonical_pairs(pairs, id_a, id_b, score), "greedy_remaining"
+    )
     accepted: DataFrame | None = None
 
     exhausted = True
     for _ in range(max_rounds):
-        if remaining.isEmpty():
+        if n_remaining == 0:
             exhausted = False
             break
         wa = Window.partitionBy(id_a).orderBy(F.desc(score), F.asc(id_b))
@@ -244,23 +257,29 @@ def dedupe_matches(
         ranked = remaining.withColumn("ra", F.row_number().over(wa)).withColumn(
             "rb", F.row_number().over(wb)
         )
-        mutual = ranked.where((F.col("ra") == 1) & (F.col("rb") == 1)).select(
-            id_a, id_b, score
+        mutual, n_mutual = cut(
+            ranked.where((F.col("ra") == 1) & (F.col("rb") == 1)).select(
+                id_a, id_b, score
+            ),
+            "greedy_mutual",
         )
-        mutual = mat(mutual, "greedy_mutual")
-        if mutual.isEmpty():
+        if n_mutual == 0:
             exhausted = False
             break
         # Roll the accumulated union through a retained cut every round:
         # `accepted` only ever references the NEWEST 'greedy_accepted'
-        # cut, so a parquet materializer's retention (keep newest
-        # keep_per_name cuts per name) can never delete data still
-        # reachable from it. Unioning raw mutual cuts instead would
-        # keep round-0's 'greedy_mutual' parquet live while round-2's
-        # write deletes it (materialize.py retention contract).
-        accepted = mat(
-            mutual if accepted is None else accepted.unionByName(mutual),
-            "greedy_accepted",
+        # cut, or after the first round the first 'greedy_mutual' cut
+        # itself (already a cut: no copy), so a parquet materializer's
+        # retention (keep newest keep_per_name >= 2 cuts per name) can
+        # never delete data still reachable from it — round 2 re-cuts
+        # `accepted` before round 3's mutual cut deletes round 1's.
+        # Unioning raw mutual cuts instead would keep round-0's
+        # 'greedy_mutual' parquet live while round-2's write deletes it
+        # (materialize.py retention contract).
+        accepted = (
+            mutual
+            if accepted is None
+            else mat(accepted.unionByName(mutual), "greedy_accepted")
         )
         if shared_id_space:
             used_a = used_b = (
@@ -271,14 +290,14 @@ def dedupe_matches(
         else:
             used_a = mutual.select(F.col(id_a).alias("uid")).distinct()
             used_b = mutual.select(F.col(id_b).alias("uid")).distinct()
-        remaining = mat(
+        remaining, n_remaining = cut(
             remaining.join(used_a.withColumnRenamed("uid", id_a), id_a, "left_anti")
             .join(used_b.withColumnRenamed("uid", id_b), id_b, "left_anti")
             .select(id_a, id_b, score),
             "greedy_remaining",
         )
 
-    if exhausted and not remaining.isEmpty():
+    if exhausted and n_remaining > 0:
         # Dependency chains longer than max_rounds accept one pair per
         # round; dropping the viable remainder would silently diverge
         # from sequential greedy. Finish the (by now small) residue

@@ -8,7 +8,7 @@ writes the identical layout to a Parquet directory per stage:
     <root>/<stage>/                 parquet data (the checkpoint)
     <root>/<stage>.manifest.json    lineage: stage name, input stages,
                                     config hash, row count, schema,
-                                    per-partition row counters
+                                    per-part-file row counters
 
 Resume: if a stage directory + manifest exist and the manifest's
 resume token matches, the stage is READ instead of recomputed. The
@@ -20,6 +20,14 @@ stage downstream of it automatically; the first stage takes an
 ``extra_token`` from the caller (an Iceberg snapshot id in production;
 the input plan's semanticHash in this sandbox) to tie it to the raw
 input.
+
+A stage costs one Spark job: its parquet write. Everything else the
+manifest records is already known on the driver once the write
+returns: the row count and fingerprint ride the write as a query
+observation, the read-back takes the schema of the frame just written
+(no parquet schema-inference job), and the per-part-file row counters
+come from the part files' parquet footers, read on the driver (the
+root is a local path).
 On a cluster the same class pointed at an Iceberg catalog would use
 ``df.writeTo(tbl).createOrReplace()``; the interface is the only thing
 the pipeline sees.
@@ -33,6 +41,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def atomic_write_text(path: str, text: str) -> None:
@@ -84,37 +93,70 @@ def content_fingerprint(df: DataFrame) -> tuple[int, str]:
     return _fp_format(df.agg(*_fp_aggs(df)).collect()[0])
 
 
-def fingerprint_observation(df: DataFrame):
-    """(observed_df, resolver): attach the content-fingerprint
-    aggregates as a query Observation so the NEXT action over the
-    returned DataFrame (a checkpoint parquet write, a localCheckpoint
-    cut) computes them in the SAME pass — the standalone
-    content_fingerprint scan re-read every byte of a stage that the
-    write had just streamed (r8 optimization, guide §1.2 "don't compute
-    things twice": one full-column scan per checkpoint stage and per CC
-    round removed). resolver() returns (rows, fingerprint) identical to
-    content_fingerprint by shared recipe (_fp_aggs/_fp_format). If no
-    action has produced the metrics within the timeout (an injected
-    materializer that defers its action), resolver falls back to the
-    standalone scan — correctness never depends on the observation
-    firing."""
-    import threading
+def observation(df: DataFrame, *aggs):
+    """(observed_df, resolver): attach aggregate expressions to ``df``
+    as a query Observation, so the NEXT action over the returned frame
+    (a parquet cut, a localCheckpoint) computes them in the SAME pass.
+    resolver() returns the aggregates as a mapping. When no action has
+    run the observed plan (an injected materializer that defers its
+    action), resolver computes the same aggregates over
+    ``fallback_df`` (default: ``df``) instead — correctness never
+    depends on the observation firing.
 
+    The resolver never sleeps on a clock: an action that ran the
+    observed plan has posted its completion event before it returned,
+    so draining Spark's listener bus (bounded by ``timeout`` seconds)
+    is enough to tell "fired" from "never ran"; with nothing queued the
+    drain returns at once."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
     obs = Observation()
-    observed = df.observe(obs, *_fp_aggs(df))
+    observed = df.observe(obs, *aggs)
 
     def resolver(fallback_df: DataFrame | None = None, timeout: float = 60.0):
-        got: dict = {}
-        t = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
-        t.start()
-        t.join(timeout=timeout)
-        if t.is_alive():  # action never fired (or is still running)
-            return content_fingerprint(fallback_df if fallback_df is not None else df)
-        return _fp_format(got)
+        fired = obs._jo.future().isCompleted
+        if not fired():
+            try:
+                df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(
+                    int(timeout * 1000)
+                )
+            except Py4JJavaError:  # TimeoutException: bus still busy
+                pass
+        if fired():
+            return obs.get
+        src = fallback_df if fallback_df is not None else df
+        return src.agg(*aggs).collect()[0].asDict()
 
     return observed, resolver
+
+
+def fingerprint_observation(df: DataFrame):
+    """(observed_df, resolver): the content fingerprint as an
+    ``observation`` — the standalone content_fingerprint scan re-read
+    every byte of a stage that the write had just streamed (r8
+    optimization, guide §1.2 "don't compute things twice": one
+    full-column scan per checkpoint stage and per CC round removed).
+    resolver() returns (rows, fingerprint) identical to
+    content_fingerprint by shared recipe (_fp_aggs/_fp_format)."""
+    observed, resolve = observation(df, *_fp_aggs(df))
+
+    def resolver(fallback_df: DataFrame | None = None, timeout: float = 60.0):
+        return _fp_format(resolve(fallback_df, timeout))
+
+    return observed, resolver
+
+
+def _part_file_rows(data_path: str) -> dict[int, int]:
+    """Row count of every part file of a parquet directory, keyed by its
+    index in name order, from the files' footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(f for f in os.listdir(data_path) if not f.startswith(("_", ".")))
+    return {
+        i: pq.read_metadata(os.path.join(data_path, f)).num_rows
+        for i, f in enumerate(parts)
+    }
 
 
 class CheckpointManager:
@@ -150,7 +192,6 @@ class CheckpointManager:
         build: Callable[[], DataFrame],
         *,
         inputs: tuple[str, ...] = (),
-        partition_counters: bool = True,
         extra_token: str = "",
     ) -> DataFrame:
         """Build-or-resume one stage; records lineage + counters +
@@ -189,10 +230,12 @@ class CheckpointManager:
             ):
                 self.metrics[name] = {"rows": man["rows"], "resumed": True}
                 self.fingerprints[name] = man.get("fingerprint", "")
-                return self.spark.read.parquet(data_path)
+                return self.spark.read.schema(
+                    StructType.fromJson(man["schema"])
+                ).parquet(data_path)
             # stale manifest: REMOVE it before the data overwrite. The
-            # rebuild window (parquet write + two aggregation jobs
-            # before the new manifest lands) is wide; a crash inside it
+            # rebuild window (parquet write + footer reads before the
+            # new manifest lands) is wide; a crash inside it
             # must leave no manifest at all — keeping the old one lets
             # a later run under the OLD config token resume its stale
             # lineage against the NEW data dir (r5 review finding).
@@ -208,7 +251,10 @@ class CheckpointManager:
         # the write streamed out, so the manifest content is unchanged.
         observed, fp_resolve = fingerprint_observation(df)
         observed.write.mode("overwrite").parquet(data_path)
-        out = self.spark.read.parquet(data_path)
+        # file reads make every field nullable, so the written frame's
+        # schema IS the schema inference would find — passing it skips
+        # the inference job
+        out = self.spark.read.schema(df.schema).parquet(data_path)
         rows, fingerprint = fp_resolve(fallback_df=out)
         man: dict = {
             "stage": name,
@@ -217,14 +263,8 @@ class CheckpointManager:
             "rows": rows,
             "fingerprint": fingerprint,
             "schema": out.schema.jsonValue(),
+            "partitions": _part_file_rows(data_path),
         }
-        if partition_counters:
-            per_part = (
-                out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            )
-            man["partitions"] = {int(r["pid"]): int(r["rows"]) for r in per_part}
         man["wall_sec"] = round(time.time() - t0, 3)
         atomic_write_text(manifest_path, json.dumps(man, indent=1))
         self.metrics[name] = {"rows": rows, "resumed": False, "wall_sec": man["wall_sec"]}

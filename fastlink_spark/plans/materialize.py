@@ -100,7 +100,9 @@ def parquet_materializer(root: str, keep_per_name: int = 2) -> Materializer:
         counts[base] = idx + 1
         path = join(root, f"{base}_{idx:03d}")
         df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
+        # the written schema read back (file reads make it nullable,
+        # exactly what inference would find) — no inference job
+        out = df.sparkSession.read.schema(df.schema).parquet(path)
         old = idx - keep_per_name
         if old >= 0:
             _rm_path(df.sparkSession, join(root, f"{base}_{old:03d}"))

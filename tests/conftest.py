@@ -2,10 +2,10 @@ import os
 
 import pytest
 
-# get_spark's 24g driver-memory default lets the local-mode JVM heap
-# outgrow a small host over a full suite run (seen: a 14 GB JVM killed
-# by the kernel's OOM killer mid-suite on a 15 GB, 4-core host). The
-# tests' data is small; cap the heap unless the caller chose a size.
+# get_spark's driver-memory default is half of physical RAM, up to 24g
+# (a 24g heap on a 15 GB, 4-core host once grew until the kernel's OOM
+# killer ended it mid-suite). The tests' data is small; cap the heap at
+# 8g unless the caller chose a size.
 os.environ.setdefault("FASTLINK_DRIVER_MEM", "8g")
 
 

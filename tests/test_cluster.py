@@ -60,3 +60,87 @@ def test_adversarial_long_chain(spark):
 
 def test_duplicate_and_reversed_edges(spark):
     _check(spark, [(2, 1), (1, 2), (2, 3), (3, 2), (5, 5)], [1, 2, 3, 5, 9])
+
+
+def _labels(spark, edges, nodes=None, **kw):
+    e = spark.createDataFrame(edges, "u long, v long")
+    nd = None if nodes is None else spark.createDataFrame([(n,) for n in nodes], "id long")
+    return {r["id"]: r["cluster_id"] for r in connected_components(e, nd, **kw).collect()}
+
+
+def _star_forest(rng, ids, n_stars):
+    """Leaf -> center edges over disjoint stars whose center is a random
+    member (not the component minimum): already a star forest."""
+    edges = []
+    for group in np.array_split(rng.permutation(ids), n_stars):
+        center, leaves = int(group[0]), [int(x) for x in group[1:]]
+        edges += [(leaf, center) for leaf in leaves]
+    return edges
+
+
+def test_graph_shapes_match_union_find(spark):
+    """One graph per seed with disjoint parts of every shape: long chains
+    with shuffled ids, stars with random centers, a dense random part,
+    duplicate and reversed edges, and self-loops (one node has only a
+    self-loop). Labels equal a driver-side union-find, with a node
+    universe (seed 5) and without one (seed 11)."""
+    for seed in (5, 11):
+        rng = np.random.default_rng(seed)
+        ids = iter(rng.permutation(100_000).tolist())
+
+        def take(k):
+            return [next(ids) for _ in range(k)]
+
+        edges = []
+        for length in (90, 33):
+            c = take(length)
+            edges += list(zip(c, c[1:]))
+        edges += _star_forest(rng, take(60), 4)
+        star = take(12)
+        edges += [(star[0], x) for x in star[1:]]
+        dense = take(40)
+        edges += [
+            (dense[a], dense[b]) for a, b in rng.integers(0, 40, (60, 2)) if a != b
+        ]
+        d = take(6)
+        edges += [
+            (d[0], d[1]), (d[1], d[0]), (d[0], d[1]),
+            (d[2], d[3]), (d[3], d[2]), (d[3], d[3]),
+            (d[4], d[4]),
+        ]
+        in_edges = {x for e in edges for x in e}
+        nodes = sorted(in_edges | set(take(3)))
+        exp = _uf_oracle(edges, nodes)
+        if seed == 5:
+            assert _labels(spark, edges, nodes) == exp
+        else:
+            assert _labels(spark, edges) == {n: exp[n] for n in in_edges}
+
+
+def test_star_forest_input_converges_in_one_round(spark):
+    """An input that is already a star forest (centers are not the
+    component minimum, so the first round re-roots every star) stops
+    after that first round: its cut is a star forest, a fixpoint, and no
+    second round is run to confirm it."""
+    rng = np.random.default_rng(3)
+    edges = _star_forest(rng, list(range(500, 620)), 9)
+    rounds = []
+    got = _labels(spark, edges, on_round=lambda it, e: rounds.append(it))
+    assert rounds == [1]
+    assert got == _uf_oracle(edges, sorted({x for e in edges for x in e}))
+
+
+def test_chain_rounds_stop_at_star_forest(spark):
+    """A long chain needs several productive rounds; the loop ends on the
+    first round whose cut is a star forest (the last productive one),
+    so no round repeats the previous round's edge set."""
+    edges = [(i, i + 1) for i in range(64)]
+    fps = []
+
+    def on_round(it, e):
+        fps.append(sorted(map(tuple, e.collect())))
+
+    got = _labels(spark, edges, on_round=on_round)
+    assert set(got.values()) == {0} and len(got) == 65
+    assert fps[-1] == [(i, 0) for i in range(1, 65)]
+    assert all(a != b for a, b in zip(fps, fps[1:]))
