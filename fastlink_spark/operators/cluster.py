@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import Materializer, resolve
+from ..session import local_frame
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -244,9 +245,7 @@ def dense_long_ids(
     for r in sorted(counts, key=lambda r: r["__pid"]):
         offs[r["__pid"]] = acc
         acc += r["count"]
-    odf = part.sparkSession.createDataFrame(
-        list(offs.items()), "__pid int, __off long"
-    )
+    odf = local_frame(part.sparkSession, offs.items(), "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(key_col)
     return (
         part.join(F.broadcast(odf), "__pid")

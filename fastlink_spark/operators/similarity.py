@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import cosine_sim
 
 
@@ -124,8 +125,8 @@ def ivf_topk(
             refine_iters = -1  # sentinel: keep the ORIGINAL cent table
                                # (never rebuild from an empty map)
         for _ in range(refine_iters):
-            cdf = spark.createDataFrame(
-                list(cent_map.items()), f"cell {cell_type}, cvec array<double>"
+            cdf = local_frame(
+                spark, cent_map.items(), f"cell {cell_type}, cvec array<double>"
             )
             agg = (
                 _assign_cells(v, cdf, 1)
@@ -138,8 +139,8 @@ def ivf_topk(
                 if all(m is not None for m in mean):
                     cent_map[r["cell"]] = [float(m) for m in mean]
         if refine_iters >= 0:
-            cent = spark.createDataFrame(
-                list(cent_map.items()), f"cell {cell_type}, cvec array<double>"
+            cent = local_frame(
+                spark, cent_map.items(), f"cell {cell_type}, cvec array<double>"
             )
     corpus_cells = _assign_cells(v, cent, 1).select(
         F.col("cell"), F.col("id").alias("neighbor_id"), F.col("vec").alias("cv")

@@ -65,21 +65,22 @@ def link_records(
         key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_cols])
         return df.where(notnull).select(key.alias("block_key"), *attrs)
 
-    mat = _resolve_mat(None)
-    pairs = mat(
-        candidate_pairs_two(
-            blocked(df_a), blocked(df_b), id_col=id_col, skew_threshold=skew_threshold
-        ),
-        "link_two_pairs",
+    pairs = candidate_pairs_two(
+        blocked(df_a), blocked(df_b), id_col=id_col, skew_threshold=skew_threshold
     )
-
-    # materialize the gamma columns ONCE: pattern_counts and the
-    # matched_from_zeta join both consume them, and without a cut every
-    # string-field pandas UDF would re-score the full pair set twice
-    # (r5 review — the pipeline checkpoints pairs_gamma for the same
-    # reason)
-    scored = mat(gammas.with_gammas(pairs, fields), "link_two_scored")
     gcols = [f"gamma_{f.name}" for f in fields]
+    # ONE slim cut, after scoring: pattern_counts and matched_from_zeta
+    # both read it (uncut, every string-field UDF would score the pairs
+    # twice), and they read only the ids and gamma_*. The compared
+    # strings are dead once scored, so a cut of the raw pairs, or
+    # strings kept in this one, would only be written and read back
+    # (the pipeline's pairs_gamma stage keeps columns the same way).
+    scored = _resolve_mat(None)(
+        gammas.with_gammas(pairs, fields).select(
+            f"a_{id_col}", f"b_{id_col}", *gcols
+        ),
+        "link_two_scored",
+    )
     # sort before fitting: emlink_mar's float accumulation is row-order
     # dependent and toPandas() order is shuffle-nondeterministic (same
     # r5 determinism fix as the pipeline path)

@@ -32,6 +32,7 @@ from .. import em as em_mod
 from ..functions import minhash as mh
 from ..functions import normalize as nz
 from ..operators import blocking, cluster, gammas, pairs as pairs_mod
+from ..session import local_frame
 from .checkpoint import CheckpointManager
 
 DEFAULT_FIELDS = (
@@ -157,7 +158,13 @@ def zeta_pattern_df(
     spark: SparkSession, scored_patterns, gcols: list[str]
 ) -> DataFrame:
     """Fitted (gamma pattern -> zeta) pandas frame -> the <=3^K-row
-    literal DataFrame broadcast into the matched-pair join."""
+    literal DataFrame broadcast into the matched-pair join (NULL gamma
+    levels stay NULL).
+
+    Built as a JVM LocalRelation (``session.local_frame``), never with
+    ``createDataFrame(<list>)``: that is a Python RDD, and the
+    matched-pair job reading it would start a second ``pyspark.daemon``
+    and fresh workers just to unpickle a few dozen rows."""
     import pandas as pd
 
     zrows = [
@@ -165,7 +172,7 @@ def zeta_pattern_df(
         for _, r in scored_patterns.iterrows()
     ]
     zschema = ", ".join(f"{c} int" for c in gcols) + ", zeta double"
-    return spark.createDataFrame(zrows, zschema)
+    return local_frame(spark, zrows, zschema)
 
 
 def matched_from_zeta(

@@ -9,10 +9,35 @@ master URL default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small literal frame built in Python (zeta table, relabel map,
+    partition offsets, centroids), typed exactly by ``ddl``, as a JVM
+    ``LocalRelation``.
+
+    Never ``createDataFrame(<list>)``: it parallelizes pickled rows as a
+    Python RDD, and the first job to read it starts a second
+    ``pyspark.daemon`` with fresh workers just to unpickle a few rows
+    (2.6 s against 0.2 s here, measured at local[2] on a 4-core box).
+    An Arrow table handed to the JVM needs no Python worker at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _default_driver_mem() -> str:

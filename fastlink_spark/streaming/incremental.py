@@ -88,6 +88,7 @@ from ..plans.pipeline import (
     prepare_pages,
     zeta_pattern_df,
 )
+from ..session import local_frame
 
 
 def _with_seq(df: DataFrame | None) -> DataFrame | None:
@@ -323,8 +324,8 @@ class IncrementalLinker:
         if not mapping:
             return ent
         idt = self._id_ddl()
-        mdf = self.spark.createDataFrame(
-            list(mapping.items()), f"cluster_id {idt}, __to {idt}"
+        mdf = local_frame(
+            self.spark, mapping.items(), f"cluster_id {idt}, __to {idt}"
         )
         return (
             ent.join(F.broadcast(mdf), "cluster_id", "left")
@@ -572,7 +573,8 @@ class IncrementalLinker:
                 new_relabels = {
                     str(k): v for k, v in resolved.items() if k != v
                 }
-                mdf = self.spark.createDataFrame(
+                mdf = local_frame(
+                    self.spark,
                     [(k, v) for k, v in resolved.items() if k != v],
                     f"cluster_id {idt}, __to {idt}",
                 )

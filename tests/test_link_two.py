@@ -47,3 +47,30 @@ def test_persons_linkage(spark):
     assert "a_firstname" in mat.columns and "b_lastname" in mat.columns
     assert mat.count() == len(got)
     _ = F
+
+
+def test_link_records_one_slim_cut(spark, monkeypatch):
+    """Two-table linkage cuts lineage once, after scoring, and writes
+    only what pattern_counts and matched_from_zeta read: the ids and
+    gamma_* (no pair cut, no compared strings)."""
+    from fastlink_spark.plans import link_two
+
+    cuts = []
+
+    def recording(materializer):
+        def cut(df, name=""):
+            cuts.append((name, df.columns))
+            return df
+        return cut
+
+    monkeypatch.setattr(link_two, "_resolve_mat", recording)
+    a_pdf, b_pdf, _ = generate_persons()
+    fields = [FieldSpec("firstname", "string"), FieldSpec("lastname", "string")]
+    res = link_records(
+        spark, spark.createDataFrame(a_pdf), spark.createDataFrame(b_pdf), fields,
+        id_col="pid", block_cols=["city"],
+    )
+    assert res.matched_pairs.count() > 0
+    assert cuts == [
+        ("link_two_scored", ["a_pid", "b_pid", "gamma_firstname", "gamma_lastname"])
+    ]
