@@ -114,12 +114,6 @@ def html_to_text(html_bin: Column) -> Column:
     return F.nullif(s, F.lit(""))
 
 
-def norm_string(c: Column) -> Column:
-    """fastLink-style field prep: lowercase, trim, ''->null
-    (reference: R/fastLink.R input block / vignette preprocessing)."""
-    return F.nullif(F.lower(F.trim(c)), F.lit(""))
-
-
 # --- pure-Python twins (golden-hash oracle for the frozen extraction) ---
 
 

@@ -5,14 +5,12 @@ The Spark-side contract (schemas, batch iteration, partition sizing) is
 REAL and tested. Decode is real for every format expressible without
 external codec libraries — P6 PPM and 24-bit BMP images (pure NumPy
 byte parsing), PCM WAV audio (stdlib ``wave``), 8-bit PNG (stdlib
-``zlib`` inflate + per-row unfilter, all five PNG filter types), and
-since r6 baseline sequential JPEG (jpeg.py: from-scratch Huffman
-entropy decode + batched NumPy IDCT — SOF0, gray/YCbCr, 4:4:4/4:2:2/
-4:2:0, restart markers); only the formats whose decode genuinely needs
-DSP/psychoacoustic codec libraries (mp3/mp4) raise NotImplementedError
-because none ship in this container. ``deterministic_fake=True``
-remains as a format-agnostic stand-in so tests can drive the full
-distributed path with arbitrary payloads.
+``zlib`` inflate + per-row unfilter, all five PNG filter types).
+Every other media type raises NotImplementedError: DCT-coded images
+and psychoacoustic audio/video (mp3/mp4) need codec libraries, and
+none ship in this container. ``deterministic_fake=True`` remains as a
+format-agnostic stand-in so tests can drive the full distributed path
+with arbitrary payloads.
 
 At 100TB: binary payloads dominate partition size — repartition by
 ``maxRecordsPerBatch``-friendly counts and keep
@@ -154,9 +152,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     arithmetic mod 256 per the spec), alpha dropped, palette expanded.
 
     Closes the "compressed image decode is container-bound" carve-out
-    for PNG — DEFLATE ships in the standard library. (r6 closed the
-    DCT carve-out too: baseline JPEG decodes for real in jpeg.py; only
-    the psychoacoustic formats mp3/mp4 remain honestly stubbed.)
+    for PNG — DEFLATE ships in the standard library.
 
     Scale note: the up filter is vectorized and sub rides a per-channel
     cumsum; average/paeth are a plain-int Python loop per byte — the
@@ -367,17 +363,10 @@ def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
     return hist / n if n > 0 else hist
 
 
-def _decode_jpeg_lazy(p: bytes):
-    from .jpeg import decode_jpeg  # local import keeps module load light
-
-    return decode_jpeg(p)
-
-
 _DECODERS = {
     "image/ppm": lambda p, dim: image_feature(decode_ppm(p), dim),
     "image/bmp": lambda p, dim: image_feature(decode_bmp(p), dim),
     "image/png": lambda p, dim: image_feature(decode_png(p), dim),
-    "image/jpeg": lambda p, dim: image_feature(_decode_jpeg_lazy(p), dim),
     "audio/wav": lambda p, dim: audio_feature(decode_wav(p)[0], dim),
 }
 
@@ -389,9 +378,8 @@ def extract_features(
     deterministic_fake: bool = False,
 ) -> DataFrame:
     """mapInPandas feature extraction over (doc_id, media_type, n_bytes,
-    payload). Real decode for image/ppm, image/bmp, image/png,
-    image/jpeg (baseline sequential, jpeg.py), audio/wav; the
-    psychoacoustic formats (mp3/mp4) raise NotImplementedError (no
+    payload). Real decode for image/ppm, image/bmp, image/png and
+    audio/wav; every other media type raises NotImplementedError (no
     codec libs in this container). Rows whose payload fails to parse
     come back ok=False (feature null) instead of failing the task."""
 
@@ -431,15 +419,3 @@ def extract_features(
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emits (doc_id, frame_idx) rows for
-    a fake frame count derived from n_bytes (real video container
-    parsing needs codec libs — stubbed)."""
-    return media.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest((F.col("n_bytes") / every_n).cast("int") % 32, F.lit(0)))
-        ).alias("frame_idx"),
-    )

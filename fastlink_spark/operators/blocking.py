@@ -58,17 +58,6 @@ def with_block_keys(
     return df.withColumn("block_keys", allk).drop("__hk", "__bk")
 
 
-def explode_blocks(
-    pages_with_keys: DataFrame, id_col: str = "rec_id", attr_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """(row, block_keys[]) -> one row per (block_key, row), carrying the
-    id plus slim comparison attributes (avoids re-joining wide pages
-    back onto the exploded stream)."""
-    return pages_with_keys.select(
-        F.explode("block_keys").alias("block_key"), F.col(id_col), *[F.col(c) for c in attr_cols]
-    )
-
-
 def block_profile(blocked: DataFrame) -> DataFrame:
     """Block-size profile ``(block_key, n)`` — drives explicit skew
     splitting (salt count per block) and the _metrics lineage counters."""

@@ -265,40 +265,6 @@ def _simhash_fingerprints(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_hamming: int = 3,
-    prefix_bits: int = 16,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
-    target_block: int = DEFAULT_TARGET_BLOCK,
-    materializer: Materializer | None = None,
-) -> DataFrame:
-    """SimHash near-dups: block on the top `prefix_bits` of the
-    fingerprint (cheap LSH for small Hamming radii), verify exact
-    Hamming <= max_hamming. Output (id_a, id_b, hamming).
-
-    NOTE single-prefix blocking misses pairs differing within the
-    prefix; the chunk-table variant with the pigeonhole recall
-    GUARANTEE is simhash_pairs_multi below."""
-    fp = _simhash_fingerprints(df, id_col, text_col, materializer=materializer)
-    bucketed = fp.select(
-        F.shiftrightunsigned("fp", 64 - prefix_bits).cast("string").alias("block_key"),
-        "id",
-        "fp",
-    )
-    p = _bucket_pairs(
-        bucketed, "id", ["fp"], skew_threshold=skew_threshold, target_block=target_block
-    )
-    return (
-        p.withColumn("hamming", sh.hamming64(F.col("a_fp"), F.col("b_fp")).cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def simhash_pairs_multi(
     df: DataFrame,
     id_col: str,

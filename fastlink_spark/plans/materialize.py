@@ -197,16 +197,12 @@ def _new_invocation_dir(df: DataFrame) -> str | None:
     return join(root, f"inv_{inv:04d}")
 
 
-def _invocation_materializer(df: DataFrame) -> Materializer:
-    inv_dir = _new_invocation_dir(df)
-    if inv_dir is None:
-        return disk_only
-    return parquet_materializer(inv_dir)
-
-
 class ScopedMaterializer:
-    """An invocation-scoped scratch materializer with an EXPLICIT
-    ``close()``. ``resolve(None)``'s namespaces are only reclaimed by
+    """An invocation-scoped scratch materializer: on its first cut it
+    binds a fresh inv_<n> parquet namespace (or falls back to
+    ``disk_only`` when no scratch root is usable), taking the session
+    from the frame it cuts. ``resolve(None)`` returns one per operator
+    invocation. Without ``close()`` a namespace is only reclaimed by
     the atexit hook at JVM exit — fine for a one-shot batch job, but a
     long-running streaming driver calling an operator per micro-batch
     would accumulate a parquet copy of every batch's intermediates
@@ -216,13 +212,14 @@ class ScopedMaterializer:
     closes it when done. close() is idempotent; a call after close
     lazily re-opens a fresh namespace."""
 
-    def __init__(self, spark):
-        self._spark = spark
+    def __init__(self):
+        self._spark = None
         self._inv_dir: str | None = None
         self._mat: Materializer | None = None
 
     def __call__(self, df: DataFrame, name: str = "") -> DataFrame:
         if self._mat is None:
+            self._spark = df.sparkSession
             self._inv_dir = _new_invocation_dir(df)
             self._mat = (
                 disk_only
@@ -240,17 +237,8 @@ class ScopedMaterializer:
 
 def resolve(materializer: Materializer | None) -> Materializer:
     """Explicit materializer passes through; None returns a fresh
-    scratch-default bound lazily (at first cut) to its own per-
+    ScopedMaterializer, bound lazily (at first cut) to its own per-
     invocation namespace."""
     if materializer is not None:
         return materializer
-    state: dict = {}
-
-    def scratch_default(df: DataFrame, name: str = "") -> DataFrame:
-        mat = state.get("mat")
-        if mat is None:
-            mat = _invocation_materializer(df)
-            state["mat"] = mat
-        return mat(df, name)
-
-    return scratch_default
+    return ScopedMaterializer()

@@ -94,7 +94,7 @@ def get_spark(
         # within standard executor sizing.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("FASTLINK_SHJ_LOCAL_MAP_THRESHOLD", str(128 * 1024 * 1024)),
+            str(128 * 1024 * 1024),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -361,7 +361,7 @@ class IncrementalLinker:
         # accumulated a parquet copy of every batch's intermediates).
         # Closing is safe because the returned DataFrame is re-read
         # from the COMMITTED state segment, not from scratch.
-        mat = ScopedMaterializer(self.spark)
+        mat = ScopedMaterializer()
         try:
             return self._process_batch_inner(
                 new_pages, batch_id, manifest, seq, mat
@@ -666,7 +666,7 @@ class IncrementalLinker:
         cfg = self.cfg
         fields = list(cfg.fields)
         gcols = [f"gamma_{f.name}" for f in fields]
-        mat = ScopedMaterializer(self.spark)
+        mat = ScopedMaterializer()
         try:
             return self._compact_inner(manifest, records, cfg, fields, gcols, mat)
         finally:

@@ -460,17 +460,16 @@ def test_multimodal_spark_path_real_and_corrupt(spark):
     # deterministic: uniform red 8x8 thumbnail -> all-equal normalized vec
     f1 = np.array(out[1]["feature"])
     assert np.allclose(f1, f1[0]) and abs(np.linalg.norm(f1) - 1.0) < 1e-5
-    # the stub boundary moved in r6: image/jpeg now decodes for real
-    # (jpeg.py), so a corrupt jpeg payload is an ok=False row; only the
-    # psychoacoustic formats (mp3/mp4) still raise NotImplementedError
+    # image/jpeg has no decoder, so it takes the same unsupported-format
+    # path as audio/mp3: NotImplementedError, not an ok=False row
     jpg = with_media_metadata(
         spark.createDataFrame([(9, b"\xff\xd8\xff")], "id long, payload binary"),
         "id",
         "payload",
         "image/jpeg",
     )
-    jrow = extract_features(jpg, dim=8).collect()[0]
-    assert not jrow["ok"] and jrow["feature"] is None
+    with pytest.raises(Exception, match="NotImplementedError|media_type"):
+        extract_features(jpg, dim=8).collect()
     mp3 = with_media_metadata(
         spark.createDataFrame([(9, b"ID3\x04")], "id long, payload binary"),
         "id",

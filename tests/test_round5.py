@@ -256,7 +256,7 @@ def test_cluster_match_pandas_path_null_vec_matches_codegen(spark, monkeypatch):
 def test_scoped_materializer_releases_scratch(spark):
     from fastlink_spark.plans.materialize import ScopedMaterializer
 
-    mat = ScopedMaterializer(spark)
+    mat = ScopedMaterializer()
     df = spark.range(10)
     out = mat(df, "cut")
     assert out.count() == 10

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pytest
 
 
@@ -164,31 +163,3 @@ def test_decode_ppm_prefers_conforming_reading_when_ambiguous():
     crlf = _ppm(b"P6 2 2 255\r\n", 2, 2)
     assert (decode_ppm(crlf) == decode_ppm(lf)).all()
     assert (decode_ppm(crlf + b"\n") == decode_ppm(lf)).all()
-
-
-# --------------------------- ADVICE 1: JPEG coef storage is flat int32
-
-
-def test_jpeg_coef_storage_budget():
-    """r7 ADVICE: per-block lists of boxed ints cost ~84+ B/px that the
-    80 B/px budget never counted. Decode still works (storage moved to
-    a preallocated int32 ndarray) and the dims cap still fires before
-    any allocation."""
-    from fastlink_spark.jpeg import JPEG_MAX_PIXEL_BYTES, decode_jpeg
-    from tests.test_jpeg import encode_color_444  # independent encoder
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(24, 40, 3), dtype=np.uint8)
-    q = np.ones((8, 8), dtype=np.int32)
-    payload = encode_color_444(img, q, q)
-    out = decode_jpeg(payload)
-    assert out.shape == (24, 40, 3)
-    # oversized declared dims still rejected pre-allocation
-    big = bytearray(payload)
-    sof = big.find(b"\xff\xc0")
-    h_off = sof + 5
-    big[h_off : h_off + 2] = (60_000).to_bytes(2, "big")
-    big[h_off + 2 : h_off + 4] = (60_000).to_bytes(2, "big")
-    assert 60_000 * 60_000 * 80 > JPEG_MAX_PIXEL_BYTES
-    with pytest.raises(ValueError, match="cap"):
-        decode_jpeg(bytes(big))
