@@ -1,10 +1,9 @@
 """Corpus deduplication operators for training-data pipelines:
-exact (hash groupBy), MinHash-LSH, SimHash, n-gram Jaccard, and
-embedding-cosine near-dup. Driver-mandated first-class components
-beyond the reference's ER scope.
+MinHash-LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup, and
+``corpus_dedup`` (exact + near duplicates clustered). Driver-mandated
+first-class components beyond the reference's ER scope.
 
-Scale notes: exact dedupe is one hash aggregation (map-side combined);
-every LSH bucket join (minhash bands / simhash tables / hyperplane
+Scale notes: every LSH bucket join (minhash bands / simhash tables / hyperplane
 buckets) is routed through ``operators.pairs.candidate_pairs`` — the
 profiled, triangle-salted self-join — so a hot bucket (one popular band
 value on a boilerplate-heavy corpus) is split into bounded sub-joins
@@ -59,69 +58,6 @@ def _bucket_pairs(
         F.col(f"b_{id_col}").alias("id_b"),
         *[F.col(f"a_{c}").alias(f"a_{c}") for c in attr_cols],
         *[F.col(f"b_{c}").alias(f"b_{c}") for c in attr_cols],
-    )
-
-
-def exact_dup_groups(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_ids: int | None = None,
-    wide_hash: bool = False,
-) -> DataFrame:
-    """Exact duplicates by full-text hash: (text_hash, n_dups, doc_ids).
-    One shuffle.
-
-    ``wide_hash``: group on the 128-bit two-seed key (hex string, the
-    same construction corpus_dedup and wide_rec_id use) instead of one
-    xxhash64. At 10^12-doc scale a single 64-bit key has ~1e4 expected
-    birthday collisions, each silently merging UNRELATED documents into
-    one "exact duplicate" group — a training pipeline would then delete
-    non-duplicates (r5 review finding: the docstring prescribed the
-    variant but nothing implemented it). 64-bit is exact at every test
-    SF; flip this on at corpus scale.
-
-    ``max_ids``: cap on the per-group member list. The default (None,
-    exact full lists) materializes each group's ids in ONE row — fine
-    at test scale, but a boilerplate page repeated 10^7 times puts a
-    10^7-element array on a single task. At corpus scale pass a cap:
-    ``n_dups`` stays exact (separate count agg), the member list keeps
-    the first ``max_ids`` ids by sort order via a spill-friendly window
-    (no unbounded array ever built)."""
-    if wide_hash:
-        th = F.concat(
-            F.lpad(F.hex(F.xxhash64(F.col(text_col))), 16, "0"),
-            F.lpad(F.hex(F.xxhash64(F.lit("text_hash_hi"), F.col(text_col))), 16, "0"),
-        )
-    else:
-        th = F.xxhash64(F.col(text_col))
-    h = df.select(F.col(id_col), th.alias("text_hash")).where(
-        F.col(text_col).isNotNull()
-    )
-    if max_ids is None:
-        return (
-            h.groupBy("text_hash")
-            .agg(
-                F.count("*").alias("n_dups"),
-                F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-            )
-            .where(F.col("n_dups") > 1)
-        )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("text_hash").orderBy(id_col)
-    counts = h.groupBy("text_hash").agg(F.count("*").alias("n_dups"))
-    members = (
-        h.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_ids)
-        .groupBy("text_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
-    )
-    return (
-        counts.where(F.col("n_dups") > 1)
-        .join(members, "text_hash")
-        .select("text_hash", "n_dups", "doc_ids")
     )
 
 

@@ -181,6 +181,7 @@ class CheckpointManager:
         # downstream tokens chain these so upstream content changes
         # invalidate automatically
         self.fingerprints: dict[str, str] = {}
+        self._op_stages_wiped = False
 
     def _paths(self, name: str) -> tuple[str, str]:
         assert self.root is not None
@@ -273,30 +274,20 @@ class CheckpointManager:
 
     def materializer(self):
         """Handle for OPERATOR-INTERNAL lineage cuts (CC rounds, LSH
-        key tables, greedy-fixpoint state): parquet subdirs under
-        ``<root>/_op_stages`` when a checkpoint root exists (the
-        fault-tolerant production shape), DISK_ONLY localCheckpoint
-        otherwise. These cuts are transient scratch — they carry no
-        resume token and are rewritten on every run.
-
-        Every call returns a FRESH ``inv_<n>`` namespace (r5 review —
-        mirroring materialize.py's per-invocation design): isolation in
-        both directions is load-bearing. Unique subdirs mean two
-        invocations cutting the same hint (e.g. two CC runs cutting
-        'cc_round') can never overwrite each other's live scratch, and
-        keep_per_name retention only deletes cuts WITHIN one
-        invocation — a shared-counter design lets invocation 2's
-        cc_round_005 retention-delete invocation 1's still-live
-        cc_round_004 (the exact 3+-invocation failure materialize.py
-        documents). Call once per operator invocation."""
-        from .materialize import parquet_materializer, resolve
+        key tables, greedy-fixpoint state): a ``ScopedMaterializer``
+        whose namespace lives under ``<root>/_op_stages`` when a
+        checkpoint root exists (the fault-tolerant production shape),
+        else under the application's scratch root. These cuts are
+        transient scratch — they carry no resume token and are
+        rewritten on every run. Call once per operator invocation: each
+        handle binds its own ``inv_<n>`` namespace (plans/materialize.py
+        says why), and ``close()`` frees it once nothing reads its cuts."""
+        from .materialize import ScopedMaterializer
 
         if self.root is None:
-            # scratch-aware default: resolve(None) already allocates a
-            # fresh per-invocation namespace per call
-            return resolve(None)
+            return ScopedMaterializer()
         scratch = os.path.join(self.root, "_op_stages")
-        if not getattr(self, "_op_stages_wiped", False):
+        if not self._op_stages_wiped:
             # wipe prior-RUN orphans once per manager (a shorter re-run
             # would otherwise leave higher-suffix round dirs behind
             # forever); never mid-run — a later wipe could delete
@@ -305,9 +296,7 @@ class CheckpointManager:
 
             shutil.rmtree(scratch, ignore_errors=True)
             self._op_stages_wiped = True
-        n = getattr(self, "_op_inv_n", 0)
-        self._op_inv_n = n + 1
-        return parquet_materializer(os.path.join(scratch, f"inv_{n:04d}"))
+        return ScopedMaterializer(scratch)
 
     def put_json(self, name: str, payload: str) -> None:
         if self.root is None:

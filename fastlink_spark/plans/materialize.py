@@ -24,7 +24,8 @@ deployment decision, so every operator takes an optional
 - ``parquet_materializer(root)``: writes each cut to a parquet subdir
   and reads it back — the production shape (an Iceberg table write on a
   real cluster): fault-tolerant, splittable, off-heap. The pipeline's
-  CheckpointManager passes this through to the operators it calls.
+  CheckpointManager passes one per operator invocation (a
+  ``ScopedMaterializer`` under ``<checkpoint>/_op_stages``).
 
 Signature: ``materializer(df, name) -> DataFrame`` where ``name`` is a
 short stage hint (unique-ified by the parquet materializer).
@@ -47,6 +48,10 @@ def disk_only(df: DataFrame, name: str = "") -> DataFrame:
     block) — the scratch-aware default below prefers parquet whenever
     it can discover a usable directory."""
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def _join(root: str, name: str) -> str:
+    return f"{root}/{name}" if "://" in root else os.path.join(root, name)
 
 
 def _rm_path(spark, path: str) -> None:
@@ -92,37 +97,37 @@ def parquet_materializer(root: str, keep_per_name: int = 2) -> Materializer:
     newer cuts of the SAME name (iterative operators roll their
     accumulators through retained cuts — see dedupe_matches)."""
     counts: dict[str, int] = {}
-    join = (lambda *p: "/".join(p)) if "://" in root else os.path.join
 
     def mat(df: DataFrame, name: str = "") -> DataFrame:
         base = name or "stage"
         idx = counts.get(base, 0)
         counts[base] = idx + 1
-        path = join(root, f"{base}_{idx:03d}")
+        path = _join(root, f"{base}_{idx:03d}")
         df.write.mode("overwrite").parquet(path)
         # the written schema read back (file reads make it nullable,
         # exactly what inference would find) — no inference job
         out = df.sparkSession.read.schema(df.schema).parquet(path)
         old = idx - keep_per_name
         if old >= 0:
-            _rm_path(df.sparkSession, join(root, f"{base}_{old:03d}"))
+            _rm_path(df.sparkSession, _join(root, f"{base}_{old:03d}"))
         return out
 
     return mat
 
 
-# per-app scratch state: (root-or-None, invocation counter). The root
-# is discovered once per application; every resolve(None) call — i.e.
-# every OPERATOR INVOCATION — gets its own inv_<n> subdirectory and
-# fresh suffix counters. Isolation in BOTH directions is load-bearing:
-# unique subdirs mean two invocations cutting the same hint can never
-# overwrite each other's live scratch, and retention (keep_per_name)
-# only ever deletes cuts WITHIN one invocation — a later bare
-# `dedupe_matches()` call can't delete the parquet backing the
-# DataFrame a caller still holds from an earlier call (cuts of the
-# SAME name never span invocations; the old shared-counter design
-# broke exactly that way at 3+ invocations).
+# per-app scratch root (or None), discovered once per application
 _app_scratch: dict[str, dict] = {}
+# next inv_<n> index per namespace root (an app scratch root or a
+# checkpoint's _op_stages). Every OPERATOR INVOCATION gets its own
+# inv_<n> subdirectory and fresh suffix counters. Isolation in BOTH
+# directions is load-bearing: unique subdirs mean two invocations
+# cutting the same hint can never overwrite each other's live scratch,
+# and retention (keep_per_name) only ever deletes cuts WITHIN one
+# invocation — a later bare `dedupe_matches()` call can't delete the
+# parquet backing the DataFrame a caller still holds from an earlier
+# call (cuts of the SAME name never span invocations; the old
+# shared-counter design broke exactly that way at 3+ invocations).
+_inv_counts: dict[str, int] = {}
 
 
 def _discover_root(df: DataFrame) -> str | None:
@@ -180,30 +185,27 @@ def _discover_root(df: DataFrame) -> str | None:
             scratch = None
     else:
         scratch = None
-    _app_scratch[app] = {"root": scratch, "n": 0}
+    _app_scratch[app] = {"root": scratch}
     return scratch
 
 
-def _new_invocation_dir(df: DataFrame) -> str | None:
-    """Allocate a fresh inv_<n> scratch namespace (None -> no usable
-    root, caller falls back to disk_only)."""
-    root = _discover_root(df)
-    if root is None:
-        return None
-    state = _app_scratch[df.sparkSession.sparkContext.applicationId]
-    inv = state["n"]
-    state["n"] = inv + 1
-    join = (lambda *p: "/".join(p)) if "://" in root else os.path.join
-    return join(root, f"inv_{inv:04d}")
+def _new_invocation_dir(root: str) -> str:
+    """Allocate the next inv_<n> namespace under ``root``."""
+    n = _inv_counts.get(root, 0)
+    _inv_counts[root] = n + 1
+    return _join(root, f"inv_{n:04d}")
 
 
 class ScopedMaterializer:
     """An invocation-scoped scratch materializer: on its first cut it
-    binds a fresh inv_<n> parquet namespace (or falls back to
-    ``disk_only`` when no scratch root is usable), taking the session
-    from the frame it cuts. ``resolve(None)`` returns one per operator
-    invocation. Without ``close()`` a namespace is only reclaimed by
-    the atexit hook at JVM exit — fine for a one-shot batch job, but a
+    binds a fresh inv_<n> parquet namespace under ``root`` (None: the
+    application's scratch root, else ``disk_only`` when none is
+    usable), taking the session from the frame it cuts.
+    ``resolve(None)`` returns one per operator invocation;
+    ``CheckpointManager.materializer`` returns one rooted at
+    ``<checkpoint>/_op_stages``. Without ``close()`` a namespace lives
+    until JVM exit (the app root's atexit hook) or the next checkpoint
+    run's orphan wipe — fine for a one-shot batch job, but a
     long-running streaming driver calling an operator per micro-batch
     would accumulate a parquet copy of every batch's intermediates
     until shutdown (ADVICE r4). A caller that knows its cuts' lifetime
@@ -212,7 +214,8 @@ class ScopedMaterializer:
     closes it when done. close() is idempotent; a call after close
     lazily re-opens a fresh namespace."""
 
-    def __init__(self):
+    def __init__(self, root: str | None = None):
+        self._root = root
         self._spark = None
         self._inv_dir: str | None = None
         self._mat: Materializer | None = None
@@ -220,7 +223,8 @@ class ScopedMaterializer:
     def __call__(self, df: DataFrame, name: str = "") -> DataFrame:
         if self._mat is None:
             self._spark = df.sparkSession
-            self._inv_dir = _new_invocation_dir(df)
+            root = self._root if self._root is not None else _discover_root(df)
+            self._inv_dir = None if root is None else _new_invocation_dir(root)
             self._mat = (
                 disk_only
                 if self._inv_dir is None

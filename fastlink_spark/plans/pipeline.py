@@ -324,8 +324,8 @@ def link_dedupe(
     # 50k-row Arrow batches for the scoring stage only: amortizes
     # per-batch UDF overhead and widens the JW kernel's unique-pair
     # factorization window (~7% measured). Pair rows are slim strings
-    # (~20 MB/batch); the OPH/media UDF stages keep the 10k default —
-    # their rows carry token arrays / binary payloads.
+    # (~20 MB/batch); the OPH UDF stage keeps the 10k default — its
+    # rows carry token arrays.
     _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     _arrow_prev = spark.conf.get(_arrow_key, "10000")
     spark.conf.set(_arrow_key, "50000")
@@ -432,20 +432,26 @@ def link_dedupe(
     )
 
     nodes = records.select("rec_id")
+    # CC's round cuts (and dense_long_ids') are read only while the
+    # clusters stage is written; its read-back replaces them, so the
+    # namespace is freed as soon as the stage returns. A resumed stage
+    # opens none.
+    cc_mat = None
 
     def _build_clusters() -> DataFrame:
+        nonlocal cc_mat
         edges = matched.select("a_rec_id", "b_rec_id")
         nodes_df = nodes.withColumnRenamed("rec_id", "id")
-        mat = ckpt.materializer()
+        cc_mat = ckpt.materializer()
         if not cfg.wide_rec_id:
-            return cluster.connected_components(edges, nodes_df, materializer=mat)
+            return cluster.connected_components(edges, nodes_df, materializer=cc_mat)
         # Wide (128-bit hex) keys: CC shuffles every id twice per round,
         # so map keys to collision-free dense longs first (8-byte vs
         # 32-byte shuffle keys over O(log n) rounds), run CC on longs,
         # then relabel each component to min(wide key) — output is
         # IDENTICAL to running CC on the wide keys directly
         # (test_round2::test_wide_rec_id_pipeline_equivalent_clusters).
-        idmap = cluster.dense_long_ids(nodes_df, "id", materializer=mat).select(
+        idmap = cluster.dense_long_ids(nodes_df, "id", materializer=cc_mat).select(
             F.col("id").alias("rid"), "dense_id"
         )
         e_dense = (
@@ -460,7 +466,7 @@ def link_dedupe(
             .select("u", "v")
         )
         cc_d = cluster.connected_components(
-            e_dense, idmap.select(F.col("dense_id").alias("id")), materializer=mat
+            e_dense, idmap.select(F.col("dense_id").alias("id")), materializer=cc_mat
         )
         lab = cc_d.join(idmap.select(F.col("dense_id").alias("id"), "rid"), "id")
         canon = lab.groupBy("cluster_id").agg(F.min("rid").alias("canon"))
@@ -468,7 +474,11 @@ def link_dedupe(
             F.col("rid").alias("id"), F.col("canon").alias("cluster_id")
         )
 
-    labels = ckpt.stage("clusters", _build_clusters, inputs=("matched_pairs",))
+    try:
+        labels = ckpt.stage("clusters", _build_clusters, inputs=("matched_pairs",))
+    finally:
+        if cc_mat is not None:
+            cc_mat.close()
 
     entities = labels.withColumnRenamed("id", "rec_id").join(
         records.select("rec_id", "url"), "rec_id"

@@ -1,11 +1,10 @@
-"""Tests for training-data dedup/similarity/multimodal operators."""
+"""Tests for training-data dedup/similarity operators."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from fastlink_spark.operators.dedup import (
     embedding_dup_pairs,
-    exact_dup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs_multi,
@@ -25,12 +24,6 @@ def _docs(spark):
         (5, None),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dup_groups(spark):
-    out = exact_dup_groups(_docs(spark), "doc_id", "text").collect()
-    assert len(out) == 1
-    assert out[0]["doc_ids"] == [1, 2] and out[0]["n_dups"] == 2
 
 
 def test_minhash_and_jaccard(spark):
@@ -92,23 +85,3 @@ def test_embedding_dup_pairs(spark):
     out = embedding_dup_pairs(emb, "vec_id", "vec", min_cosine=0.99)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert (0, 1) in pairs
-
-
-def test_multimodal_plumbing(spark):
-    from fastlink_spark.multimodal import extract_features, with_media_metadata
-
-    rows = [(1, b"\x01\x02\x03" * 50), (2, b"\xff" * 10), (3, None)]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    media = with_media_metadata(df, "doc_id", "payload", "image")
-    feats = extract_features(media, dim=8, deterministic_fake=True)
-    got = {r["doc_id"]: r for r in feats.collect()}
-    assert got[1]["ok"] and len(got[1]["feature"]) == 8
-    assert abs(sum(x * x for x in got[1]["feature"]) - 1.0) < 1e-5  # L2 normalized
-    assert got[3]["ok"] is False
-    # NotImplementedError path surfaces when fake decode is off
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-
-    with _pytest.raises(Exception) as exc:
-        extract_features(media, dim=8).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(exc.value, Py4JJavaError)

@@ -47,7 +47,16 @@ def test_resume_byte_identical(spark, tmp_path):
     pages = spark.createDataFrame(fx.pages)
     ck = str(tmp_path / "ckpt")
     cfg = LinkageConfig(checkpoint_dir=ck)
+    op_stages = os.path.join(ck, "_op_stages")
+
+    def live_invocations():
+        # CC's operator scratch is freed once the clusters stage is written
+        if not os.path.isdir(op_stages):
+            return []
+        return [d for d in os.listdir(op_stages) if d.startswith("inv_")]
+
     r1 = link_dedupe(spark, pages, cfg)
+    assert live_invocations() == []
     c1 = {r["url"]: r["cluster_id"] for r in r1.entities.collect()}
     # full resume
     r2 = link_dedupe(spark, pages, cfg)
@@ -61,6 +70,7 @@ def test_resume_byte_identical(spark, tmp_path):
     r3 = link_dedupe(spark, pages, cfg)
     assert r3.metrics["candidate_pairs"]["resumed"] is True
     assert r3.metrics["matched_pairs"]["resumed"] is False
+    assert live_invocations() == []
     c3 = {r["url"]: r["cluster_id"] for r in r3.entities.collect()}
     assert c1 == c3
 

@@ -387,101 +387,6 @@ def test_ngram_jaccard_empty_docs_zero(spark):
     assert out[(1, 3)]["jaccard"] == 0.0 and out[(1, 3)]["n_inter"] == 0
 
 
-# ------------------------------------------------------ multimodal decode
-
-def _ppm_bytes(w, h, rgb):
-    import numpy as np
-
-    img = np.zeros((h, w, 3), dtype=np.uint8)
-    img[:, :] = rgb
-    return b"P6\n# comment\n%d %d\n255\n" % (w, h) + img.tobytes()
-
-
-def _bmp_bytes(w, h, rgb):
-    import struct
-
-    stride = (w * 3 + 3) & ~3
-    data = bytearray()
-    row = bytes([rgb[2], rgb[1], rgb[0]] * w) + b"\x00" * (stride - w * 3)
-    for _ in range(h):
-        data += row
-    off = 14 + 40
-    header = b"BM" + struct.pack("<IHHI", off + len(data), 0, 0, off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-    return header + info + bytes(data)
-
-
-def _wav_bytes(n=1600, rate=8000):
-    import io
-    import wave
-
-    x = (np.sin(np.linspace(0, 60, n)) * 20000).astype(np.int16)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(x.tobytes())
-    return buf.getvalue()
-
-
-def test_multimodal_real_decoders():
-    from fastlink_spark.multimodal import decode_bmp, decode_ppm, decode_wav, resize_nearest
-
-    ppm = decode_ppm(_ppm_bytes(6, 4, (10, 20, 30)))
-    assert ppm.shape == (4, 6, 3) and (ppm[0, 0] == [10, 20, 30]).all()
-    bmp = decode_bmp(_bmp_bytes(5, 3, (200, 100, 50)))
-    assert bmp.shape == (3, 5, 3) and (bmp[0, 0] == [200, 100, 50]).all()
-    x, rate = decode_wav(_wav_bytes())
-    assert rate == 8000 and len(x) == 1600 and abs(float(np.abs(x).max()) - 20000 / 32768) < 1e-3
-    big = resize_nearest(ppm, 8, 8)
-    assert big.shape == (8, 8, 3)
-
-
-def test_multimodal_spark_path_real_and_corrupt(spark):
-    from fastlink_spark.multimodal import extract_features, with_media_metadata
-
-    rows = [
-        (1, _ppm_bytes(8, 8, (255, 0, 0)), "image/ppm"),
-        (2, _bmp_bytes(8, 8, (0, 255, 0)), "image/bmp"),
-        (3, _wav_bytes(), "audio/wav"),
-        (4, b"P6 garbage", "image/ppm"),  # corrupt -> ok=False
-    ]
-    dfs = []
-    for doc_id, payload, mt in rows:
-        df = spark.createDataFrame([(doc_id, payload)], "id long, payload binary")
-        dfs.append(with_media_metadata(df, "id", "payload", mt))
-    media = dfs[0]
-    for d in dfs[1:]:
-        media = media.unionByName(d)
-    out = {r["doc_id"]: r for r in extract_features(media, dim=16).collect()}
-    assert out[1]["ok"] and out[2]["ok"] and out[3]["ok"]
-    assert not out[4]["ok"] and out[4]["feature"] is None
-    # deterministic: uniform red 8x8 thumbnail -> all-equal normalized vec
-    f1 = np.array(out[1]["feature"])
-    assert np.allclose(f1, f1[0]) and abs(np.linalg.norm(f1) - 1.0) < 1e-5
-    # image/jpeg has no decoder, so it takes the same unsupported-format
-    # path as audio/mp3: NotImplementedError, not an ok=False row
-    jpg = with_media_metadata(
-        spark.createDataFrame([(9, b"\xff\xd8\xff")], "id long, payload binary"),
-        "id",
-        "payload",
-        "image/jpeg",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|media_type"):
-        extract_features(jpg, dim=8).collect()
-    mp3 = with_media_metadata(
-        spark.createDataFrame([(9, b"ID3\x04")], "id long, payload binary"),
-        "id",
-        "payload",
-        "audio/mp3",
-    )
-    import pytest as _pt
-
-    with _pt.raises(Exception, match="NotImplementedError|media_type"):
-        extract_features(mp3, dim=8).collect()
-
-
 # ------------------------------------------- hot-band salting + F1 guard
 
 def test_minhash_hot_band_salted_equals_unsalted(spark):

@@ -54,53 +54,6 @@ def test_name_reweight_m_renormalization(spark):
     assert full[9] == pytest.approx(base[9])  # non-agreeing untouched
 
 
-# ------------------------------------------------- corrupt media payloads
-
-def test_multimodal_corrupt_wav_and_bad_bmp(spark):
-    """A malformed RIFF/WAV payload (wave.Error) and an unsupported-bpp
-    BMP must come back ok=False rows, never a task failure (r2 ADVICE)."""
-    import struct
-
-    from fastlink_spark.multimodal import extract_features, with_media_metadata
-
-    bad_wav = b"RIFF" + b"\x10\x00\x00\x00" + b"WAVEfmt garbage-not-a-chunk-table"
-    # valid BM magic + BITMAPINFOHEADER claiming 32 bpp (unsupported)
-    off = 14 + 40
-    header = b"BM" + struct.pack("<IHHI", off + 4, 0, 0, off)
-    info = struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 32, 0, 4, 2835, 2835, 0, 0)
-    bad_bmp = header + info + b"\x00\x00\x00\x00"
-    truncated_ppm = b"P6\n"  # header ends before width/height/maxval
-    # VALID 24-bit PCM WAV: a real format this decoder doesn't cover —
-    # per-row ok=False (ValueError), never a NotImplementedError that
-    # escapes the catch and kills the task (r3 review finding)
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(3)
-        wf.setframerate(8000)
-        wf.writeframes(b"\x00\x01\x02" * 16)
-    wav24 = buf.getvalue()
-
-    rows = [
-        (1, bad_wav, "audio/wav"),
-        (2, bad_bmp, "image/bmp"),
-        (3, truncated_ppm, "image/ppm"),
-        (4, wav24, "audio/wav"),
-    ]
-    media = None
-    for doc_id, payload, mt in rows:
-        df = spark.createDataFrame([(doc_id, payload)], "id long, payload binary")
-        part = with_media_metadata(df, "id", "payload", mt)
-        media = part if media is None else media.unionByName(part)
-    out = {r["doc_id"]: r for r in extract_features(media, dim=16).collect()}
-    assert len(out) == 4
-    for i in (1, 2, 3, 4):
-        assert out[i]["ok"] is False and out[i]["feature"] is None
-
-
 # ------------------------------------- incremental near-dup via band keys
 
 def _mk_pages(spark, rows):

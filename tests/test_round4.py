@@ -739,19 +739,6 @@ def test_embedding_plane_count_validated(spark):
         embedding_dup_pairs(emb, "doc_id", "vec", n_buckets_hint=1024)
 
 
-def test_exact_dup_groups_capped_members(spark):
-    from fastlink_spark.operators.dedup import exact_dup_groups
-
-    docs = spark.createDataFrame(
-        [(i, "same text") for i in range(10)] + [(100, "unique")],
-        "doc_id long, text string",
-    )
-    out = exact_dup_groups(docs, "doc_id", "text", max_ids=3).collect()
-    assert len(out) == 1
-    assert out[0]["n_dups"] == 10  # count stays exact
-    assert out[0]["doc_ids"] == [0, 1, 2]  # members capped, deterministic
-
-
 # ----------------- review pass 4 fixes
 
 def test_greedy_long_chain_exceeds_max_rounds(spark):

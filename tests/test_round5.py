@@ -476,19 +476,6 @@ def test_candidate_pairs_attr_named_salt_survives(spark):
         assert r["a_salt"] == f"v{r['a_rec_id']}" and r["b_salt"] == f"v{r['b_rec_id']}"
 
 
-def test_exact_dup_groups_wide_hash(spark):
-    from fastlink_spark.operators.dedup import exact_dup_groups
-
-    docs = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other")],
-        "doc_id long, text string",
-    )
-    out = exact_dup_groups(docs, "doc_id", "text", wide_hash=True).collect()
-    assert len(out) == 1
-    assert out[0]["n_dups"] == 2 and out[0]["doc_ids"] == [1, 2]
-    assert isinstance(out[0]["text_hash"], str) and len(out[0]["text_hash"]) == 32
-
-
 def test_simhash_radius_beyond_pigeonhole_raises(spark):
     from fastlink_spark.operators.dedup import simhash_pairs_multi
 
@@ -641,20 +628,6 @@ def test_window_size_validated(spark):
 
     with pytest.raises(ValueError, match="window_size"):
         window_block_keys(F.col("x"), 0)
-
-
-def test_decode_ppm_crlf_header(spark):
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_ppm
-
-    pixels = bytes([10, 20, 30, 40, 50, 60])
-    ok = decode_ppm(b"P6 2 1 255\n" + pixels)
-    crlf = decode_ppm(b"P6 2 1 255\r\n" + pixels)
-    assert np.array_equal(ok, crlf)
-    assert ok[0, 0].tolist() == [10, 20, 30]
-    with pytest.raises(ValueError, match="truncated"):
-        decode_ppm(b"P6 2 1 255\n" + pixels[:-1])
 
 
 def test_value_frequencies_single_pass_values(spark):
@@ -938,240 +911,3 @@ def test_incremental_plus_compact_equals_batch_randomized(spark, tmp_path, seed)
     got = parts(linker.entities().collect())
     want = parts(batch.entities.collect())
     assert got == want
-
-
-# ---------------------------------------------------------------- PNG decode
-
-
-def _png_chunk(typ: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + typ
-        + data
-        + struct.pack(">I", zlib.crc32(typ + data))
-    )
-
-
-def _encode_png(img, color_type: int, filter_type, palette=None) -> bytes:
-    """Minimal PNG writer for tests: 8-bit depth, non-interlaced.
-    `filter_type` is one int (every row uses it — exercises each decode
-    branch in isolation) or a per-row sequence (exercises filter
-    TRANSITIONS: e.g. paeth reading a sub-reconstructed prev row).
-    `img` is (h, w, nch) uint8 matching color_type's channel count
-    (palette mode: (h, w, 1) indices)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, nch = img.shape
-    bpp = nch
-    raw = img.reshape(h, w * nch).astype(np.int32)
-    prev = np.zeros(w * nch, dtype=np.int32)
-    ftypes = [filter_type] * h if isinstance(filter_type, int) else list(filter_type)
-    assert len(ftypes) == h
-    scan = bytearray()
-    for y in range(h):
-        row = raw[y]
-        ft = ftypes[y]
-        filt = np.empty_like(row)
-        for x in range(w * nch):
-            a = int(row[x - bpp]) if x >= bpp else 0  # left (reconstructed=raw)
-            b = int(prev[x])  # up
-            c = int(prev[x - bpp]) if x >= bpp else 0  # upper-left
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) >> 1
-            else:  # paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            filt[x] = (int(row[x]) - pred) & 0xFF
-        scan.append(ft)
-        scan.extend(filt.astype(np.uint8).tobytes())
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += _png_chunk(b"PLTE", bytes(palette.astype(np.uint8).reshape(-1)))
-    out += _png_chunk(b"IDAT", zlib.compress(bytes(scan)))
-    return out + _png_chunk(b"IEND", b"")
-
-
-@pytest.mark.parametrize("filter_type", [0, 1, 2, 3, 4])
-def test_decode_png_all_filters_rgb(filter_type):
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_png
-
-    rng = np.random.default_rng(7 + filter_type)
-    img = rng.integers(0, 256, size=(13, 17, 3), dtype=np.uint8)
-    got = decode_png(_encode_png(img, 2, filter_type))
-    assert got.shape == (13, 17, 3)
-    assert (got == img).all()
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_decode_png_mixed_filters_per_row(seed):
-    """Random filter per ROW: every unfilter branch must reconstruct
-    from a prev row produced by a DIFFERENT branch (the single-filter
-    tests can't see a bug in those transitions)."""
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_png
-
-    rng = np.random.default_rng(100 + seed)
-    for nch, ctype in ((3, 2), (4, 6), (1, 0)):
-        h, w = 17, 11
-        img = rng.integers(0, 256, size=(h, w, nch), dtype=np.uint8)
-        ftypes = rng.integers(0, 5, size=h).tolist()
-        got = decode_png(_encode_png(img, ctype, ftypes))
-        want = img[:, :, :3] if ctype == 6 else (np.repeat(img, 3, axis=2) if ctype == 0 else img)
-        assert (got == want).all(), f"ctype={ctype} filters={ftypes}"
-
-
-def test_decode_png_rejects_unsupported_variants():
-    """16-bit depth and interlaced images are OUT of scope: they must
-    raise (-> ok=False row), never silently mis-decode."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_png
-
-    img = np.zeros((3, 3, 3), dtype=np.uint8)
-    good = bytearray(_encode_png(img, 2, 0))
-    # IHDR data starts at 8 (sig) + 8 (len+type); depth is byte 8 of it
-    ihdr_off = 16
-    for field_off, bad_val in ((8, 16), (12, 1)):  # depth=16; interlace=Adam7
-        b = bytearray(good)
-        b[ihdr_off + field_off] = bad_val
-        data = bytes(b[ihdr_off : ihdr_off + 13])
-        b[ihdr_off + 13 : ihdr_off + 17] = struct.pack(">I", zlib.crc32(b"IHDR" + data))
-        with pytest.raises(ValueError, match="unsupported PNG variant"):
-            decode_png(bytes(b))
-
-
-def test_decode_png_color_types():
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_png
-
-    rng = np.random.default_rng(11)
-    # RGBA: alpha dropped
-    rgba = rng.integers(0, 256, size=(5, 4, 4), dtype=np.uint8)
-    assert (decode_png(_encode_png(rgba, 6, 4)) == rgba[:, :, :3]).all()
-    # grayscale: replicated to 3 channels
-    gray = rng.integers(0, 256, size=(6, 3, 1), dtype=np.uint8)
-    got = decode_png(_encode_png(gray, 0, 1))
-    assert (got == np.repeat(gray, 3, axis=2)).all()
-    # gray+alpha
-    ga = rng.integers(0, 256, size=(4, 5, 2), dtype=np.uint8)
-    got = decode_png(_encode_png(ga, 4, 2))
-    assert (got == np.repeat(ga[:, :, :1], 3, axis=2)).all()
-    # palette
-    pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(7, 6, 1), dtype=np.uint8)
-    got = decode_png(_encode_png(idx, 3, 0, palette=pal))
-    assert (got == pal[idx[:, :, 0]]).all()
-
-
-def test_decode_png_rejects_bad_payloads():
-    import numpy as np
-
-    from fastlink_spark.multimodal import decode_png
-
-    img = np.zeros((3, 3, 3), dtype=np.uint8)
-    good = _encode_png(img, 2, 0)
-    with pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\nnot-a-chunk")
-    with pytest.raises(ValueError):
-        decode_png(b"BM" + good)  # wrong magic
-    with pytest.raises(ValueError):
-        decode_png(good[:40])  # truncated mid-chunk
-    # corrupt the IDAT deflate stream: flip a byte at a COMPUTED offset
-    # inside the chunk data (a fixed negative index is layout-dependent
-    # and could drift into the CRC, which the decoder ignores)
-    idat_at = good.index(b"IDAT")
-    idat_len = int.from_bytes(good[idat_at - 4 : idat_at], "big")
-    assert idat_len >= 3
-    bad = bytearray(good)
-    bad[idat_at + 4 + idat_len // 2] ^= 0xFF
-    with pytest.raises(ValueError):
-        decode_png(bytes(bad))
-    # palette index out of range
-    pal = np.zeros((2, 3), dtype=np.uint8)
-    idx = np.full((2, 2, 1), 9, dtype=np.uint8)
-    with pytest.raises(ValueError):
-        decode_png(_encode_png(idx, 3, 0, palette=pal))
-
-
-def test_decode_png_bounds_memory_before_inflate():
-    """A crafted PNG must degrade to ValueError (-> ok=False row), never
-    an executor OOM: (a) huge DECLARED dimensions are rejected before
-    any allocation; (b) an IDAT stream inflating beyond the declared
-    dimensions (zip-bomb shape) is rejected mid-inflate, bounded by the
-    declared size — zlib.decompress alone would expand ~1032:1."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from fastlink_spark.multimodal import PNG_MAX_PIXEL_BYTES, decode_png
-
-    def png(w, h, idat):
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", idat)
-            + _png_chunk(b"IEND", b"")
-        )
-
-    # (a) declared 50000x50000 RGB = 7.5 GB > cap, tiny payload
-    with pytest.raises(ValueError, match="decode cap"):
-        decode_png(png(50_000, 50_000, zlib.compress(b"\x00" * 64)))
-    assert 50_000 * 50_000 * 3 > PNG_MAX_PIXEL_BYTES  # the case is real
-    # (b) declared 2x2 but the stream inflates to 1 MB
-    bomb = zlib.compress(b"\x00" * (1 << 20), 9)
-    with pytest.raises(ValueError, match="beyond the declared"):
-        decode_png(png(2, 2, bomb))
-    # sanity: a conforming image still decodes after the guards
-    img = np.full((2, 2, 3), 7, dtype=np.uint8)
-    assert (decode_png(_encode_png(img, 2, 0)) == img).all()
-
-
-def test_extract_features_png_end_to_end(spark):
-    """image/png rides the REAL decode path through mapInPandas: the
-    distributed feature equals image_feature(decode_png(payload)) locally,
-    and a corrupt PNG row degrades to ok=False without failing the task."""
-    import numpy as np
-
-    from fastlink_spark.multimodal import (
-        decode_png,
-        extract_features,
-        image_feature,
-        with_media_metadata,
-    )
-
-    rng = np.random.default_rng(23)
-    imgs = {i: rng.integers(0, 256, size=(9, 9, 3), dtype=np.uint8) for i in range(3)}
-    rows = [(i, bytearray(_encode_png(imgs[i], 2, i + 1))) for i in range(3)]
-    rows.append((99, bytearray(b"\x89PNG\r\n\x1a\ntrash")))
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    media = with_media_metadata(df, "doc_id", "payload", "image/png")
-    out = {r["doc_id"]: r for r in extract_features(media, dim=16).collect()}
-    assert not out[99]["ok"] and out[99]["feature"] is None
-    for i in range(3):
-        assert out[i]["ok"]
-        want = image_feature(decode_png(_encode_png(imgs[i], 2, i + 1)), 16)
-        assert np.allclose(np.array(out[i]["feature"], dtype=np.float32), want)

@@ -11,45 +11,6 @@ import pandas as pd
 import pytest
 
 
-# --------------------------- ADVICE 1: PPM surplus bytes
-
-
-def _ppm(header: bytes, w: int, h: int, first_byte: int = 32) -> bytes:
-    body = bytes([first_byte]) + bytes((i * 7) % 256 for i in range(w * h * 3 - 1))
-    return header + body
-
-
-def test_decode_ppm_crlf_still_tolerated():
-    from fastlink_spark.multimodal import decode_ppm
-
-    ok = decode_ppm(_ppm(b"P6 2 2 255\n", 2, 2))
-    crlf = decode_ppm(_ppm(b"P6 2 2 255\r\n", 2, 2))
-    assert (ok == crlf).all()
-
-
-def test_decode_ppm_trailing_surplus_policy():
-    """r6 ADVICE + review: the old skip-leading-whitespace loop could
-    absorb a whitespace-valued FIRST pixel byte (32 here), silently
-    shifting every channel. Now pixels are always read from the fixed
-    [pos, pos+n) window: whitespace-only trailing surplus (text-mode
-    tooling's final newline) decodes byte-identical, non-whitespace
-    surplus fails loudly, and a conforming lone-'\\r' separator whose
-    first pixel byte is 0x0A is NOT mistaken for a CRLF skip."""
-    from fastlink_spark.multimodal import decode_ppm
-
-    good = _ppm(b"P6 2 2 255\n", 2, 2, first_byte=32)
-    assert decode_ppm(good)[0, 0, 0] == 32
-    assert (decode_ppm(good + b"\n") == decode_ppm(good)).all()
-    with pytest.raises(ValueError, match="surplus"):
-        decode_ppm(good + b"x")
-    with pytest.raises(ValueError, match="truncated"):
-        decode_ppm(good[:-1])
-    # lone-'\r' separator, first pixel byte 0x0A, exact length: a
-    # spec-valid file (any single whitespace separates header/pixels)
-    cr = _ppm(b"P6 2 2 255\r", 2, 2, first_byte=0x0A)
-    assert decode_ppm(cr)[0, 0, 0] == 0x0A
-
-
 # --------------------------- ADVICE 2: em_log grid-size overflow
 
 

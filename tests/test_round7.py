@@ -132,34 +132,3 @@ def test_skew_stress_one_hot_block(spark):
     assert max_cell <= 2 * target * target, f"cell load {max_cell} breaks the bound"
     # and the unsalted disaster this prevents, for the record
     assert hot * (hot - 1) // 2 > 15 * max_cell
-
-
-# --------------------------- ADVICE 2: PPM ambiguous CRLF + trailing ws
-
-
-def _ppm(header: bytes, w: int, h: int, first_byte: int = 32) -> bytes:
-    body = bytes([first_byte]) + bytes((i * 7) % 256 for i in range(w * h * 3 - 1))
-    return header + body
-
-
-def test_decode_ppm_prefers_conforming_reading_when_ambiguous():
-    """r7 ADVICE: lone-'\\r' separator, first pixel byte 0x0A, PLUS a
-    trailing-whitespace surplus ('\\n'). The old rule (skip whenever a
-    surplus byte exists and the \\r\\n pattern matches) ate the real
-    0x0A pixel byte and the shifted read passed silently. Now the
-    conforming exact-offset reading wins whenever it is self-consistent
-    (whitespace-only tail)."""
-    from fastlink_spark.multimodal import decode_ppm
-
-    cr = _ppm(b"P6 2 2 255\r", 2, 2, first_byte=0x0A)
-    exact = decode_ppm(cr)
-    assert exact[0, 0, 0] == 0x0A
-    # same file with a final newline appended by text-mode tooling:
-    # must decode byte-identical, not shifted
-    assert (decode_ppm(cr + b"\n") == exact).all()
-    # and a real CRLF writer (non-whitespace last pixel byte -> the
-    # conforming reading is inconsistent) still gets the skip
-    lf = _ppm(b"P6 2 2 255\n", 2, 2)
-    crlf = _ppm(b"P6 2 2 255\r\n", 2, 2)
-    assert (decode_ppm(crlf) == decode_ppm(lf)).all()
-    assert (decode_ppm(crlf + b"\n") == decode_ppm(lf)).all()
