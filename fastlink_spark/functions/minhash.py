@@ -1,24 +1,25 @@
-"""MinHash signatures + LSH band keys, entirely JVM-side.
+"""MinHash signatures + LSH band keys.
 
 Reference analogue: none — fastLink blocks via exact keys / windows /
 k-means (``R/blockData.R``, ``R/clusterMatch.R``); BASELINE.json
 north_star replaces k-means with deterministic text-shingle MinHash
 band keys (SURVEY.md G20/G14). Deterministic => reproducible => resumable.
 
-Design notes (scale): every step is a Catalyst expression over array
-columns (split / transform / xxhash64 / array_min / aggregate) —
-whole-stage codegen, no Python, no shuffle. Per-seed signatures reuse
-one pass of shingle string hashing: sig_i = min_h xxhash64(h, i) over
-the precomputed int64 shingle hashes, so each shingle string is hashed
-once regardless of k. ANSI-mode safe (xxhash64 re-seed instead of an
+Design notes (scale): the JVM tokenizes and hashes each token once
+(split / filter / transform / xxhash64); one vectorized numpy pandas
+UDF per Arrow batch mixes w-token shingles and builds the
+one-permutation signature (Shrivastava & Li: one hash per shingle,
+bucket j = h & (k-1), min per bucket, rotation densification of empty
+buckets); the band keys are Catalyst expressions again. No shuffle,
+and int64 wraparound is the hash mixing (ANSI-mode safe: no
 overflowing a*x+b mod p permutation).
 
-CRITICAL plan-size note: the k-element signature and b band keys are
-built with ``F.transform(F.sequence(...), ...)`` — O(1) expression-tree
-size in k and b. Building them as Python-generated ``F.array(*[...])``
-literals embeds the upstream shingle subtree k*b times, which blows up
-analysis/codegen and stalls executors (observed: 64-wide array hung a
-100-row task indefinitely).
+CRITICAL plan-size note: the b band keys are built with
+``F.transform(F.sequence(...), ...)`` — O(1) expression-tree size in b.
+Building them as Python-generated ``F.array(*[...])`` literals embeds
+the upstream signature subtree b times, which blows up analysis/codegen
+and stalls executors (observed: 64-wide array hung a 100-row task
+indefinitely).
 """
 
 from __future__ import annotations
@@ -39,41 +40,13 @@ def tokens(text: Column) -> Column:
     return F.filter(toks, lambda t: t != "")
 
 
-def shingle_hashes_from_tokens(toks: Column, w: int = DEFAULT_SHINGLE_W) -> Column:
-    """array<bigint> xxhash64 over w-token shingles; short docs (<w
-    tokens) contribute their full token string as a single shingle;
-    empty token set -> null."""
-    n = F.size(toks)
-    full = F.array(F.xxhash64(F.concat_ws(" ", toks)))
-    sh = F.transform(
-        F.sequence(F.lit(0), n - F.lit(w)),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + F.lit(1), F.lit(w)))),
-    )
-    return F.when(n >= F.lit(w), sh).when(n > 0, full)
-
-
-def signature_from_hashes(hashes: Column, k: int) -> Column:
-    """array<bigint> of k min-hashes: sig_i = min_h xxhash64(h, seed=i).
-
-    Pure-JVM k-rehash variant. O(k * n_shingles) per row with ~1us/elem
-    HOF-lambda overhead — kept as the dependency-free reference path;
-    the default pipeline path is the one-permutation variant below
-    (oph_signature_udf), which is ~k times cheaper per row."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(F.transform(hashes, lambda h: F.xxhash64(h, i))),
-    )
-
-
 _EMPTY_SENTINEL = np.iinfo(np.int64).max
 _MIX_PRIME = np.int64(-7046029254386353131)  # 0x9E3779B97F4A7C15 as int64
 
 
 def _flatten_hash_lists(hash_arrays: "pd.Series") -> tuple[int, np.ndarray, np.ndarray]:
     """(n, per-row lens, flat int64 concat) for a Series of
-    array<bigint>/None rows — ONE definition for both OPH UDF paths
-    (r5 review: the two near-verbatim batch preambles were the same
-    drift hazard the r4 _bucket_min_densify dedup closed)."""
+    array<bigint>/None rows."""
     n = len(hash_arrays)
     lens = np.fromiter(
         (0 if h is None else len(h) for h in hash_arrays), np.int64, count=n
@@ -85,39 +58,6 @@ def _flatten_hash_lists(hash_arrays: "pd.Series") -> tuple[int, np.ndarray, np.n
     else:
         flat = np.empty(0, dtype=np.int64)
     return n, lens, flat
-
-
-def _oph_batch(hash_arrays: "pd.Series", k: int) -> "pd.Series":
-    """One-permutation MinHash with rotation densification, vectorized
-    across the whole Arrow batch (no per-row Python).
-
-    Shrivastava & Li's one-permutation scheme: ONE hash per shingle;
-    bucket j = h & (k-1) (k power of two); sig[j] = min hash in bucket;
-    empty buckets borrow from the nearest following non-empty bucket,
-    mixed with the borrow distance so borrowed values stay distinct.
-    """
-    n, lens, flat = _flatten_hash_lists(hash_arrays)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    row_idx = np.repeat(np.arange(n), lens)
-    sig = _bucket_min_densify(flat, row_idx, n, k)
-    out = [None if lens[i] == 0 else sig[i].tolist() for i in range(n)]
-    return pd.Series(out, dtype=object)
-
-
-def oph_signature_udf(k: int):
-    """pandas UDF: array<bigint> shingle hashes -> array<bigint> OPH
-    signature of length k (k must be a power of two)."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    if k & (k - 1):
-        raise ValueError("OPH signature length k must be a power of two")
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(hashes: pd.Series) -> pd.Series:
-        return _oph_batch(hashes, k)
-
-    return _udf
 
 
 def _rolling_shingles(flat: np.ndarray, lens: np.ndarray, w: int) -> tuple[np.ndarray, np.ndarray]:
@@ -162,9 +102,9 @@ def oph_from_token_hashes_udf(k: int, w: int):
     """pandas UDF: array<bigint> TOKEN hashes -> array<bigint> OPH
     signature. Shingle mixing + one-permutation min-bucketing + rotation
     densification all happen in one vectorized numpy pass — the JVM does
-    only one xxhash64 per token. This is the default minhash path: the
-    per-shingle JVM HOF variant costs ~88us/shingle in slice+concat_ws
-    lambda machinery (measured), ~30x this path."""
+    only one xxhash64 per token. Building shingles in the JVM instead
+    (a slice + concat_ws HOF lambda per shingle) measured ~88us/shingle,
+    ~30x this path."""
     from pyspark.sql.types import ArrayType, LongType
 
     if k & (k - 1):
@@ -189,12 +129,9 @@ def oph_from_token_hashes_udf(k: int, w: int):
 def _bucket_min_densify(
     values: np.ndarray, row_of: np.ndarray, n: int, k: int
 ) -> np.ndarray:
-    """Shared OPH core (ONE definition for both the shingle-hash and
-    token-hash UDF paths — they previously carried near-verbatim
-    copies, a drift hazard): scatter each value into bucket
-    ``value & (k-1)`` of its row, keep the per-bucket min
-    (stable-sort + reduceat, no per-row Python), then rotation-densify
-    empty buckets."""
+    """OPH core: scatter each value into bucket ``value & (k-1)`` of
+    its row, keep the per-bucket min (stable-sort + reduceat, no
+    per-row Python), then rotation-densify empty buckets."""
     sig = np.full((n, k), _EMPTY_SENTINEL, dtype=np.int64)
     if len(values):
         bucket = values & (k - 1)
@@ -263,30 +200,15 @@ def add_minhash_bands(
     w: int = DEFAULT_SHINGLE_W,
     bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    keep_signature: bool = False,
-    impl: str = "oph",
 ) -> DataFrame:
     """text -> `out_col`: array<string> of LSH band keys (null text or
     empty token set -> null). Staged projections keep each level
-    computed once per row.
-
-    impl='oph' (default): one-permutation signature in a vectorized
-    pandas UDF — one xxhash64 per shingle (JVM) + one numpy pass, ~k
-    times cheaper than impl='jvm' (k-rehash, dependency-free)."""
+    computed once per row: one xxhash64 per token (JVM), then the
+    one-permutation signature in a vectorized pandas UDF."""
     k = bands * rows_per_band
-    if impl == "oph":
-        # JVM: one xxhash64 per TOKEN; numpy UDF: shingle mix + OPH
-        tok_hashes = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
-        df = df.withColumn("__mh_sh", tok_hashes)
-        df = df.withColumn("__mh_sig", oph_from_token_hashes_udf(k, w)(F.col("__mh_sh")))
-    elif impl == "jvm":
-        df = df.withColumn("__mh_sh", shingle_hashes_from_tokens(tokens(F.col(text_col)), w))
-        df = df.withColumn(
-            "__mh_sig",
-            F.when(F.col("__mh_sh").isNotNull(), signature_from_hashes(F.col("__mh_sh"), k)),
-        )
-    else:
-        raise ValueError(f"unknown minhash impl: {impl}")
+    tok_hashes = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
+    df = df.withColumn("__mh_sh", tok_hashes)
+    df = df.withColumn("__mh_sig", oph_from_token_hashes_udf(k, w)(F.col("__mh_sh")))
     df = df.withColumn(
         out_col,
         F.when(
@@ -294,8 +216,4 @@ def add_minhash_bands(
             band_keys_from_signature(F.col("__mh_sig"), bands, rows_per_band),
         ),
     )
-    if keep_signature:
-        df = df.withColumnRenamed("__mh_sig", f"{out_col}_signature").drop("__mh_sh")
-    else:
-        df = df.drop("__mh_sh", "__mh_sig")
-    return df
+    return df.drop("__mh_sh", "__mh_sig")

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import Materializer, resolve
-from ..session import local_frame
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -126,10 +125,8 @@ def connected_components(
     materializer: Materializer | None = None,
 ) -> DataFrame:
     """Edges ``(u, v)`` (any orientation; any orderable id type — long
-    hashes or wide hex-string keys) -> ``(id, cluster_id)`` with
-    cluster_id = min node id of the component. For 10^12-node graphs
-    prefer dense long ids (``dense_long_ids`` below) over wide string
-    keys: every round shuffles the ids twice.
+    hashes or string keys) -> ``(id, cluster_id)`` with cluster_id =
+    min node id of the component. Every round shuffles the ids twice.
 
     `nodes`: optional single-column ('id') universe; nodes without edges
     come back as singleton clusters (cluster_id = id).
@@ -218,39 +215,3 @@ def connected_components(
             )
         )
     return labels
-
-
-def dense_long_ids(
-    df: DataFrame, key_col: str, *, materializer: Materializer | None = None
-) -> DataFrame:
-    """(key) -> (key, dense_id long): collision-free dense longs for CC
-    over wide (128-bit / string) record keys at 10^12 scale, where a
-    64-bit hash would merge ~1e4 unrelated clusters by birthday
-    collisions. Scalable pattern: per-partition row_number + broadcast
-    partition offsets (one tiny collect of partition counts — NO global
-    sort). The keyed stream is MATERIALIZED before the counts collect so
-    the offsets and the window ranking read the same frozen ``__pid``
-    column — without the cut, ``spark_partition_id`` is re-evaluated per
-    job and AQE coalescing / conf drift between the two jobs could
-    silently mint colliding ids."""
-    from pyspark.sql import Window
-
-    mat = resolve(materializer)
-    part = mat(
-        df.select(key_col).distinct().withColumn("__pid", F.spark_partition_id()),
-        "dense_ids",
-    )
-    counts = part.groupBy("__pid").count().collect()
-    offs, acc = {}, 0
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        offs[r["__pid"]] = acc
-        acc += r["count"]
-    odf = local_frame(part.sparkSession, offs.items(), "__pid int, __off long")
-    w = Window.partitionBy("__pid").orderBy(key_col)
-    return (
-        part.join(F.broadcast(odf), "__pid")
-        .select(
-            key_col,
-            (F.row_number().over(w) + F.col("__off") - 1).cast("long").alias("dense_id"),
-        )
-    )

@@ -286,8 +286,7 @@ def corpus_dedup(
     have EMPTY shingle sets, so only text equality can tie them.
     Exact-dup grouping keys on a 128-bit two-seed hash: a single 64-bit
     hash at the 10^12-doc scale this module targets would silently merge
-    ~1e4 unrelated documents by birthday collisions (same treatment as
-    wide_rec_id gives record keys)."""
+    ~1e4 unrelated documents by birthday collisions."""
     from .cluster import connected_components
 
     near = minhash_near_dup_pairs(

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,14 +68,7 @@ class LinkageConfig:
     # the mixture correctly ranks low on its own evidence.
     deterministic_fields: tuple[str, ...] = ("url_norm",)
     sample_fraction: float | None = None  # emlinkRS mode: fit EM on a pair sample
-    # 128-bit record key (two-seed xxhash64, hex): at 10^12 docs a 64-bit
-    # key has ~1e4 expected birthday collisions; the wide key removes
-    # them. Flows through pairs/gammas/CC unchanged (CC is id-type
-    # generic); pair CC at that scale should additionally map wide keys
-    # to dense longs (operators.cluster.dense_long_ids).
-    wide_rec_id: bool = False
     checkpoint_dir: str | None = None
-    extra: dict = dc_field(default_factory=dict)
 
     def token(self) -> str:
         blob = json.dumps(
@@ -96,7 +89,6 @@ class LinkageConfig:
                 ],
                 "sample": self.sample_fraction,
                 "deterministic": list(self.deterministic_fields),
-                "wide_rec_id": self.wide_rec_id,
             },
             sort_keys=True,
         )
@@ -119,22 +111,13 @@ def prepare_pages(pages: DataFrame, cfg: "LinkageConfig | None" = None) -> DataF
     them (minhash.py plan-size note).
 
     rec_id = xxhash64(url): stable under recompute (never
-    monotonically_increasing_id — SURVEY.md D3). At 10^12 scale a
-    64-bit key has non-trivial birthday collisions (~1e4 expected);
-    ``cfg.wide_rec_id`` promotes to the 128-bit two-seed hex key (CC is
-    id-type generic; map to dense longs via cluster.dense_long_ids for
-    CC shuffle width). 64-bit is exact at every test SF.
+    monotonically_increasing_id — SURVEY.md D3). A 64-bit key is exact
+    at every test SF; at 10^12 docs it would have ~1e4 expected
+    birthday collisions.
     """
     cfg = cfg or LinkageConfig()
-    if cfg.wide_rec_id:
-        rec_id = F.concat(
-            F.lpad(F.hex(F.xxhash64("url")), 16, "0"),
-            F.lpad(F.hex(F.xxhash64(F.lit("rec_id_hi"), F.col("url"))), 16, "0"),
-        )
-    else:
-        rec_id = F.xxhash64("url")
     prep = pages.select(
-        rec_id.alias("rec_id"),
+        F.xxhash64("url").alias("rec_id"),
         "url",
         "warc_ts",
         "lang",
@@ -179,12 +162,11 @@ def matched_from_zeta(
     scored: DataFrame,
     zeta_df: DataFrame,
     gcols: list[str],
-    cfg: "LinkageConfig | None" = None,
     *,
+    threshold: float,
+    deterministic_fields: tuple[str, ...] = (),
     id_a: str = "a_rec_id",
     id_b: str = "b_rec_id",
-    threshold: float | None = None,
-    deterministic_fields: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """THE matched-pair rule — one definition shared by the batch
     pipeline, the incremental linker, state compaction, and the
@@ -196,20 +178,15 @@ def matched_from_zeta(
     unique per (id_a, id_b) — every producer dedupes on that key — so
     one projected pass emits the same byte-stable pair list the old
     two-branch union+groupBy(max) shape did, minus one full scan of the
-    pair stream and one exchange. Pass a cfg (dedupe pipeline) or the
-    explicit threshold/deterministic_fields knobs (two-table mode)."""
-    thr = cfg.threshold if cfg is not None else threshold
-    det_fields = (
-        cfg.deterministic_fields if cfg is not None else (deterministic_fields or ())
-    )
+    pair stream and one exchange."""
     cond = None
     for c in gcols:
         eq = scored[c].eqNullSafe(zeta_df[c])
         cond = eq if cond is None else (cond & eq)
-    if not det_fields:
+    if not deterministic_fields:
         return (
             scored.join(F.broadcast(zeta_df), cond, "inner")
-            .where(F.col("zeta") >= thr)
+            .where(F.col("zeta") >= threshold)
             .select(id_a, id_b, "zeta")
         )
     # ONE pass over the pair stream (r8 optimization — guide §2.3/§2.4):
@@ -225,7 +202,7 @@ def matched_from_zeta(
     # zeta_df (impossible when zeta_df covers the observed patterns, as
     # every caller's does): such a pair survives iff deterministic.
     det_cond = None
-    for f in det_fields:
+    for f in deterministic_fields:
         eq = (
             F.col(f"a_{f}").isNotNull()
             & F.col(f"b_{f}").isNotNull()
@@ -235,7 +212,7 @@ def matched_from_zeta(
     det_flag = F.coalesce(det_cond, F.lit(False))
     return (
         scored.join(F.broadcast(zeta_df), cond, "left")
-        .where((F.col("zeta") >= thr) | det_flag)
+        .where((F.col("zeta") >= threshold) | det_flag)
         .select(
             id_a,
             id_b,
@@ -383,10 +360,8 @@ def link_dedupe(
     # the stale EM fit — silently scoring new data with old m/u/lambda.
     # A fingerprint bump also retires any pre-r5 checkpoint written
     # under the old sample_fraction=1.0 perturbed-fit semantics.
-    import hashlib as _hashlib
-
     _fp = ckpt.fingerprints.get("pairs_gamma", "")
-    em_key = f"em_{cfg.token()}_{_hashlib.md5(_fp.encode()).hexdigest()[:12]}"
+    em_key = f"em_{cfg.token()}_{hashlib.md5(_fp.encode()).hexdigest()[:12]}"
     em_json = ckpt.get_json(em_key)
     if em_json is not None:
         em = em_mod.EMResult.from_json(em_json)
@@ -427,51 +402,28 @@ def link_dedupe(
     zeta_df = zeta_pattern_df(spark, scored_patterns, gcols)
     matched = ckpt.stage(
         "matched_pairs",
-        lambda: matched_from_zeta(scored, zeta_df, gcols, cfg),
+        lambda: matched_from_zeta(
+            scored,
+            zeta_df,
+            gcols,
+            threshold=cfg.threshold,
+            deterministic_fields=cfg.deterministic_fields,
+        ),
         inputs=("pairs_gamma",),
     )
 
-    nodes = records.select("rec_id")
-    # CC's round cuts (and dense_long_ids') are read only while the
-    # clusters stage is written; its read-back replaces them, so the
-    # namespace is freed as soon as the stage returns. A resumed stage
-    # opens none.
+    # CC's round cuts are read only while the clusters stage is
+    # written; its read-back replaces them, so the namespace is freed as
+    # soon as the stage returns. A resumed stage opens none.
     cc_mat = None
 
     def _build_clusters() -> DataFrame:
         nonlocal cc_mat
-        edges = matched.select("a_rec_id", "b_rec_id")
-        nodes_df = nodes.withColumnRenamed("rec_id", "id")
         cc_mat = ckpt.materializer()
-        if not cfg.wide_rec_id:
-            return cluster.connected_components(edges, nodes_df, materializer=cc_mat)
-        # Wide (128-bit hex) keys: CC shuffles every id twice per round,
-        # so map keys to collision-free dense longs first (8-byte vs
-        # 32-byte shuffle keys over O(log n) rounds), run CC on longs,
-        # then relabel each component to min(wide key) — output is
-        # IDENTICAL to running CC on the wide keys directly
-        # (test_round2::test_wide_rec_id_pipeline_equivalent_clusters).
-        idmap = cluster.dense_long_ids(nodes_df, "id", materializer=cc_mat).select(
-            F.col("id").alias("rid"), "dense_id"
-        )
-        e_dense = (
-            edges.join(
-                idmap.select(F.col("rid").alias("a_rec_id"), F.col("dense_id").alias("u")),
-                "a_rec_id",
-            )
-            .join(
-                idmap.select(F.col("rid").alias("b_rec_id"), F.col("dense_id").alias("v")),
-                "b_rec_id",
-            )
-            .select("u", "v")
-        )
-        cc_d = cluster.connected_components(
-            e_dense, idmap.select(F.col("dense_id").alias("id")), materializer=cc_mat
-        )
-        lab = cc_d.join(idmap.select(F.col("dense_id").alias("id"), "rid"), "id")
-        canon = lab.groupBy("cluster_id").agg(F.min("rid").alias("canon"))
-        return lab.join(canon, "cluster_id").select(
-            F.col("rid").alias("id"), F.col("canon").alias("cluster_id")
+        return cluster.connected_components(
+            matched.select("a_rec_id", "b_rec_id"),
+            records.select(F.col("rec_id").alias("id")),
+            materializer=cc_mat,
         )
 
     try:

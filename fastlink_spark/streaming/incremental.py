@@ -91,13 +91,6 @@ from ..plans.pipeline import (
 from ..session import local_frame
 
 
-def _with_seq(df: DataFrame | None) -> DataFrame | None:
-    """Back-compat: states written before the _seq stamp read as seq 0."""
-    if df is not None and "_seq" not in df.columns:
-        df = df.withColumn("_seq", F.lit(0).cast("long"))
-    return df
-
-
 class IncrementalLinker:
     def __init__(
         self,
@@ -185,30 +178,17 @@ class IncrementalLinker:
 
     def _load_manifest(self) -> dict:
         p = self._path("MANIFEST.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        # legacy (pre-manifest) state dir: synthesize an in-memory
-        # manifest over the old append-mode dirs + side json files; the
-        # first v2 commit rewrites everything and retires them
-        legacy_meta = {"seq": 0, "last_batch_id": -1}
-        mp = self._path("meta.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                legacy_meta = json.load(f)
-        relabels = {}
-        rp = self._path("relabels.json")
-        if os.path.exists(rp):
-            with open(rp) as f:
-                relabels = json.load(f)
-        return {
-            "version": 2,
-            "seq": legacy_meta.get("seq", 0),
-            "last_batch_id": legacy_meta.get("last_batch_id", -1),
-            "records": ["records"] if os.path.exists(self._path("records")) else [],
-            "entities": ["entities"] if os.path.exists(self._path("entities")) else [],
-            "relabels": relabels,
-        }
+        if not os.path.exists(p):  # nothing committed yet
+            return {
+                "version": 2,
+                "seq": 0,
+                "last_batch_id": -1,
+                "records": [],
+                "entities": [],
+                "relabels": {},
+            }
+        with open(p) as f:
+            return json.load(f)
 
     def _commit_manifest(self, manifest: dict) -> None:
         """THE transaction: tmp-write + fsync + atomic rename + dir
@@ -216,11 +196,6 @@ class IncrementalLinker:
         relabel map) becomes visible in this single rename or not at
         all."""
         atomic_write_text(self._path("MANIFEST.json"), json.dumps(manifest))
-        # legacy side files are stale the moment a real manifest exists
-        for leftover in ("meta.json", "relabels.json"):
-            p = self._path(leftover)
-            if os.path.exists(p):
-                os.remove(p)
 
     def _gc_unreferenced(self, manifest: dict) -> None:
         """Best-effort removal of state dirs no manifest references —
@@ -236,37 +211,20 @@ class IncrementalLinker:
             live |= set(gen.get("records", [])) | set(gen.get("entities", []))
         for d in os.listdir(self.state_dir):
             full = os.path.join(self.state_dir, d)
-            if not os.path.isdir(full) or d in live:
-                continue
-            if d.startswith("seg_") or d in ("records", "entities"):
+            if d.startswith("seg_") and d not in live and os.path.isdir(full):
                 shutil.rmtree(full, ignore_errors=True)
 
     def _read_segments(self, manifest: dict, kind: str) -> DataFrame | None:
         names = manifest[kind]
         if not names:
             return None
-        paths = [self._path(n) for n in names]
-        # legacy dirs may predate the _seq column; v2 segments always
-        # carry it. Per-path normalization + unionByName keeps mixed
-        # generations readable (one manifest generation after a
-        # compact(), the list is a single segment again).
-        parts = [_with_seq(self.spark.read.parquet(p)) for p in paths]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _id_ddl(self) -> str:
-        """Spark DDL type of rec_id/cluster_id labels (long for the
-        default 64-bit key, string under cfg.wide_rec_id's 128-bit hex
-        key) — relabel tables and null literals must match it."""
-        return "string" if self.cfg.wide_rec_id else "long"
+        # every segment of one kind has one schema, so ONE multi-path
+        # read: a read per path would run one schema job per segment
+        return self.spark.read.parquet(*[self._path(n) for n in names])
 
     def _relabels_from(self, manifest: dict) -> dict:
-        raw = manifest.get("relabels", {})
-        if self.cfg.wide_rec_id:
-            return dict(raw.items())
-        return {int(k): int(v) for k, v in raw.items()}
+        # JSON object keys are strings; labels are long rec_ids
+        return {int(k): int(v) for k, v in manifest.get("relabels", {}).items()}
 
     def _read_relabels(self) -> dict:
         return self._relabels_from(self._load_manifest())
@@ -294,9 +252,9 @@ class IncrementalLinker:
         The winning row is picked by max_by over a struct of
         (_seq, ~xxhash64(cluster_id,url)) — i.e. _seq desc with a
         content-hash tiebreak, the SAME deterministic order compact()
-        uses (ADVICE r4): legacy pre-seq rows all read as _seq=0, so
-        without the tiebreak a multiply-re-crawled record's served row
-        was partition-order nondeterministic. Taking cluster_id and
+        uses (ADVICE r4): crash-replay duplicates share a _seq, so
+        without the tiebreak a record's served row would be
+        partition-order nondeterministic. Taking cluster_id and
         url from ONE struct also pins them to the same winning row
         (two independent max_by calls could mix rows on a tie)."""
         manifest = manifest if manifest is not None else self._load_manifest()
@@ -323,10 +281,7 @@ class IncrementalLinker:
         mapping = self._relabels_from(manifest)
         if not mapping:
             return ent
-        idt = self._id_ddl()
-        mdf = local_frame(
-            self.spark, mapping.items(), f"cluster_id {idt}, __to {idt}"
-        )
+        mdf = local_frame(self.spark, mapping.items(), "cluster_id long, __to long")
         return (
             ent.join(F.broadcast(mdf), "cluster_id", "left")
             .select(
@@ -455,7 +410,16 @@ class IncrementalLinker:
             # prune-key scan, the partner join AND the conflict check —
             # three consumers of one gamma-scored plan.
             zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            matched = mat(matched_from_zeta(scored, zdf, gcols, cfg), "matched")
+            matched = mat(
+                matched_from_zeta(
+                    scored,
+                    zdf,
+                    gcols,
+                    threshold=cfg.threshold,
+                    deterministic_fields=cfg.deterministic_fields,
+                ),
+                "matched",
+            )
         walls["matched"] = round(time.time() - t0, 3)
         t0 = time.time()
 
@@ -472,7 +436,6 @@ class IncrementalLinker:
             )
         else:
             old_ent = None
-        idt = self._id_ddl()
         if matched is not None and old_ent is not None:
             partner_clusters = matched.join(
                 old_ent.select(F.col("rec_id").alias("b_rec_id"), "cluster_id"),
@@ -481,7 +444,7 @@ class IncrementalLinker:
             )
         elif matched is not None:
             partner_clusters = matched.withColumn(
-                "cluster_id", F.lit(None).cast(idt)
+                "cluster_id", F.lit(None).cast("long")
             )
         else:
             partner_clusters = None
@@ -555,9 +518,8 @@ class IncrementalLinker:
                 def union(x, y) -> None:
                     rx, ry = find(x), find(y)
                     if rx != ry:
-                        # canonical = min label: numeric order for long
-                        # keys, lexicographic for wide hex keys — the
-                        # same order cluster.py's F.min canonicalizes by
+                        # canonical = min label, the same order
+                        # cluster.py's F.min canonicalizes by
                         lo, hi = (rx, ry) if rx < ry else (ry, rx)
                         parent[hi] = lo
 
@@ -567,16 +529,15 @@ class IncrementalLinker:
                     union(r["la"], r["lb"])
                 resolved = {x: find(x) for x in parent}
                 # staged for the manifest commit below — a crash
-                # between here and the rename publishes NOTHING (the
-                # old code wrote relabels.json mid-batch, making
-                # merges visible without the batch's rows)
+                # between here and the rename publishes NOTHING, so
+                # merges never become visible without the batch's rows
                 new_relabels = {
                     str(k): v for k, v in resolved.items() if k != v
                 }
                 mdf = local_frame(
                     self.spark,
                     [(k, v) for k, v in resolved.items() if k != v],
-                    f"cluster_id {idt}, __to {idt}",
+                    "cluster_id long, __to long",
                 )
                 new_ent = mat(
                     new_ent.join(F.broadcast(mdf), "cluster_id", "left").select(
@@ -598,9 +559,8 @@ class IncrementalLinker:
         new_rec.withColumn("_seq", stamp).write.mode("overwrite").parquet(
             self._path(rec_seg)
         )
-        new_ent.withColumn("_seq", stamp).write.mode("overwrite").parquet(
-            self._path(ent_seg)
-        )
+        ent_out = new_ent.withColumn("_seq", stamp)
+        ent_out.write.mode("overwrite").parquet(self._path(ent_seg))
         committed = {
             "version": 2,
             "seq": seq,
@@ -628,8 +588,13 @@ class IncrementalLinker:
         # the frame outlives mat.close(), and stays readable until the
         # next compact() retires this segment (same VACUUM contract as
         # expiring Iceberg snapshots: materialize before compacting if
-        # you need it longer)
-        return self.spark.read.parquet(self._path(ent_seg)).drop("_seq")
+        # you need it longer). The written schema spares the read-back
+        # its schema-inference job.
+        return (
+            self.spark.read.schema(ent_out.schema)
+            .parquet(self._path(ent_seg))
+            .drop("_seq")
+        )
 
     def compact(self) -> DataFrame | None:
         """Periodic state compaction — the module-docstring tradeoff
@@ -704,9 +669,13 @@ class IncrementalLinker:
         patt = gammas.pattern_counts(scored, fields).toPandas()
         if len(patt):
             zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            edges = matched_from_zeta(scored, zdf, gcols, cfg).select(
-                "a_rec_id", "b_rec_id"
-            )
+            edges = matched_from_zeta(
+                scored,
+                zdf,
+                gcols,
+                threshold=cfg.threshold,
+                deterministic_fields=cfg.deterministic_fields,
+            ).select("a_rec_id", "b_rec_id")
         else:
             edges = records.select(
                 F.col("rec_id").alias("a_rec_id")
@@ -758,7 +727,11 @@ class IncrementalLinker:
             ]
         self._commit_manifest(committed)
         self._gc_unreferenced(committed)
-        return self.spark.read.parquet(self._path(ent_seg)).drop("_seq")
+        return (
+            self.spark.read.schema(new_ent.schema)
+            .parquet(self._path(ent_seg))
+            .drop("_seq")
+        )
 
     # -- streaming wiring ---------------------------------------------------
     def stream_from_files(self, input_dir: str, checkpoint_dir: str, schema):

@@ -1,7 +1,7 @@
 """Round-2 additions: exact LSAP assignment, Damerau-Levenshtein (OSA),
-movers-priors data path, wide 128-bit rec_id, string-id CC +
-dense_long_ids, checkpoint content-fingerprint invalidation,
-within-batch incremental clustering, empty-doc Jaccard guard."""
+movers-priors data path, string-id CC, checkpoint content-fingerprint
+invalidation, within-batch incremental clustering, empty-doc Jaccard
+guard."""
 
 import itertools
 
@@ -192,28 +192,7 @@ def test_movers_priors_from_table_shifts_em(spark):
     assert em_hi.lam > em_lo.lam  # prior pulls the mixing weight
 
 
-# ------------------------------------------------------- wide rec_id
-
-def test_wide_rec_id_pipeline_equivalent_clusters(spark):
-    from fastlink_spark.plans.pipeline import LinkageConfig, link_dedupe
-    from fastlink_spark.sources.fixtures import generate_pages
-
-    pages = spark.createDataFrame(generate_pages(n_base=40).pages)
-
-    def url_clusters(cfg):
-        res = link_dedupe(spark, pages, cfg)
-        rows = res.entities.select("url", "cluster_id").collect()
-        by_c = {}
-        for r in rows:
-            by_c.setdefault(r["cluster_id"], set()).add(r["url"])
-        return {frozenset(v) for v in by_c.values()}
-
-    narrow = url_clusters(LinkageConfig())
-    wide = url_clusters(LinkageConfig(wide_rec_id=True))
-    assert narrow == wide
-
-
-# ------------------------------------------- CC id-genericity + dense ids
+# ------------------------------------------------- CC id-genericity
 
 def test_connected_components_string_ids(spark):
     from fastlink_spark.operators.cluster import connected_components
@@ -224,17 +203,6 @@ def test_connected_components_string_ids(spark):
     nodes = spark.createDataFrame([("a",), ("b",), ("c",), ("x",), ("y",), ("z",)], "id string")
     out = {r["id"]: r["cluster_id"] for r in connected_components(edges, nodes).collect()}
     assert out == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
-
-
-def test_dense_long_ids(spark):
-    from fastlink_spark.operators.cluster import dense_long_ids
-
-    keys = [(f"k{i:04d}",) for i in range(257)]
-    df = spark.createDataFrame(keys * 2, "k string")  # dupes collapse
-    out = dense_long_ids(df, "k").collect()
-    ids = sorted(r["dense_id"] for r in out)
-    assert ids == list(range(257))
-    assert len({r["k"] for r in out}) == 257
 
 
 # ---------------------------------------------- checkpoint fingerprints

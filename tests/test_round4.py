@@ -615,40 +615,6 @@ def test_incremental_batch_replay_is_noop(spark, tmp_path):
     assert linker.entities().count() == 2
 
 
-def test_incremental_wide_rec_id_merge(spark, tmp_path):
-    """wide_rec_id=True (128-bit hex string keys) through the full
-    incremental path INCLUDING a merge event: the relabel union-find
-    and map must handle string labels (the long-typed path raised
-    ValueError here before r4's second review pass)."""
-    from fastlink_spark.plans.pipeline import LinkageConfig
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-    from tests.test_round3 import _RECRAWL_TOKENS, _toy_em
-
-    t1 = " ".join(_RECRAWL_TOKENS)
-    t1p = " ".join(["CHANGED" if i == 20 else t for i, t in enumerate(_RECRAWL_TOKENS)])
-    t2 = " ".join(f"other{i}" for i in range(40))
-    cfg = LinkageConfig(threshold=0.5, wide_rec_id=True)
-    linker = IncrementalLinker(spark, str(tmp_path / "st"), _toy_em(), cfg)
-    linker.process_batch(
-        _mk_pages4(
-            spark,
-            [
-                ("https://hostone.example.com/a", "bridge title x", t1),
-                ("https://hosttwo.example.com/b", "bridge title x", t2),
-            ],
-        )
-    )
-    assert len({r["cluster_id"] for r in linker.entities().collect()}) == 2
-    # bridge batch -> merge event over STRING labels
-    linker.process_batch(
-        _mk_pages4(spark, [("https://hosttwo.example.com/c", "bridge title x", t1p)])
-    )
-    ents = linker.entities().collect()
-    assert len(ents) == 3
-    assert len({r["cluster_id"] for r in ents}) == 1
-    assert all(isinstance(r["cluster_id"], str) and len(r["cluster_id"]) == 32 for r in ents)
-
-
 # ----------------- core-operator review fixes (r4 pass 3)
 
 def test_em_sample_fit_unseen_level_keeps_evidence():
@@ -822,37 +788,3 @@ def test_pairwise_f1_counts_lost_records(spark):
     m = pairwise_f1(entities, labeled)
     # u3 lost: (u1,u3) -> fn; (u2,u3) -> tn; (u1,u2) -> tp
     assert (m["tp"], m["fp"], m["fn"], m["tn"]) == (1, 0, 1, 1)
-
-
-def test_incremental_wide_rec_id_compact(spark, tmp_path):
-    """compact() under wide_rec_id: batch CC over 128-bit hex STRING
-    keys, entities rewritten with string labels, relabel map emptied."""
-    import json
-
-    from fastlink_spark.plans.pipeline import LinkageConfig
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-    from tests.test_round3 import _RECRAWL_TOKENS, _toy_em
-
-    t1 = " ".join(_RECRAWL_TOKENS)
-    t1p = " ".join(["CHANGED" if i == 20 else t for i, t in enumerate(_RECRAWL_TOKENS)])
-    t2 = " ".join(f"other{i}" for i in range(40))
-    cfg = LinkageConfig(threshold=0.5, wide_rec_id=True)
-    linker = IncrementalLinker(spark, str(tmp_path / "st"), _toy_em(), cfg)
-    linker.process_batch(
-        _mk_pages4(
-            spark,
-            [
-                ("https://hostone.example.com/a", "bridge title x", t1),
-                ("https://hosttwo.example.com/b", "bridge title x", t2),
-            ],
-        )
-    )
-    linker.process_batch(
-        _mk_pages4(spark, [("https://hosttwo.example.com/c", "bridge title x", t1p)])
-    )
-    assert linker._read_relabels()  # merge happened over string labels
-    linker.compact()
-    assert linker._read_relabels() == {}  # emptied by the manifest commit
-    ents = linker.entities().collect()
-    assert len(ents) == 3 and len({r["cluster_id"] for r in ents}) == 1
-    assert all(isinstance(r["cluster_id"], str) and len(r["cluster_id"]) == 32 for r in ents)

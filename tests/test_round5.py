@@ -1,7 +1,7 @@
 """Round-5 hardening tests: manifest-pointer atomic incremental-state
 commit (VERDICT r4 item 2), scoped scratch lifecycle (ADVICE r4
-medium), deterministic entities() tiebreak (ADVICE r4 low), legacy
-state migration, scratch-leak warning (VERDICT item 6), and the
+medium), deterministic entities() tiebreak (ADVICE r4 low),
+scratch-leak warning (VERDICT item 6), and the
 randomized incremental-vs-batch equivalence sweep (VERDICT item 5).
 """
 
@@ -308,80 +308,19 @@ def test_rm_path_warns_on_failed_remote_delete(spark, capsys):
     assert "definitely-not-a-scheme://bucket/prefix" in err
 
 
-# --------------------------- legacy migration + read determinism
-
-
-def test_legacy_state_dir_migrates_on_next_commit(spark, tmp_path):
-    """A pre-manifest state dir (append-mode records/ entities/ +
-    meta.json + relabels.json) keeps serving reads, and the first v2
-    commit migrates it: MANIFEST.json appears, side json files are
-    retired, and compact() garbage-collects the legacy dirs."""
-    from fastlink_spark.plans.pipeline import LinkageConfig
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-
-    t1 = " ".join(_RECRAWL_TOKENS)
-    t2 = " ".join(f"other{i}" for i in range(40))
-    cfg = LinkageConfig(threshold=0.5)
-    st = tmp_path / "st"
-    linker = IncrementalLinker(spark, str(st), _toy_em(), cfg)
-    linker.process_batch(
-        _mk_pages4(spark, [("https://hostone.example.com/a", "t", t1)]),
-        batch_id=0,
-    )
-    # demote to the legacy layout: single dirs + side json, no manifest
-    m = _manifest(str(st))
-    for kind in ("records", "entities"):
-        src = [str(st / n) for n in m[kind]]
-        df = spark.read.parquet(*src)
-        df.write.mode("overwrite").parquet(str(st / f"__legacy_{kind}"))
-    import shutil
-
-    for d in list(os.listdir(st)):
-        if d.startswith("seg_"):
-            shutil.rmtree(st / d)
-    for kind in ("records", "entities"):
-        os.rename(st / f"__legacy_{kind}", st / kind)
-    os.remove(st / "MANIFEST.json")
-    with open(st / "meta.json", "w") as f:
-        json.dump({"seq": m["seq"], "last_batch_id": m["last_batch_id"]}, f)
-    with open(st / "relabels.json", "w") as f:
-        json.dump(m["relabels"], f)
-
-    legacy = IncrementalLinker(spark, str(st), _toy_em(), cfg)
-    pre = _ent_rows(legacy)
-    assert len(pre) == 1
-    # replayed batch 0 is still a no-op from legacy meta
-    assert (
-        legacy.process_batch(
-            _mk_pages4(spark, [("https://x.example.com/z", "t", t2)]),
-            batch_id=0,
-        )
-        is None
-    )
-    legacy.process_batch(
-        _mk_pages4(spark, [("https://hosttwo.example.com/b", "t", t2)]),
-        batch_id=1,
-    )
-    assert os.path.exists(st / "MANIFEST.json")
-    assert not os.path.exists(st / "meta.json")
-    assert not os.path.exists(st / "relabels.json")
-    m2 = _manifest(str(st))
-    assert "records" in m2["records"] and "seg_000002_records" in m2["records"]
-    assert len(_ent_rows(legacy)) == 2
-    legacy.compact()
-    assert not os.path.isdir(st / "records")  # legacy dirs retired by GC
-    assert not os.path.isdir(st / "entities")
-    assert len(_ent_rows(legacy)) == 2
+# --------------------------- read determinism
 
 
 def test_entities_tiebreak_deterministic(spark, tmp_path):
-    """Two state rows for one rec_id with EQUAL _seq (legacy pre-seq
-    state / crash-replay duplicates): entities() must serve the
-    content-hash winner — compact()'s exact order (_seq desc,
-    xxhash64 asc) — not a partition-order-dependent row, and
-    cluster_id/url must come from the SAME winning row (ADVICE r4)."""
+    """Two state rows for one rec_id with EQUAL _seq (crash-replay
+    duplicates): entities() must serve the content-hash winner —
+    compact()'s exact order (_seq desc, xxhash64 asc) — not a
+    partition-order-dependent row, and cluster_id/url must come from
+    the SAME winning row (ADVICE r4). Reading the two segments is one
+    multi-path read: at most one schema job, not one per segment."""
     from fastlink_spark.plans.pipeline import LinkageConfig
     from fastlink_spark.streaming.incremental import IncrementalLinker
+    from tests.test_checkpoint import _jobs
 
     st = tmp_path / "st"
     os.makedirs(st)
@@ -404,7 +343,9 @@ def test_entities_tiebreak_deterministic(spark, tmp_path):
             f,
         )
     linker = IncrementalLinker(spark, str(st), _toy_em(), LinkageConfig())
-    got = linker.entities().collect()
+    ent, n_jobs = _jobs(spark, linker.entities)
+    assert n_jobs <= 1
+    got = ent.collect()
     assert len(got) == 1
     # expected winner: min xxhash64(cluster_id, url) — compact()'s order
     h = (

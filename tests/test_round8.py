@@ -76,7 +76,7 @@ def test_matched_from_zeta_one_pass_semantics(spark):
     """One-pass rule == old two-branch union+groupBy(max) semantics on
     a frame covering: FS-only, det-only, both, neither, null det field,
     and a pattern missing from zeta_df (det-only survival)."""
-    from fastlink_spark.plans.pipeline import LinkageConfig, matched_from_zeta
+    from fastlink_spark.plans.pipeline import matched_from_zeta
 
     scored = spark.createDataFrame(
         [
@@ -92,10 +92,15 @@ def test_matched_from_zeta_one_pass_semantics(spark):
         "a_rec_id long, b_rec_id long, a_url_norm string, b_url_norm string, gamma_url_norm int",
     )
     zdf = spark.createDataFrame([(2, 0.9), (0, 0.1)], "gamma_url_norm int, zeta double")
-    cfg = LinkageConfig(threshold=0.85, deterministic_fields=("url_norm",))
     got = {
         (r["a_rec_id"], r["b_rec_id"]): r["zeta"]
-        for r in matched_from_zeta(scored, zdf, ["gamma_url_norm"], cfg).collect()
+        for r in matched_from_zeta(
+            scored,
+            zdf,
+            ["gamma_url_norm"],
+            threshold=0.85,
+            deterministic_fields=("url_norm",),
+        ).collect()
     }
     assert got == {(1, 2): 1.0, (3, 4): 0.9, (5, 6): 1.0, (9, 10): 0.9, (11, 12): 1.0}
 
