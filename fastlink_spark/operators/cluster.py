@@ -10,25 +10,21 @@ propagation, which is what makes it the right choice for web-scale
 chain-y duplicate graphs.
 
 Driver-looped DataFrame program: each round is two shuffles
-(groupBy-min + join); lineage cut per round via the injectable
-``materializer`` (default DISK_ONLY localCheckpoint; pass
-``plans.materialize.parquet_materializer`` for the fault-tolerant
-production shape) so the plan doesn't grow unboundedly. The loop
-stops at the first round whose output is a star forest (every node has
-at most one out-edge and no edge target has one): such an oriented
-edge set is a fixpoint of large-star + small-star, so no round is spent
-only to confirm convergence. The test rides the round's own cut as a
-query observation over the node grouping that dedups the round's
-edges, so it costs no Spark job. The edge-set fixpoint check (count +
-order-insensitive xxhash64 checksum) stays as a second stop. An
-optional on-disk checkpoint callback lets the pipeline persist each
-round for resume (BASELINE.json north_rule).
+(groupBy-min + join), cut per round by the injectable ``materializer``
+(default: a parquet cut in a fresh scratch namespace, plans.materialize)
+so the plan doesn't grow unboundedly. The loop stops at the first round
+whose output is a star forest (every node has at most one out-edge and
+no edge target has one): such an oriented edge set is a fixpoint of
+large-star + small-star, so no round is spent only to confirm
+convergence. The test rides the round's own cut as a query observation
+over the node grouping that dedups the round's edges, so it costs no
+Spark job. The edge-set fixpoint check (count + order-insensitive
+xxhash64 checksum) stays as a second stop.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -120,8 +116,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     *,
-    max_iter: int | None = None,
-    on_round: Callable[[int, DataFrame], DataFrame] | None = None,
     materializer: Materializer | None = None,
 ) -> DataFrame:
     """Edges ``(u, v)`` (any orientation; any orderable id type — long
@@ -130,11 +124,7 @@ def connected_components(
 
     `nodes`: optional single-column ('id') universe; nodes without edges
     come back as singleton clusters (cluster_id = id).
-    `on_round`: hook called with (round_idx, edges) after each
-    large+small round; may return a re-materialized DataFrame (used by
-    the pipeline to checkpoint rounds to disk for resume).
-    `materializer`: per-round lineage cut (plans.materialize; default
-    DISK_ONLY localCheckpoint, parquet for the production shape).
+    `materializer`: per-round lineage cut (see the module docstring).
     """
     mat = resolve(materializer)
     e0 = edges.select(
@@ -151,12 +141,11 @@ def connected_components(
     e0, _fp0 = fingerprint_observation(e0)
     e = mat(e0, "cc_edges")
     n_edges, prev = _fp0(fallback_df=e)
-    if max_iter is None:
-        # large/small-star converges in O(log^2 n) worst case, ~log n in
-        # practice; generous bound, asserted below.
-        max_iter = max(10, 2 * int(math.log2(max(n_edges, 2))) + 10)
+    # large/small-star converges in O(log^2 n) worst case, ~log n in
+    # practice; generous bound, asserted below.
+    max_iter = max(10, 2 * int(math.log2(max(n_edges, 2))) + 10)
     converged = False
-    for it in range(1, max_iter + 1):
+    for _ in range(max_iter):
         # large-star output is strictly oriented + distinct, so
         # small-star skips its re-orientation exchange (see
         # _small_star_by_node)
@@ -165,10 +154,6 @@ def connected_components(
         )
         ss, _fp = fingerprint_observation(_node_edges(by_node))
         e2 = mat(ss, "cc_round")
-        if on_round is not None:
-            maybe = on_round(it, e2)
-            if maybe is not None:
-                e2 = maybe
         cur = _fp(fallback_df=e2)[1]
         e = e2
         # Small-star output is oriented high->low (u > v). Such an edge

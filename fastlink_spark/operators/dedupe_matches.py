@@ -14,11 +14,13 @@ over pairs.
 Exact LSAP (``method='lsap'`` == linprog=TRUE): connected components of
 the pair graph partition the problem into independent bipartite blocks;
 each block is solved exactly with a pure-NumPy Hungarian (shortest
-augmenting path, O(n^3) — scipy/lpSolve absent in this container) inside
-one ``applyInPandas`` pass. Components are almost always tiny (a record
-matches a handful of candidates); blocks above ``max_lsap_block`` nodes
-fall back to within-block greedy (documented bound — an adversarial
-giant bipartite clique would otherwise pin one task at O(n^3)).
+augmenting path, O(n^3) — scipy/lpSolve absent in this container) in
+one grouped-map pass (``_by_component``, which also finishes greedy
+chains longer than ``MAX_ROUNDS``). Components are almost always tiny
+(a record matches a handful of candidates); blocks above
+``MAX_LSAP_BLOCK`` nodes fall back to within-block greedy (documented
+bound — an adversarial giant bipartite clique would otherwise pin one
+task at O(n^3)).
 """
 
 from __future__ import annotations
@@ -29,6 +31,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.materialize import Materializer, resolve
+
+MAX_ROUNDS = 20  # mutual-best rounds before the per-component greedy tail
+MAX_LSAP_BLOCK = 2000  # component nodes (a + b) above which lsap runs greedy
 
 
 def _hungarian_min(cost: np.ndarray) -> list[tuple[int, int]]:
@@ -101,18 +106,12 @@ def _solve_block_lsap(pdf: pd.DataFrame, id_a: str, id_b: str, score: str) -> pd
     return pdf.loc[mask, [id_a, id_b, score]]
 
 
-def _solve_block_greedy(
-    pdf: pd.DataFrame,
-    id_a: str,
-    id_b: str,
-    score: str,
-    shared_id_space: bool = False,
-) -> pd.DataFrame:
+def _solve_block_greedy(pdf: pd.DataFrame, id_a: str, id_b: str, score: str) -> pd.DataFrame:
     """Within-block sequential greedy (same semantics as the
-    distributed fixpoint, including the side-namespace rule)."""
+    distributed fixpoint: the two sides are separate id namespaces)."""
     pdf = pdf.sort_values([score, id_a, id_b], ascending=[False, True, True])
     used_a: set = set()
-    used_b = used_a if shared_id_space else set()
+    used_b: set = set()
     rows = []
     for r in pdf.itertuples(index=False):
         a, b = getattr(r, id_a), getattr(r, id_b)
@@ -145,46 +144,31 @@ def _side_key(side: str, col: str):
     return F.concat(F.lit(side), F.col(col).cast("string"))
 
 
-def dedupe_matches_lsap(
-    pairs: DataFrame,
-    *,
-    id_a: str = "a_rec_id",
-    id_b: str = "b_rec_id",
-    score: str = "zeta",
-    max_lsap_block: int = 2000,
-    materializer: Materializer | None = None,
+def _by_component(
+    pairs: DataFrame, id_a: str, id_b: str, score: str, solve, materializer: Materializer | None
 ) -> DataFrame:
-    """Exact 1:1 assignment (``dedupeMatches(linprog=TRUE)``): maximize
-    total score subject to each a/b id matched at most once. Distributed
-    shape: CC over the pair graph -> one applyInPandas per component,
-    each solved with the exact Hungarian (greedy fallback above
-    max_lsap_block nodes)."""
+    """Run ``solve(pdf, id_a, id_b, score)`` once per connected
+    component of the pair graph, in one grouped-map pass; returns the
+    rows it keeps. CC runs over side-tagged node keys: the two sides
+    are separate id namespaces, so a-side 5 and b-side 5 must be two
+    nodes. Raw ids would glue unrelated blocks into one component that
+    can cross MAX_LSAP_BLOCK and be solved greedily instead of exactly."""
+    # looked up per call, so a wrapper patched onto the module sees it
     from .cluster import connected_components
 
-    slim = _canonical_pairs(pairs, id_a, id_b, score)
-    # CC over side-tagged node keys: the two sides are separate id
-    # namespaces, so a-side 5 and b-side 5 must be two nodes. Raw ids
-    # would glue unrelated blocks into one component that can cross
-    # max_lsap_block and be solved greedily instead of exactly.
     comp = connected_components(
-        slim.select(_side_key("a:", id_a), _side_key("b:", id_b)),
+        pairs.select(_side_key("a:", id_a), _side_key("b:", id_b)),
         materializer=materializer,
     )
-    tagged = slim.withColumn("__ka", _side_key("a:", id_a)).join(
+    tagged = pairs.withColumn("__ka", _side_key("a:", id_a)).join(
         comp.select(F.col("id").alias("__ka"), F.col("cluster_id").alias("__comp")),
         "__ka",
     )
 
-    out_schema = slim.schema
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return solve(pdf.drop(columns=["__ka", "__comp"]), id_a, id_b, score)
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["__ka", "__comp"])
-        n_nodes = pdf[id_a].nunique() + pdf[id_b].nunique()
-        if n_nodes > max_lsap_block:
-            return _solve_block_greedy(pdf, id_a, id_b, score)
-        return _solve_block_lsap(pdf, id_a, id_b, score)
-
-    return tagged.groupBy("__comp").applyInPandas(solve, schema=out_schema)
+    return tagged.groupBy("__comp").applyInPandas(run, schema=pairs.schema)
 
 
 def dedupe_matches(
@@ -193,25 +177,18 @@ def dedupe_matches(
     id_a: str = "a_rec_id",
     id_b: str = "b_rec_id",
     score: str = "zeta",
-    max_rounds: int = 20,
     method: str = "greedy",
-    shared_id_space: bool = False,
     materializer: Materializer | None = None,
 ) -> DataFrame:
     """Matched pairs -> 1:1 subset. method='greedy' (mutual-best
     fixpoint, the reference default) or 'lsap' (exact linear-sum
-    assignment, ``linprog=TRUE``).
+    assignment, ``linprog=TRUE``: maximize total score subject to each
+    a/b id matched at most once).
 
-    ``shared_id_space``: False (default) treats the a-side and b-side
-    as SEPARATE id namespaces — the two-table linkage semantics of the
-    reference's fastLink(dfA, dfB) flow, and what the lsap reduction
-    assumes (a numeric id appearing on both sides is two different
-    records). True pools both sides into one namespace (single-table
-    self-dedupe: a record matched on either side is consumed on both);
-    greedy only — the bipartite LSAP reduction cannot express it.
-    r5 review: the fixpoint used to pool unconditionally while its own
-    tail fallback and lsap separated, silently dropping valid pairs
-    whenever the two tables' id spaces overlap.
+    The a-side and b-side are SEPARATE id namespaces — the two-table
+    linkage semantics of the reference's fastLink(dfA, dfB) flow, and
+    what the lsap reduction assumes (a numeric id appearing on both
+    sides is two different records).
 
     Pairs with non-positive score never match, and duplicate
     (id_a, id_b) rows collapse to their best score (_canonical_pairs)
@@ -221,15 +198,18 @@ def dedupe_matches(
     """
     if method not in ("greedy", "lsap"):
         raise ValueError(f"unknown method {method!r}: use 'greedy' or 'lsap'")
+    slim = _canonical_pairs(pairs, id_a, id_b, score)
     if method == "lsap":
-        if shared_id_space:
-            raise ValueError(
-                "shared_id_space=True is greedy-only: the bipartite LSAP "
-                "reduction cannot express a pooled id namespace"
-            )
-        return dedupe_matches_lsap(
-            pairs, id_a=id_a, id_b=id_b, score=score, materializer=materializer
-        )
+        # bound on the driver: the solver runs on workers, which
+        # re-import this module and would read the global afresh
+        max_block = MAX_LSAP_BLOCK
+
+        def solve(pdf: pd.DataFrame, id_a: str, id_b: str, score: str) -> pd.DataFrame:
+            n_nodes = pdf[id_a].nunique() + pdf[id_b].nunique()
+            block = _solve_block_greedy if n_nodes > max_block else _solve_block_lsap
+            return block(pdf, id_a, id_b, score)
+
+        return _by_component(slim, id_a, id_b, score, solve, materializer)
     from ..plans.checkpoint import observation
 
     mat = resolve(materializer)
@@ -242,13 +222,11 @@ def dedupe_matches(
         out = mat(observed, name)
         return out, rows(fallback_df=out)["rows"]
 
-    remaining, n_remaining = cut(
-        _canonical_pairs(pairs, id_a, id_b, score), "greedy_remaining"
-    )
+    remaining, n_remaining = cut(slim, "greedy_remaining")
     accepted: DataFrame | None = None
 
     exhausted = True
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         if n_remaining == 0:
             exhausted = False
             break
@@ -269,27 +247,19 @@ def dedupe_matches(
         # Roll the accumulated union through a retained cut every round:
         # `accepted` only ever references the NEWEST 'greedy_accepted'
         # cut, or after the first round the first 'greedy_mutual' cut
-        # itself (already a cut: no copy), so a parquet materializer's
-        # retention (keep newest keep_per_name >= 2 cuts per name) can
-        # never delete data still reachable from it — round 2 re-cuts
-        # `accepted` before round 3's mutual cut deletes round 1's.
-        # Unioning raw mutual cuts instead would keep round-0's
-        # 'greedy_mutual' parquet live while round-2's write deletes it
-        # (materialize.py retention contract).
+        # itself (already a cut: no copy). A parquet materializer keeps
+        # only the newest two cuts of each name, so it never deletes
+        # data still reachable from `accepted`: round 2 re-cuts it
+        # before round 3's mutual cut deletes round 1's. Unioning raw
+        # mutual cuts instead would keep round 0's 'greedy_mutual'
+        # parquet live while round 2's write deletes it.
         accepted = (
             mutual
             if accepted is None
             else mat(accepted.unionByName(mutual), "greedy_accepted")
         )
-        if shared_id_space:
-            used_a = used_b = (
-                mutual.select(F.col(id_a).alias("uid"))
-                .union(mutual.select(F.col(id_b).alias("uid")))
-                .distinct()
-            )
-        else:
-            used_a = mutual.select(F.col(id_a).alias("uid")).distinct()
-            used_b = mutual.select(F.col(id_b).alias("uid")).distinct()
+        used_a = mutual.select(F.col(id_a).alias("uid")).distinct()
+        used_b = mutual.select(F.col(id_b).alias("uid")).distinct()
         remaining, n_remaining = cut(
             remaining.join(used_a.withColumnRenamed("uid", id_a), id_a, "left_anti")
             .join(used_b.withColumnRenamed("uid", id_b), id_b, "left_anti")
@@ -298,30 +268,15 @@ def dedupe_matches(
         )
 
     if exhausted and n_remaining > 0:
-        # Dependency chains longer than max_rounds accept one pair per
+        # Dependency chains longer than MAX_ROUNDS accept one pair per
         # round; dropping the viable remainder would silently diverge
         # from sequential greedy. Finish the (by now small) residue
-        # exactly: per-component applyInPandas sequential greedy —
-        # identical semantics, one pass, bounded by component size.
-        from .cluster import connected_components
-
-        comp = connected_components(
-            remaining.select(id_a, id_b), materializer=materializer
-        )
-        tagged = remaining.join(
-            comp.select(F.col("id").alias(id_a), F.col("cluster_id").alias("__comp")),
-            id_a,
-        )
-        out_schema = remaining.schema
-
-        def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _solve_block_greedy(
-                pdf.drop(columns=["__comp"]), id_a, id_b, score,
-                shared_id_space=shared_id_space,
-            )
-
+        # exactly: per-component sequential greedy — identical
+        # semantics, one pass, bounded by component size.
         tail = mat(
-            tagged.groupBy("__comp").applyInPandas(solve, schema=out_schema),
+            _by_component(
+                remaining, id_a, id_b, score, _solve_block_greedy, materializer
+            ),
             "greedy_tail",
         )
         accepted = (

@@ -40,6 +40,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 Materializer = Callable[[DataFrame, str], DataFrame]
+KEEP_PER_NAME = 2  # newest cuts of one name a parquet materializer keeps
 
 
 def disk_only(df: DataFrame, name: str = "") -> DataFrame:
@@ -81,19 +82,19 @@ def _rm_path(spark, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def parquet_materializer(root: str, keep_per_name: int = 2) -> Materializer:
+def parquet_materializer(root: str) -> Materializer:
     """Production-shape cut: parquet write + read-back under ``root``
     (any Hadoop-compatible URI — a local dir here, an object-store
     prefix / Iceberg scratch namespace on a cluster). Repeated cuts
     with the same name get an incrementing suffix (an operator may cut
     several rounds under one hint).
 
-    Retention: only the newest ``keep_per_name`` cuts of each name are
+    Retention: only the newest ``KEEP_PER_NAME`` cuts of each name are
     kept on disk — when cut N is written, cut N-keep is deleted. An
     iterative operator's round N-2 data fed round N-1's write and
     nothing reads it afterwards, so without this a 15-round CC would
     hold 15 full edge-set copies of dead scratch. Contract: a cut's
-    returned DataFrame must not be re-read after ``keep_per_name``
+    returned DataFrame must not be re-read after ``KEEP_PER_NAME``
     newer cuts of the SAME name (iterative operators roll their
     accumulators through retained cuts — see dedupe_matches)."""
     counts: dict[str, int] = {}
@@ -107,7 +108,7 @@ def parquet_materializer(root: str, keep_per_name: int = 2) -> Materializer:
         # the written schema read back (file reads make it nullable,
         # exactly what inference would find) — no inference job
         out = df.sparkSession.read.schema(df.schema).parquet(path)
-        old = idx - keep_per_name
+        old = idx - KEEP_PER_NAME
         if old >= 0:
             _rm_path(df.sparkSession, _join(root, f"{base}_{old:03d}"))
         return out
@@ -122,7 +123,7 @@ _app_scratch: dict[str, dict] = {}
 # inv_<n> subdirectory and fresh suffix counters. Isolation in BOTH
 # directions is load-bearing: unique subdirs mean two invocations
 # cutting the same hint can never overwrite each other's live scratch,
-# and retention (keep_per_name) only ever deletes cuts WITHIN one
+# and retention (KEEP_PER_NAME) only ever deletes cuts WITHIN one
 # invocation — a later bare `dedupe_matches()` call can't delete the
 # parquet backing the DataFrame a caller still holds from an earlier
 # call (cuts of the SAME name never span invocations; the old

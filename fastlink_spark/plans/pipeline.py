@@ -183,12 +183,6 @@ def matched_from_zeta(
     for c in gcols:
         eq = scored[c].eqNullSafe(zeta_df[c])
         cond = eq if cond is None else (cond & eq)
-    if not deterministic_fields:
-        return (
-            scored.join(F.broadcast(zeta_df), cond, "inner")
-            .where(F.col("zeta") >= threshold)
-            .select(id_a, id_b, "zeta")
-        )
     # ONE pass over the pair stream (r8 optimization — guide §2.3/§2.4):
     # the old shape scanned `scored` twice (FS branch + deterministic
     # branch) and paid a union + groupBy(max) exchange to merge them.
@@ -209,7 +203,9 @@ def matched_from_zeta(
             & (F.col(f"a_{f}") == F.col(f"b_{f}"))
         )
         det_cond = eq if det_cond is None else (det_cond & eq)
-    det_flag = F.coalesce(det_cond, F.lit(False))
+    # no fields: Spark folds the constant away (the OR, the CASE) and
+    # turns the left join into the plain inner join
+    det_flag = F.lit(False) if det_cond is None else F.coalesce(det_cond, F.lit(False))
     return (
         scored.join(F.broadcast(zeta_df), cond, "left")
         .where((F.col("zeta") >= threshold) | det_flag)

@@ -4,6 +4,7 @@
 import numpy as np
 
 from fastlink_spark.operators.cluster import connected_components
+from fastlink_spark.plans.materialize import disk_only
 
 
 def _uf_oracle(edges, nodes):
@@ -53,7 +54,7 @@ def test_adversarial_long_chain(spark):
     n = 256
     edges = [(i, i + 1) for i in range(n - 1)]
     e = spark.createDataFrame(edges, "u long, v long")
-    labels = connected_components(e, max_iter=25).collect()
+    labels = connected_components(e).collect()
     assert {r["cluster_id"] for r in labels} == {0}
     assert len(labels) == n
 
@@ -66,6 +67,18 @@ def _labels(spark, edges, nodes=None, **kw):
     e = spark.createDataFrame(edges, "u long, v long")
     nd = None if nodes is None else spark.createDataFrame([(n,) for n in nodes], "id long")
     return {r["id"]: r["cluster_id"] for r in connected_components(e, nd, **kw).collect()}
+
+
+def _recording(cuts):
+    """Materializer that appends each 'cc_round' cut to ``cuts``."""
+
+    def mat(df, name):
+        out = disk_only(df, name)
+        if name == "cc_round":
+            cuts.append(out)
+        return out
+
+    return mat
 
 
 def _star_forest(rng, ids, n_stars):
@@ -125,8 +138,8 @@ def test_star_forest_input_converges_in_one_round(spark):
     rng = np.random.default_rng(3)
     edges = _star_forest(rng, list(range(500, 620)), 9)
     rounds = []
-    got = _labels(spark, edges, on_round=lambda it, e: rounds.append(it))
-    assert rounds == [1]
+    got = _labels(spark, edges, materializer=_recording(rounds))
+    assert len(rounds) == 1
     assert got == _uf_oracle(edges, sorted({x for e in edges for x in e}))
 
 
@@ -135,12 +148,9 @@ def test_chain_rounds_stop_at_star_forest(spark):
     first round whose cut is a star forest (the last productive one),
     so no round repeats the previous round's edge set."""
     edges = [(i, i + 1) for i in range(64)]
-    fps = []
-
-    def on_round(it, e):
-        fps.append(sorted(map(tuple, e.collect())))
-
-    got = _labels(spark, edges, on_round=on_round)
+    cuts = []
+    got = _labels(spark, edges, materializer=_recording(cuts))
+    fps = [sorted(map(tuple, e.collect())) for e in cuts]
     assert set(got.values()) == {0} and len(got) == 65
     assert fps[-1] == [(i, 0) for i in range(1, 65)]
     assert all(a != b for a, b in zip(fps, fps[1:]))

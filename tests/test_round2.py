@@ -82,33 +82,35 @@ def test_lsap_matches_brute_force_fuzz(spark):
         assert tot == pytest.approx(_brute_force_best(rows), abs=1e-9), f"trial {trial}"
 
 
-def test_lsap_disconnected_components_and_fallback(spark):
-    from fastlink_spark.operators.dedupe_matches import dedupe_matches_lsap
+def test_lsap_disconnected_components_and_fallback(spark, monkeypatch):
+    from fastlink_spark.operators import dedupe_matches as dm
+    from fastlink_spark.operators.dedupe_matches import dedupe_matches
 
     rows = [(1, 101, 0.9), (1, 102, 0.8), (2, 101, 0.8), (50, 500, 0.4), (60, 600, 0.7)]
     pairs = spark.createDataFrame(rows, "a_rec_id long, b_rec_id long, zeta double")
-    out = {(r.a_rec_id, r.b_rec_id) for r in dedupe_matches_lsap(pairs).collect()}
+    out = {(r.a_rec_id, r.b_rec_id) for r in dedupe_matches(pairs, method="lsap").collect()}
     assert out == {(1, 102), (2, 101), (50, 500), (60, 600)}
     # oversized component falls back to greedy (still 1:1, deterministic)
-    fb = dedupe_matches_lsap(pairs, max_lsap_block=2).collect()
+    monkeypatch.setattr(dm, "MAX_LSAP_BLOCK", 2)
+    fb = dedupe_matches(pairs, method="lsap").collect()
     assert len({r.a_rec_id for r in fb}) == len(fb)
+    assert {(r.a_rec_id, r.b_rec_id) for r in fb} == {(1, 101), (50, 500), (60, 600)}
 
 
-def test_lsap_components_keep_sides_apart(spark):
+def test_lsap_components_keep_sides_apart(spark, monkeypatch):
     """a-side and b-side ids are separate namespaces, also for the CC
     that splits the problem into blocks: a chain whose b-side ids reach
     the block's a-side id 10 must not glue the two into one component
-    (that component would exceed max_lsap_block and be solved greedily,
+    (that component would exceed MAX_LSAP_BLOCK and be solved greedily,
     total 0.9, instead of exactly, total 1.6)."""
-    from fastlink_spark.operators.dedupe_matches import dedupe_matches_lsap
+    from fastlink_spark.operators import dedupe_matches as dm
+    from fastlink_spark.operators.dedupe_matches import dedupe_matches
 
     block = [(10, 900001, 0.9), (10, 900002, 0.8), (900003, 900001, 0.8)]
     chain = [(i, i + 1, 0.5) for i in range(10)]
     pairs = spark.createDataFrame(block + chain, "a_rec_id long, b_rec_id long, zeta double")
-    out = {
-        (r.a_rec_id, r.b_rec_id)
-        for r in dedupe_matches_lsap(pairs, max_lsap_block=5).collect()
-    }
+    monkeypatch.setattr(dm, "MAX_LSAP_BLOCK", 5)
+    out = {(r.a_rec_id, r.b_rec_id) for r in dedupe_matches(pairs, method="lsap").collect()}
     assert out == {(10, 900002), (900003, 900001)} | {(a, b) for a, b, _ in chain}
 
 

@@ -66,7 +66,7 @@ def test_name_reweight_renorm_no_driver_collect(spark, monkeypatch):
 
 def test_greedy_dedupe_with_parquet_retention(spark, tmp_path):
     """Multi-round greedy 1:1 assignment under a parquet materializer
-    with keep_per_name=2: the accepted union must roll through retained
+    keeping two cuts per name: the accepted union must roll through retained
     cuts so no round's output references deleted parquet. The chain
     a1>a2>a3>a4 forces one acceptance per round (3+ productive rounds,
     which deletes the round-0 'greedy_mutual' dir before the end)."""
@@ -81,7 +81,7 @@ def test_greedy_dedupe_with_parquet_retention(spark, tmp_path):
         if i < 4:
             rows.append((i + 1, i, score - 0.005 - 0.01 * i))
     pairs = spark.createDataFrame(rows, "a_rec_id long, b_rec_id long, zeta double")
-    mat = parquet_materializer(str(tmp_path), keep_per_name=2)
+    mat = parquet_materializer(str(tmp_path))
     out = dedupe_matches(pairs, materializer=mat).collect()
     got = {(r["a_rec_id"], r["b_rec_id"]) for r in out}
     assert got == {(i, i) for i in range(5)}
@@ -104,7 +104,7 @@ def test_checkpoint_manager_isolates_invocations(spark, tmp_path):
     df = spark.range(3)
     out1 = m1(df, "cut")
     m2(df, "cut")
-    # 3 more cuts under the same hint in invocation 2: keep_per_name
+    # 3 more cuts under the same hint in invocation 2: KEEP_PER_NAME
     # retention must only touch inv_0001's own cuts
     for _ in range(3):
         m2(df, "cut")
@@ -173,7 +173,7 @@ def test_scratch_invocations_isolated_from_retention(spark):
     """Three bare operator invocations cutting the SAME hint must not
     delete each other's scratch: the first invocation's returned
     DataFrame is still readable after two later invocations write two
-    newer cuts of that name (the keep_per_name=2 deletion horizon)."""
+    newer cuts of that name (the KEEP_PER_NAME=2 deletion horizon)."""
     from fastlink_spark.plans import materialize
 
     outs = []
@@ -707,10 +707,11 @@ def test_embedding_plane_count_validated(spark):
 
 # ----------------- review pass 4 fixes
 
-def test_greedy_long_chain_exceeds_max_rounds(spark):
-    """A dependency chain longer than max_rounds must NOT silently drop
+def test_greedy_long_chain_exceeds_max_rounds(spark, monkeypatch):
+    """A dependency chain longer than MAX_ROUNDS must NOT silently drop
     its tail: the residual per-component greedy finishes it with exact
     sequential-greedy semantics."""
+    from fastlink_spark.operators import dedupe_matches as dm
     from fastlink_spark.operators.dedupe_matches import dedupe_matches
 
     rows = []
@@ -721,14 +722,10 @@ def test_greedy_long_chain_exceeds_max_rounds(spark):
         if i < 7:
             rows.append((i + 1, i, 0.98 - 0.02 * i))
     pairs = spark.createDataFrame(rows, "a_rec_id long, b_rec_id long, zeta double")
-    full = {
-        (r["a_rec_id"], r["b_rec_id"])
-        for r in dedupe_matches(pairs, max_rounds=50).collect()
-    }
-    capped = {
-        (r["a_rec_id"], r["b_rec_id"])
-        for r in dedupe_matches(pairs, max_rounds=3).collect()
-    }
+    monkeypatch.setattr(dm, "MAX_ROUNDS", 50)
+    full = {(r["a_rec_id"], r["b_rec_id"]) for r in dedupe_matches(pairs).collect()}
+    monkeypatch.setattr(dm, "MAX_ROUNDS", 3)
+    capped = {(r["a_rec_id"], r["b_rec_id"]) for r in dedupe_matches(pairs).collect()}
     assert full == {(i, i) for i in range(8)}
     assert capped == full  # tail finished, not dropped
 

@@ -503,8 +503,7 @@ def test_ivf_refine_survives_null_low_id_seeds(spark):
 def test_greedy_separate_side_namespaces(spark):
     """An id appearing on BOTH sides is two different records under the
     default two-table semantics: the old pooled 'used' set wrongly
-    eliminated viable pairs (r5 review scenario). shared_id_space=True
-    restores single-table pooling for all greedy paths."""
+    eliminated viable pairs (r5 review scenario)."""
     from fastlink_spark.operators.dedupe_matches import dedupe_matches
 
     rows = [
@@ -524,12 +523,6 @@ def test_greedy_separate_side_namespaces(spark):
         for r in dedupe_matches(pairs, method="lsap").collect()
     }
     assert got_l == got
-    # pooled namespace: accepting (2,5) consumes record 5 entirely
-    pooled = {
-        (r["a_rec_id"], r["b_rec_id"])
-        for r in dedupe_matches(pairs, shared_id_space=True).collect()
-    }
-    assert (5, 72) not in pooled and (9, 74) in pooled and (2, 5) in pooled
 
 
 def test_dedupe_matches_shared_contract_and_validation(spark):
@@ -545,8 +538,6 @@ def test_dedupe_matches_shared_contract_and_validation(spark):
         assert [(r["a_rec_id"], r["b_rec_id"], r["zeta"]) for r in out] == [(1, 10, 0.9)]
     with pytest.raises(ValueError, match="unknown method"):
         dedupe_matches(pairs, method="linprog")
-    with pytest.raises(ValueError, match="greedy-only"):
-        dedupe_matches(pairs, method="lsap", shared_id_space=True)
 
 
 def test_emlink_log_grid_guard():
