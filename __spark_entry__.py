@@ -710,11 +710,11 @@ def q30_cluster_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes features + argmin assignment from injected centroid
     literals (identical left-associated double op order). k=8, 8 Lloyd
     iterations, md5-ordered deterministic init (recomputable in plain
-    Python, unlike xxhash64 — the production default)."""
+    Python)."""
     from fastlink_spark.operators.cluster_match import cluster_match
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    out = cluster_match(docs, "text", k=8, id_col="doc_id", n_iter=8, init="md5")
+    out = cluster_match(docs, "text", k=8, id_col="doc_id", n_iter=8)
     return out.select("doc_id", "cluster")
 
 

@@ -15,21 +15,16 @@ and DuckDB recomputes the assignment from injected literals).
 
 Scale shape: each Lloyd iteration is one map-side-combining groupBy
 over k×28 longs — shuffle volume is O(k·partitions), independent of
-row count. Assignment is pure whole-stage codegen (k·27 double terms,
-~3x duplicated by the argmin/NaN-guard structure) up to
-``CODEGEN_MAX_TERMS`` EFFECTIVE terms — a limit calibrated r6 to sit
-under the measured janino compiler cliff (~1400 effective terms on
-this Spark 4.1.2 / JDK 17 box; see the constant's comment), past
-which Spark silently falls back to interpreted eval. Beyond the
-limit, assignment routes through a broadcast-centroid Arrow
-pandas-UDF NumPy argmin instead. The two paths are BIT-IDENTICAL by construction: the
-NumPy kernel accumulates (x_i−c_i)² left-associated in the same fixed
-dim order as the codegen ``reduce(add, terms)`` (0.0+t0 == t0 exactly
-for the non-negative squared terms), and both argmins take the FIRST
-minimum — so the fitted centroids do not depend on which path ran,
-and the q30 hard oracle (k=8, codegen path) pins both. Letter counts
-are case-pair character classes (``[aA]``), never locale lowercasing,
-so JVM / Python / DuckDB agree codepoint-for-codepoint.
+row count. Assignment is one kernel, ``assign_clusters``: a
+broadcast-centroid Arrow pandas-UDF NumPy argmin whose distances
+accumulate (x_i−c_i)² left-associated in fixed dim order and whose
+argmin takes the FIRST minimum (ties -> lowest cluster id). The
+centroids ride the UDF closure, so no plan embeds them as literals
+and no round pays a compile that grows with k. The q30 hard oracle
+pins this kernel against a frozen NumPy twin and a DuckDB argmin.
+Letter counts are case-pair character classes (``[aA]``), never
+locale lowercasing, so JVM / Python / DuckDB agree
+codepoint-for-codepoint.
 
 Deterministic blocking remains the pipeline default (BASELINE.json:6 —
 host + MinHash bands); this operator is the optional clusterMatch
@@ -38,8 +33,7 @@ analogue for schema-free string blocking.
 
 from __future__ import annotations
 
-import operator
-from functools import reduce
+import math
 
 import numpy as np
 import pandas as pd
@@ -50,22 +44,6 @@ from ..plans.materialize import Materializer, resolve
 
 LETTERS = "abcdefghijklmnopqrstuvwxyz"
 N_DIMS = len(LETTERS) + 1  # 26 letter counts + total length
-# EFFECTIVE term count above this -> broadcast-centroid pandas-UDF
-# path. Effective terms = k * N_DIMS * dup, where dup is how many
-# times the k-distance array is repeated in the final expression:
-# x3 for assignment (array_position(arr, m) + m := array_min(arr)
-# appearing twice through the NaN guard), x2 for the seeding statistic
-# (array_min duplicated by its NaN guard). Calibrated r6 on this
-# Spark 4.1.2 / JDK 17 box: janino compiles the assignment through
-# k=16 (16*27*3 = 1296 eff. terms) and fails from k=18 (1458); the
-# seeding pool query compiles through 26 seeds (1404) and fails from
-# 28 (1512) — one ~1400-term compiler cliff, duplication factors
-# confirmed by the two cliffs landing at the same effective count.
-# Past the cliff Spark falls back to INTERPRETED eval (silent, logged
-# ERROR) — correct values, ~10x slower per row at scale, which is
-# exactly when the Arrow pandas argmin should take over instead.
-# 1100 leaves ~25% margin below the measured cliff.
-CODEGEN_MAX_TERMS = 1_100
 _NP_CHUNK = 2_048  # rows per (chunk, k) distance block (~k*16KB each)
 
 
@@ -102,40 +80,24 @@ def _letter_features_udf():
     return _udf
 
 
-def letter_features(df: DataFrame, col: str, out: str = "lf_vec") -> DataFrame:
-    """27-dim integer embedding: count of [aA], [bB], ... [zZ] plus
-    total length (the reference's alphabetical encoding, kept integer
-    so downstream sums are exact). Computed by a vectorized Arrow UDF
-    (_letter_features_udf) — value-identical to the original 26-regex
-    expression form, ~one pass over the text instead of 26."""
+def letter_features(df: DataFrame, col: str) -> DataFrame:
+    """Adds ``lf_vec``, the 27-dim integer embedding: count of [aA],
+    [bB], ... [zZ] plus total length (the reference's alphabetical
+    encoding, kept integer so downstream sums are exact). Computed by
+    a vectorized Arrow UDF (_letter_features_udf) — value-identical to
+    the original 26-regex expression form, ~one pass over the text
+    instead of 26."""
     s = F.coalesce(F.col(col), F.lit(""))
-    return df.withColumn(out, _letter_features_udf()(s))
-
-
-def _dist(vec_col: str, cent: list[float]):
-    """Squared distance, left-associated double adds in fixed dim order
-    (the NumPy twin and the DuckDB oracle replicate this op order for
-    bit-equal results)."""
-    terms = []
-    for i, c in enumerate(cent):
-        # try_element_at: ANSI element_at THROWS on short arrays, and
-        # codegen subexpression elimination can hoist the access above
-        # the usable-vector size guard in a combined filter (r6 review:
-        # a 25-element vector crashed the Lloyd stage through exactly
-        # that hoist). NULL out-of-range -> null distance -> null
-        # cluster, which every consumer already handles.
-        d = F.try_element_at(F.col(vec_col), F.lit(i + 1)).cast("double") - F.lit(float(c))
-        terms.append(d * d)
-    return reduce(operator.add, terms)
+    return df.withColumn("lf_vec", _letter_features_udf()(s))
 
 
 def _np_dists(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-    """(n,k) squared distances, accumulated LEFT-ASSOCIATED over dims —
-    the exact IEEE op order of the codegen ``reduce(add, terms)``
-    expression (acc starts at 0.0; 0.0+t == t for the non-negative
-    squared terms), so both assignment paths agree bit-for-bit. A
-    np.sum over the dim axis would pairwise-sum and drift in the last
-    ulp, which is enough to flip an argmin tie."""
+    """(n,k) squared distances, accumulated LEFT-ASSOCIATED over dims
+    in fixed dim order (acc starts at 0.0; 0.0+t == t for the
+    non-negative squared terms) — the IEEE op order the q30 oracle's
+    NumPy twin and DuckDB sum replicate, so all three agree
+    bit-for-bit. A np.sum over the dim axis would pairwise-sum and
+    drift in the last ulp, which is enough to flip an argmin tie."""
     acc = np.zeros((X.shape[0], C.shape[0]))
     for i in range(N_DIMS):
         d = X[:, None, i] - C[None, :, i]
@@ -144,15 +106,14 @@ def _np_dists(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
 
 
 def _pandas_assign(centroids: list[list[float]]):
-    """Broadcast-centroid Arrow argmin for the large-k path.
-    np.argmin returns the FIRST minimum — same tie rule as the codegen
-    array_position(arr, array_min(arr))."""
+    """Broadcast-centroid Arrow argmin. np.argmin returns the FIRST
+    minimum, so a row equidistant from several centroids goes to the
+    lowest cluster id."""
     C = np.asarray(centroids, dtype=np.float64)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
-        # null vec -> null cluster, matching the codegen path (null
-        # distance terms -> array_min null -> array_position null)
+        # null vec -> null cluster
         mask = v.notna().to_numpy()
         res = pd.array([None] * len(v), dtype="Int32")
         if mask.any():
@@ -161,10 +122,8 @@ def _pandas_assign(centroids: list[list[float]]):
             for s in range(0, len(X), _NP_CHUNK):
                 out[s : s + _NP_CHUNK] = _np_dists(X[s : s + _NP_CHUNK], C).argmin(axis=1)
             # rows with a null/NaN ELEMENT (Arrow conflates the two:
-            # both arrive as nan) -> null cluster, mirroring the
-            # codegen path's isnan/null guard (r6 ADVICE: these rows
-            # previously argmin'd to cluster 0 through all-nan
-            # distances)
+            # both arrive as nan) -> null cluster, not the cluster 0
+            # an argmin over all-nan distances would give
             vals = pd.array(out, dtype="Int32")
             vals[np.isnan(X).any(axis=1)] = None
             res[mask] = vals
@@ -179,14 +138,9 @@ def _vec_matrix(v_masked: pd.Series) -> "np.ndarray":
     handing plain Python lists with None goes through the same
     object->float conversion instead of raising TypeError).
 
-    Wrong-LENGTH rows mirror the codegen path's try_element_at
-    semantics exactly (r6 review: they used to IndexError the whole
-    task, or NaN-pad neighbors batch-dependently through the ragged
-    fallback): longer rows are truncated to the first N_DIMS dims
-    (try_element_at reads dims 1..27 and ignores the rest), shorter
-    rows are nan-padded (try_element_at yields NULL for the missing
-    dims -> null distance -> null cluster, which the callers' isnan
-    masks already map to NULL)."""
+    Wrong-LENGTH rows never fail the task and never depend on their
+    batch neighbours: longer rows are truncated to their first N_DIMS
+    dims, shorter rows are nan-padded, so they get a null cluster."""
     rows = [
         r[:N_DIMS] if len(r) >= N_DIMS else list(r) + [float("nan")] * (N_DIMS - len(r))
         for r in v_masked.tolist()
@@ -197,57 +151,17 @@ def _vec_matrix(v_masked: pd.Series) -> "np.ndarray":
         return pd.DataFrame(rows).to_numpy(dtype=np.float64)
 
 
-def _pandas_min_dist(centroids: list[list[float]]):
-    """min distance to any centroid (the kmeanspp seeding statistic)
-    for the large-k path — bit-identical to array_min over the codegen
-    distance array."""
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def min_dist(v: pd.Series) -> pd.Series:
-        # null vec -> null distance (NOT NaN: Arrow NaN is a value,
-        # codegen yields SQL NULL), matching the codegen path
-        mask = v.notna().to_numpy()
-        res = pd.array([None] * len(v), dtype="Float64")
-        if mask.any():
-            X = _vec_matrix(v[mask])
-            out = np.empty(len(X), dtype=np.float64)
-            for s in range(0, len(X), _NP_CHUNK):
-                out[s : s + _NP_CHUNK] = _np_dists(X[s : s + _NP_CHUNK], C).min(axis=1)
-            # nan distances (null/NaN element rows) -> null, same as
-            # the codegen path's isnan guard; assigning nan into a
-            # Float64 masked array already maps to NA, the isnan mask
-            # just makes the contract explicit
-            vals = pd.array(out, dtype="Float64")
-            vals[np.isnan(out)] = None
-            res[mask] = vals
-        return pd.Series(res)
-
-    return min_dist
+def assign_clusters(feats: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """Adds ``cluster``: the index of the nearest centroid to ``lf_vec``
+    (ties -> lowest cluster id; a null vector, a null/NaN element or a
+    short vector -> NULL). The one assignment kernel: the Lloyd rounds
+    and both clusterMatch forms call it."""
+    return feats.withColumn("cluster", _pandas_assign(centroids)(F.col("lf_vec")))
 
 
-def assign_clusters(
-    feats: DataFrame, centroids: list[list[float]], vec_col: str = "lf_vec"
-) -> DataFrame:
-    """argmin over centroid distances; ties -> lowest cluster id
-    (FIRST occurrence of the minimum on both paths). Codegen
-    literal-embedded expression up to CODEGEN_MAX_TERMS; broadcast-
-    centroid pandas UDF above (bit-identical, see _np_dists)."""
-    if len(centroids) * N_DIMS * 3 > CODEGEN_MAX_TERMS:
-        return feats.withColumn("cluster", _pandas_assign(centroids)(F.col(vec_col)))
-    arr = F.array(*[_dist(vec_col, c) for c in centroids])
-    m = F.array_min(arr)
-    # NaN guard (r6 ADVICE): a NaN feature element makes every distance
-    # NaN; Spark's NaN==NaN semantics would then return cluster 0 via
-    # array_position. Emit null instead — the same verdict as a null
-    # element (Arrow conflates the two on the pandas path, so null is
-    # the one answer both paths can agree on bit-for-bit). when()'s
-    # null-condition fallthrough also covers the wholly-null/
-    # null-element case (isnan(null) -> null -> otherwise null).
-    return feats.withColumn(
-        "cluster",
-        F.when(~F.isnan(m), F.array_position(arr, m) - 1).cast("int"),
-    )
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
 
 
 def fit_kmeans(
@@ -257,47 +171,18 @@ def fit_kmeans(
     id_col: str = "rec_id",
     weight_col: str | None = None,
     n_iter: int = 8,
-    init: str = "xxhash64",
-    vec_col: str = "lf_vec",
 ) -> list[list[float]]:
     """Lloyd's algorithm with exact-integer sufficient statistics.
 
-    Init: the k rows with the smallest hash(id) (ties by id) — a
-    deterministic pseudo-random sample. ``init='md5'`` selects a hash
-    that plain Python/DuckDB can recompute (the q30 oracle twin);
-    ``'xxhash64'`` is the cheaper production default;
-    ``'kmeanspp'`` is a deterministic k-means++-style seeding
-    (farthest-first: seed 1 by hash; subsequent seeds maximize distance
-    to their nearest chosen centroid, ties by id).
-
-    kmeanspp is BATCHED since r6 (verdict item 6) and EXACT: strict
-    sequential farthest-first is one distributed top-1 job PER SEED —
-    O(k) full scans, measured unusable at k=256 (killed at seed ~60
-    after 9 min on 20k rows; each job's distance expression also grows
-    with the seed count, so cost is quadratic in k). The batched form
-    runs ~O(log k) distributed passes: per pass the per-row
-    min-distance to the COMMITTED seeds ranks a candidate pool (top
-    4·batch by (_d desc, id asc), batch doubling with the seed count),
-    and the pool — a few hundred rows — is refined DRIVER-side by
-    sequential farthest-first that accounts for picks made within the
-    batch (k-means‖-style oversample-then-refine). A committed-prefix
-    guard keeps the trajectory IDENTICAL to strict sequential
-    farthest-first: every excluded row's current min-distance is
-    bounded by the pool's smallest collected distance, so a
-    within-batch pick strictly above that cutoff provably beats every
-    excluded row; at/below the cutoff the batch ends and the next
-    distributed pass re-ranks (first pick per pass is always the true
-    global argmax, so worst case degrades to sequential, never below
-    it). Pool distances use ``_np_dists`` (left-associated IEEE op
-    order), bit-equal to the codegen expression, so the guard sees the
-    same numbers a re-rank would. Stops early if fewer than
-    k distinct feature points exist. Weighted mode (``weight_col``, integer
+    Init: the k rows with the smallest md5(id) (ties by id) — a
+    deterministic pseudo-random sample that plain Python/DuckDB can
+    recompute (the q30 oracle twin does). Fewer than k usable rows
+    give fewer centroids. Weighted mode (``weight_col``, integer
     weights) implements the reference's balanced two-table fit. Empty
     clusters keep their previous centroid. Converges early when an
-    update is an exact fixpoint. (Measured timings: SCALE.md §kmeanspp.)
+    update is an exact fixpoint.
     """
-    id_str = F.col(id_col).cast("string")
-    h = F.md5(id_str) if init == "md5" else F.xxhash64(id_str)
+    _check_k(k)
     # seeds must come from USABLE vectors: a null vector would crash
     # the float() unpack and a null/NaN ELEMENT would poison every
     # distance to its centroid (all-NaN -> the whole table degenerates
@@ -306,129 +191,36 @@ def fit_kmeans(
     # (r6 review). letter_features can't produce them (coalesce ''),
     # so for the normal path this filter is a plan-only no-op.
     feats = feats.where(
-        F.col(vec_col).isNotNull()
-        & (F.size(F.col(vec_col)) == N_DIMS)
-        & ~F.exists(F.col(vec_col), lambda x: x.isNull() | F.isnan(x))
+        F.col("lf_vec").isNotNull()
+        & (F.size(F.col("lf_vec")) == N_DIMS)
+        & ~F.exists(F.col("lf_vec"), lambda x: x.isNull() | F.isnan(x))
     )
-    if init == "kmeanspp":
-        first = (
-            feats.select(F.col(vec_col), F.xxhash64(id_str).alias("_h"), F.col(id_col).alias("_i"))
-            .orderBy("_h", "_i")
-            .limit(1)
-            .collect()
+    seed_rows = (
+        feats.select(
+            F.col("lf_vec"),
+            F.md5(F.col(id_col).cast("string")).alias("_h"),
+            F.col(id_col).alias("_i"),
         )
-        if not first:
-            raise ValueError("empty input for k-means blocking")
-        cents = [[float(x) for x in first[0][vec_col]]]
-        while len(cents) < k:
-            # batch doubles with the committed seed count -> O(log k)
-            # distributed passes; the pool oversamples 4x so the
-            # driver-side refinement has room when top ranks cluster
-            batch = min(k - len(cents), max(1, len(cents)))
-            # the seeding statistic always rides the pandas path (r8,
-            # same rationale as the Lloyd rounds: the codegen form
-            # embeds the committed seeds as literals, so EVERY
-            # distributed pass paid a fresh janino compile growing with
-            # the seed count). Bit-equal distances by construction
-            # (_np_dists left-associated order; NaN/null-element rows
-            # come back NULL, so they can never win the farthest-first
-            # orderBy — identical to the old NaN guard), hence an
-            # identical seed trajectory.
-            d_col = _pandas_min_dist(cents)(F.col(vec_col))
-            # NOTE: no .where(_d > 0) here — a Filter between the
-            # Project and the Sort lets Catalyst substitute the full
-            # distance expression (which inlines the 27 regexp letter
-            # features per element_at) into the predicate AND the sort
-            # key; the collapsed plan's codegen OOMs janino even at
-            # tiny k. desc puts nulls/zeros last, so the top-N rows
-            # ARE the farthest points — filter driver-side instead.
-            raw = (
-                feats.select(F.col(vec_col), d_col.alias("_d"), F.col(id_col).alias("_i"))
-                .orderBy(F.desc("_d"), F.asc("_i"))
-                .limit(batch * 4)
-                .collect()
-            )
-            pool = [
-                r for r in raw if r["_d"] is not None and float(r["_d"]) > 0.0
-            ]  # 0-distance rows duplicate a committed seed; null = null vec
-            if not pool:
-                break  # < k distinct points remain
-            # Exactness guard: any row NOT collected has _d <= cutoff
-            # (the smallest collected _d — the pool is the top-N of the
-            # sort), and its min-distance only shrinks as seeds are
-            # committed. So a within-batch pick whose updated distance
-            # is STRICTLY above cutoff provably beats every excluded
-            # row — it is the true global next seed. At or below
-            # cutoff the true seed may sit outside the pool (or tie
-            # with a smaller id out there): end the batch and re-rank
-            # distributed. A short collect (len(raw) < limit) means
-            # nothing was excluded -> no constraint.
-            cutoff = float(raw[-1]["_d"] or 0.0) if len(raw) == batch * 4 else 0.0
-            # exact sequential farthest-first WITHIN the pool: md[i] =
-            # min distance of pool row i to (committed seeds ∪ batch
-            # picks so far); each pick maximizes md, ties by id asc.
-            # Distances via _np_dists (left-associated IEEE op order)
-            # so md values are bit-equal to what the next distributed
-            # pass would compute — the guard comparisons see the same
-            # numbers either way and the trajectory is IDENTICAL to
-            # strict sequential farthest-first.
-            P = np.asarray([[float(x) for x in r[vec_col]] for r in pool])
-            md = np.asarray([float(r["_d"]) for r in pool])
-            ids = [r["_i"] for r in pool]
-            taken = np.zeros(len(pool), dtype=bool)
-            for picks in range(batch):
-                best = -1
-                for i in range(len(pool)):
-                    if taken[i] or md[i] <= 0.0:
-                        continue
-                    if best < 0 or md[i] > md[best] or (
-                        md[i] == md[best] and ids[i] < ids[best]
-                    ):
-                        best = i
-                if best < 0:
-                    break  # pool exhausted (within-batch duplicates)
-                if picks > 0 and not (md[best] > cutoff):
-                    break  # true next seed may lie outside the pool
-                cents.append([float(x) for x in P[best]])
-                taken[best] = True
-                md = np.minimum(md, _np_dists(P, P[best : best + 1])[:, 0])
-    else:
-        seed_rows = (
-            feats.select(F.col(vec_col), h.alias("_h"), F.col(id_col).alias("_i"))
-            .orderBy("_h", "_i")
-            .limit(k)
-            .collect()
-        )
-        if not seed_rows:
-            raise ValueError("empty input for k-means blocking")
-        cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
+        .orderBy("_h", "_i")
+        .limit(k)
+        .collect()
+    )
+    if not seed_rows:
+        raise ValueError("empty input for k-means blocking")
+    cents = [[float(x) for x in r["lf_vec"]] for r in seed_rows]
 
     w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
     sum_cols = [
-        F.sum(F.try_element_at(F.col(vec_col), F.lit(i + 1)) * w).alias(f"s{i}")
+        F.sum(F.try_element_at(F.col("lf_vec"), F.lit(i + 1)) * w).alias(f"s{i}")
         for i in range(N_DIMS)
     ]
     for _ in range(n_iter):
-        # Lloyd rounds assign via the broadcast-centroid pandas path
-        # REGARDLESS of k (r8 optimization): the codegen expression
-        # embeds the round's centroids as literals, so every iteration
-        # is a FRESH janino whole-stage compile of a k*27*3-term
-        # expression (~2-4 s each, constant in data size — it dominated
-        # the q30 wall: 8 iterations ~ 25 s of pure compilation). The
-        # pandas path is bit-identical by construction (_np_dists
-        # left-associated IEEE order, FIRST-minimum argmin — pinned by
-        # test_cluster_match_k64_paths_bit_identical and the q30 hard
-        # oracle), so the fitted trajectory is unchanged; the sum/agg
-        # expression below carries no literals and compiles once. The
-        # final caller-facing assignment (assign_clusters) keeps the
-        # codegen-vs-pandas size switch: one compile, amortized over
-        # the full table scan.
         agg = (
-            feats.withColumn("cluster", _pandas_assign(cents)(F.col(vec_col)))
+            assign_clusters(feats, cents)
             # defense-in-depth: the usable-vector filter above should
             # make a null cluster unreachable inside fit, but if one
-            # ever forms (future assignment-path change) the None
-            # group would crash new_cents[None] below (r6 review)
+            # ever forms the None group would crash new_cents[None]
+            # below (r6 review)
             .where(F.col("cluster").isNotNull())
             .groupBy("cluster")
             .agg(*sum_cols, F.sum(w).alias("n"))
@@ -444,6 +236,15 @@ def fit_kmeans(
     return cents
 
 
+def _blocked(feats: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """Final assignment plus the ``km:<cluster>`` block key."""
+    return (
+        assign_clusters(feats, cents)
+        .withColumn("block_key", F.concat(F.lit("km:"), F.col("cluster")))
+        .drop("lf_vec")
+    )
+
+
 def cluster_match(
     df: DataFrame,
     col: str,
@@ -451,29 +252,17 @@ def cluster_match(
     *,
     id_col: str = "rec_id",
     n_iter: int = 8,
-    init: str = "xxhash64",
-    key_prefix: str = "km:",
     materializer: Materializer | None = None,
 ) -> DataFrame:
     """Single-table clusterMatch: adds ``cluster`` and ``block_key``
     columns; feed the result to ``blockData``-style pairing. The
     feature stream is materialized ONCE before the fit: the seed
     collect, every Lloyd aggregation, and the final assignment all
-    re-read the cut instead of re-running the 26 regexp_replace
-    expressions over the table per job (n_iter+2 jobs)."""
+    re-read the cut instead of re-running the letter-feature UDF over
+    the table per job (n_iter+2 jobs)."""
+    _check_k(k)
     feats = resolve(materializer)(letter_features(df, col), "km_features")
-    cents = fit_kmeans(feats, k, id_col=id_col, n_iter=n_iter, init=init)
-    # final assignment via the broadcast-centroid pandas path (r8):
-    # bit-identical to assign_clusters' codegen expression (the pinned
-    # path-equality invariant) without the one-shot janino compile of a
-    # k*27*3-term literal expression (~3 s constant per call).
-    # assign_clusters keeps its documented size switch for callers that
-    # want the codegen expression form.
-    return (
-        feats.withColumn("cluster", _pandas_assign(cents)(F.col("lf_vec")))
-        .withColumn("block_key", F.concat(F.lit(key_prefix), F.col("cluster")))
-        .drop("lf_vec")
-    )
+    return _blocked(feats, fit_kmeans(feats, k, id_col=id_col, n_iter=n_iter))
 
 
 def cluster_match_two(
@@ -484,8 +273,6 @@ def cluster_match_two(
     *,
     id_col: str = "rec_id",
     n_iter: int = 8,
-    init: str = "xxhash64",
-    key_prefix: str = "km:",
     materializer: Materializer | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Two-table clusterMatch (the reference's primary form): fit one
@@ -495,31 +282,21 @@ def cluster_match_two(
     arithmetic. Note: weight × letter-count sums must fit a long; at
     extreme table sizes pre-sample the fit input (assignment is
     unaffected)."""
-    import math
-
+    _check_k(k)
     # Counts come from the MATERIALIZED feature cuts, not separate
     # pre-scan jobs: letter_features has to scan each table anyway, and
     # a count over the parquet cut is answered from row-group metadata —
     # the two full input re-scans the r3 shape paid are gone.
     mat = resolve(materializer)
-    fa0 = mat(letter_features(df_a, col), "km_features_a")
-    fb0 = mat(letter_features(df_b, col), "km_features_b")
-    na, nb = fa0.count(), fb0.count()
+    fa = mat(letter_features(df_a, col), "km_features_a")
+    fb = mat(letter_features(df_b, col), "km_features_b")
+    na, nb = fa.count(), fb.count()
     if na == 0 or nb == 0:
         raise ValueError("cluster_match_two needs non-empty tables")
     g = math.gcd(na, nb)
     wa, wb = nb // g, na // g
-    fa = fa0.withColumn("_w", F.lit(wa).cast("long"))
-    fb = fb0.withColumn("_w", F.lit(wb).cast("long"))
-    both = fa.select(id_col, "lf_vec", "_w").unionByName(fb.select(id_col, "lf_vec", "_w"))
-    cents = fit_kmeans(both, k, id_col=id_col, weight_col="_w", n_iter=n_iter, init=init)
-
-    def _finish(feats: DataFrame) -> DataFrame:
-        # pandas-path final assignment — same rationale as cluster_match
-        return (
-            feats.withColumn("cluster", _pandas_assign(cents)(F.col("lf_vec")))
-            .withColumn("block_key", F.concat(F.lit(key_prefix), F.col("cluster")))
-            .drop("lf_vec", "_w")
-        )
-
-    return _finish(fa), _finish(fb)
+    both = fa.select(id_col, "lf_vec", F.lit(wa).cast("long").alias("_w")).unionByName(
+        fb.select(id_col, "lf_vec", F.lit(wb).cast("long").alias("_w"))
+    )
+    cents = fit_kmeans(both, k, id_col=id_col, weight_col="_w", n_iter=n_iter)
+    return _blocked(fa, cents), _blocked(fb, cents)

@@ -513,6 +513,30 @@ def test_cluster_match_k_exceeds_rows(spark):
     assert all(r.cluster is not None and r.block_key.startswith("km:") for r in out)
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_cluster_match_rejects_k_below_one(spark, k):
+    """k < 1 is named as the caller's error before any Spark job runs:
+    k=0 used to report 'empty input' on a non-empty table, and k=-1
+    failed inside Spark on a negative LIMIT."""
+    from fastlink_spark.operators.cluster_match import (
+        cluster_match,
+        cluster_match_two,
+        fit_kmeans,
+        letter_features,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"name {i}") for i in range(20)], "rec_id long, name string"
+    )
+    msg = rf"k must be >= 1, got {k}$"
+    with pytest.raises(ValueError, match=msg):
+        fit_kmeans(letter_features(df, "name"), k)
+    with pytest.raises(ValueError, match=msg):
+        cluster_match(df, "name", k)
+    with pytest.raises(ValueError, match=msg):
+        cluster_match_two(df, df, "name", k)
+
+
 def test_candidate_pairs_grid_equals_brute_force_randomized(spark):
     """Randomized equivalence sweep: with aggressive salting forced
     (threshold 2, target 2 — every block >2 rows goes through the full

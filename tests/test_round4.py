@@ -366,53 +366,6 @@ def test_incremental_compact_empties_relabels_and_matches_batch(spark, tmp_path)
     assert parts(linker.entities().collect()) == parts(ref.entities().collect())
 
 
-# ------------------------- cluster_match k-means++ seeding
-
-def test_cluster_match_kmeanspp_deterministic_and_spread(spark):
-    """init='kmeanspp' (deterministic farthest-first): identical
-    centroids across runs, all-distinct seeds, and on a dataset with k
-    well-separated blobs the fit must put each blob in its own cluster
-    (hash-sample init can seed two in one blob; farthest-first cannot)."""
-    import itertools
-
-    from fastlink_spark.operators.cluster_match import (
-        assign_clusters,
-        fit_kmeans,
-        letter_features,
-    )
-
-    # 4 blobs: words dominated by one letter each, lengths spread
-    blobs = {"a": "aaaaaaaaaa", "e": "eeeeeeeeeeeeeeeeeeee", "x": "xxxxx", "z": "z" * 30}
-    rows = [
-        (bi * 100 + j, blobs[ch] + ("b" if j % 2 else ""))
-        for bi, ch in enumerate(blobs)
-        for j in range(10)
-    ]
-    df = spark.createDataFrame(rows, "rec_id long, txt string")
-    feats = letter_features(df, "txt")
-    c1 = fit_kmeans(feats, 4, n_iter=6, init="kmeanspp")
-    c2 = fit_kmeans(feats, 4, n_iter=6, init="kmeanspp")
-    assert c1 == c2  # bit-deterministic
-    assert len({tuple(c) for c in c1}) == 4  # distinct seeds survived
-    assigned = assign_clusters(feats, c1).select("rec_id", "cluster").collect()
-    by_blob = {}
-    for r in assigned:
-        by_blob.setdefault(r["rec_id"] // 100, set()).add(r["cluster"])
-    # each blob entirely in one cluster, all blobs separated
-    assert all(len(cl) == 1 for cl in by_blob.values())
-    assert len({next(iter(cl)) for cl in by_blob.values()}) == 4
-
-
-def test_cluster_match_kmeanspp_fewer_distinct_points(spark):
-    from fastlink_spark.operators.cluster_match import fit_kmeans, letter_features
-
-    df = spark.createDataFrame(
-        [(1, "aa"), (2, "aa"), (3, "aa")], "rec_id long, txt string"
-    )
-    cents = fit_kmeans(letter_features(df, "txt"), 3, init="kmeanspp")
-    assert len(cents) == 1  # early-stop, no duplicate phantom centroids
-
-
 def test_incremental_batches_continue_after_compact(spark, tmp_path):
     """compact() must leave the state fully usable: a later batch that
     near-dups a pre-compact page still joins its (compacted) cluster."""

@@ -225,29 +225,20 @@ def test_compact_twice_no_segment_collision(spark, tmp_path):
     assert on_disk == segs2
 
 
-def test_cluster_match_pandas_path_null_vec_matches_codegen(spark, monkeypatch):
-    """A NULL feature vector must yield a NULL cluster on BOTH
-    assignment paths (codegen: null distance terms -> null argmin; the
-    pandas path used to crash on the ragged list — r5 review
-    finding)."""
+def test_cluster_match_pandas_path_null_vec_matches_codegen(spark):
+    """A NULL feature vector must yield a NULL cluster (the pandas
+    kernel used to crash on the ragged list — r5 review finding), and
+    a row equidistant from two centroids takes the FIRST minimum
+    (cluster 0)."""
     import fastlink_spark.operators.cluster_match as cm
 
     feats = spark.createDataFrame(
-        [(1, [1] * 27), (2, None), (3, [5] * 27)],
+        [(1, [1] * 27), (2, None), (3, [5] * 27), (4, [2] * 27)],
         "rec_id long, lf_vec array<long>",
     )
     cents = [[0.0] * 27, [4.0] * 27]
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 10**9)
-    cg = {r["rec_id"]: r["cluster"] for r in cm.assign_clusters(feats, cents).collect()}
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 1)
-    np_ = {r["rec_id"]: r["cluster"] for r in cm.assign_clusters(feats, cents).collect()}
-    assert cg == {1: 0, 2: None, 3: 1}
-    assert np_ == cg
-    # the kmeanspp seeding statistic mirrors the same null semantics
-    d = cm._pandas_min_dist(cents)
-    got = feats.select("rec_id", d(F.col("lf_vec")).alias("d")).collect()
-    by = {r["rec_id"]: r["d"] for r in got}
-    assert by[2] is None and by[1] is not None
+    got = {r["rec_id"]: r["cluster"] for r in cm.assign_clusters(feats, cents).collect()}
+    assert got == {1: 0, 2: None, 3: 1, 4: 0}
 
 
 # --------------------------- scratch lifecycle
@@ -715,51 +706,6 @@ def test_sample_fraction_one_fits_like_full(spark, tmp_path):
     full = link_dedupe(spark, pages, LinkageConfig())
     one = link_dedupe(spark, pages, LinkageConfig(sample_fraction=1.0))
     assert full.em.to_json() == one.em.to_json()
-
-
-# --------------------------- cluster_match high-k path
-
-
-def test_cluster_match_k64_paths_bit_identical(spark, monkeypatch):
-    """VERDICT r4 item 3: above CODEGEN_MAX_TERMS the k-means
-    assignment (and the kmeanspp seeding statistic) route through a
-    broadcast-centroid NumPy argmin instead of the literal-embedded
-    codegen expression. The two paths must be BIT-identical — same
-    fitted centroids, same assignments — at k=64, so the exact-integer
-    fit (and the q30 oracle at k=8) is path-independent."""
-    import fastlink_spark.operators.cluster_match as cm
-
-    rows = [(i, f"w{i % 97}x{'abcdeq'[i % 6] * (i % 11)}y{i % 13}") for i in range(700)]
-    df = spark.createDataFrame(rows, "rec_id long, s string")
-    feats = cm.letter_features(df, "s").localCheckpoint(eager=True)
-
-    # k=64 Lloyd fit + assignment (hash seeding: one collect, so the
-    # wall isn't dominated by 63 codegen seeding compiles — the exact
-    # cost this operator change removes)
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 10**9)  # force codegen
-    cents_cg = cm.fit_kmeans(feats, 64, n_iter=4)
-    asg_cg = {
-        r["rec_id"]: r["cluster"]
-        for r in cm.assign_clusters(feats, cents_cg).collect()
-    }
-    assert len(cents_cg) == 64
-
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 1)  # force pandas path
-    cents_np = cm.fit_kmeans(feats, 64, n_iter=4)
-    asg_np = {
-        r["rec_id"]: r["cluster"]
-        for r in cm.assign_clusters(feats, cents_np).collect()
-    }
-    assert cents_np == cents_cg  # exact float equality, not approx
-    assert asg_np == asg_cg
-
-    # kmeanspp SEEDING statistic takes the same switch: k=12 keeps the
-    # codegen arm affordable while covering the farthest-first path
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 10**9)
-    pp_cg = cm.fit_kmeans(feats, 12, init="kmeanspp", n_iter=2)
-    monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", 1)
-    pp_np = cm.fit_kmeans(feats, 12, init="kmeanspp", n_iter=2)
-    assert pp_np == pp_cg
 
 
 # --------------------------- randomized equivalence sweep

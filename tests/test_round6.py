@@ -4,8 +4,6 @@ land)."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -35,11 +33,10 @@ def test_emlink_log_grid_guard_survives_int64_overflow():
 # --------------------------- ADVICE 3: cluster_match null/NaN elements
 
 
-def test_assign_clusters_null_and_nan_elements_both_paths(spark, monkeypatch):
+def test_assign_clusters_null_and_nan_elements_both_paths(spark):
     """A null ELEMENT (not a wholly-null vector) and a NaN value must
-    both yield a NULL cluster on BOTH paths. Pre-fix: codegen returned
-    cluster 0 for NaN (Spark NaN==NaN in array_position) and the pandas
-    path argmin'd all-nan distance rows to 0."""
+    both yield a NULL cluster. Pre-fix the assignment gave cluster 0
+    for NaN (an argmin over all-nan distances)."""
     import fastlink_spark.operators.cluster_match as cm
 
     dims = cm.N_DIMS
@@ -54,26 +51,9 @@ def test_assign_clusters_null_and_nan_elements_both_paths(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "rec_id long, lf_vec array<double>")
     cents = [[0.0] * dims, [3.0] * dims]
-
-    def collect(path_cap):
-        monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", path_cap)
-        return {
-            r["rec_id"]: r["cluster"]
-            for r in cm.assign_clusters(df, cents).collect()
-        }
-
-    cg = collect(10**9)  # force codegen
-    nd = collect(1)      # force pandas
-    assert cg == nd
-    assert cg[1] is not None and cg[2] is not None
-    assert cg[3] is None and cg[4] is None and cg[5] is None
-
-    # seeding statistic takes the same guard: a NaN row must not win
-    # the farthest-first orderBy on either path
-    for cap in (10**9, 1):
-        monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", cap)
-        cents_pp = cm.fit_kmeans(df.where("rec_id <= 2"), 2, init="kmeanspp", n_iter=1)
-        assert not any(math.isnan(x) for c in cents_pp for x in c)
+    got = {r["rec_id"]: r["cluster"] for r in cm.assign_clusters(df, cents).collect()}
+    assert got[1] is not None and got[2] is not None
+    assert got[3] is None and got[4] is None and got[5] is None
 
 
 # --------------------------- ADVICE 4: get_spark cross-thread warning
@@ -303,12 +283,12 @@ def test_fit_kmeans_survives_null_cluster_rows(spark):
     assert got == want
 
 
-def test_assign_clusters_wrong_length_vectors_both_paths(spark, monkeypatch):
-    """r6 review: wrong-length vectors must behave IDENTICALLY on both
-    assignment paths, mirroring try_element_at semantics — longer rows
-    assign by their first N_DIMS dims, shorter rows get a NULL cluster.
-    The pandas path used to IndexError the task (uniform short batch)
-    or null out valid neighbors (ragged batch NaN-padding)."""
+def test_assign_clusters_wrong_length_vectors_both_paths(spark):
+    """r6 review: wrong-length vectors follow one rule — longer rows
+    assign by their first N_DIMS dims, shorter rows get a NULL
+    cluster. The pandas kernel used to IndexError the task (uniform
+    short batch) or null out valid neighbors (ragged batch
+    NaN-padding)."""
     import fastlink_spark.operators.cluster_match as cm
 
     dims = cm.N_DIMS
@@ -319,16 +299,7 @@ def test_assign_clusters_wrong_length_vectors_both_paths(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "rec_id long, lf_vec array<double>")
     cents = [[0.0] * dims, [3.0] * dims]
-
-    def collect(cap):
-        monkeypatch.setattr(cm, "CODEGEN_MAX_TERMS", cap)
-        return {
-            r["rec_id"]: r["cluster"]
-            for r in cm.assign_clusters(df, cents).collect()
-        }
-
-    cg = collect(10**9)
-    nd = collect(1)
-    assert cg == nd
-    assert cg[2] == cg[1]  # extra dims ignored, same cluster as clean
-    assert cg[3] is None
+    got = {r["rec_id"]: r["cluster"] for r in cm.assign_clusters(df, cents).collect()}
+    assert got[1] is not None
+    assert got[2] == got[1]  # extra dims ignored, same cluster as clean
+    assert got[3] is None
