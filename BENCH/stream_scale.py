@@ -1,7 +1,7 @@
 """Streaming-path scale evidence (r7 verdict item 2): stream a 2-4x
-corpus through ``IncrementalLinker`` in FIXED-SIZE batches with
-auto-compaction enabled and record per-batch wall + per-stage walls as
-the persisted corpus state grows.
+corpus through ``IncrementalLinker`` in FIXED-SIZE batches, compacting
+whenever the state reaches --auto-segments record segments, and record
+per-batch wall + per-stage walls as the persisted corpus state grows.
 
 What this proves: per-batch cost is bounded by the BATCH size, not the
 corpus — the r4 records-index prune + r6 entities-state prune removed
@@ -13,9 +13,10 @@ it re-aggregated the full entity state every batch.
 Protocol: pages fixture at --nbase (8000 -> ~24k pages, the 2x corpus),
 shuffled deterministically (seed pinned), split into fixed
 --batch-pages chunks; EM frozen from a batch fit over the FIRST chunk
-(the estimate-then-apply contract of R/emlinkRS.R); auto-compaction on
-(--auto-segments). One JSON line per batch on stdout with the wall,
-stage walls (IncrementalLinker.last_batch_metrics) and state size;
+(the estimate-then-apply contract of R/emlinkRS.R); compaction before
+any batch that finds >= --auto-segments record segments in the
+committed manifest, timed inside that batch's wall. One JSON line per
+batch on stdout with the wall, stage walls (IncrementalLinker.last_batch_metrics) and state size;
 a final SUMMARY line with the flatness ratio
 (median wall of the last third / median wall of the first third,
 compact batches excluded from both — compaction is the scheduled
@@ -75,20 +76,18 @@ def main() -> None:
     em = link_dedupe(spark, spark.createDataFrame(chunks[0], schema), LinkageConfig()).em
 
     state_dir = tempfile.mkdtemp(prefix="stream_scale_state_")
-    linker = IncrementalLinker(
-        spark,
-        state_dir,
-        em,
-        LinkageConfig(),
-        auto_compact_segments=args.auto_segments,
-    )
+    linker = IncrementalLinker(spark, state_dir, em, LinkageConfig())
     walls: list[dict] = []
     cum = 0
     for i, chunk in enumerate(chunks):
         cum += len(chunk)
-        m0 = linker._load_manifest()
-        compacting = linker.should_compact(m0)
+        # compact-before-batch: bounds the read amplification at
+        # --auto-segments segments and keeps the compaction in this
+        # batch's wall
+        compacting = len(linker._load_manifest()["records"]) >= args.auto_segments
         t0 = time.time()
+        if compacting:
+            linker.compact()
         linker.process_batch(spark.createDataFrame(chunk, schema), batch_id=i)
         wall = round(time.time() - t0, 3)
         bm = linker.last_batch_metrics or {}
@@ -123,7 +122,7 @@ def main() -> None:
     ]
     # equal-segment-count comparison (the clean signal): raw first-vs-
     # last-third medians conflate TWO effects — per-batch cost grows
-    # with the manifest's segment count (reset by every auto-compact)
+    # with the manifest's segment count (reset by every compaction)
     # AND with corpus size. Comparing the earliest vs latest FULL batch
     # at the SAME segment count isolates the corpus-size effect, which
     # is the one the r4+r6 prunes must keep flat.

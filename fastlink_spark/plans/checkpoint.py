@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .materialize import ScopedMaterializer
+
 
 def atomic_write_text(path: str, text: str) -> None:
     """THE commit protocol for every small state file (stage manifests,
@@ -182,6 +184,8 @@ class CheckpointManager:
         # invalidate automatically
         self.fingerprints: dict[str, str] = {}
         self._op_stages_wiped = False
+        # no root: every stage is cut into this one scratch namespace
+        self._scratch = ScopedMaterializer()
 
     def _paths(self, name: str) -> tuple[str, str]:
         assert self.root is not None
@@ -202,12 +206,10 @@ class CheckpointManager:
             # no on-disk checkpoint root: still materialize + cut lineage
             # (generator/HOF expressions must never be re-inlined into
             # downstream Generate/Join nodes — see minhash.py plan-size
-            # note). The scratch-aware default cuts to parquet scratch
-            # when a directory is discoverable, DISK_ONLY otherwise
-            # (plans/materialize.py).
-            from .materialize import resolve
-
-            df = resolve(None)(build(), name)
+            # note). All stages share one scratch namespace (parquet
+            # when a directory is discoverable, DISK_ONLY otherwise —
+            # plans/materialize.py), freed by close().
+            df = self._scratch(build(), name)
             self.metrics[name] = {"rows": None, "resumed": False}
             return df
         data_path, manifest_path = self._paths(name)
@@ -272,6 +274,12 @@ class CheckpointManager:
         self.fingerprints[name] = fingerprint
         return out
 
+    def close(self) -> None:
+        """Free the stage cuts of a manager without a root; frames read
+        from its stages are dead afterwards. A rooted manager's stages
+        are the checkpoint and stay on disk."""
+        self._scratch.close()
+
     def materializer(self):
         """Handle for OPERATOR-INTERNAL lineage cuts (CC rounds, LSH
         key tables, greedy-fixpoint state): a ``ScopedMaterializer``
@@ -282,8 +290,6 @@ class CheckpointManager:
         rewritten on every run. Call once per operator invocation: each
         handle binds its own ``inv_<n>`` namespace (plans/materialize.py
         says why), and ``close()`` frees it once nothing reads its cuts."""
-        from .materialize import ScopedMaterializer
-
         if self.root is None:
             return ScopedMaterializer()
         scratch = os.path.join(self.root, "_op_stages")

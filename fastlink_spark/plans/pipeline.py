@@ -169,8 +169,8 @@ def matched_from_zeta(
     id_b: str = "b_rec_id",
 ) -> DataFrame:
     """THE matched-pair rule — one definition shared by the batch
-    pipeline, the incremental linker, state compaction, and the
-    two-table link_records path (divergence between them silently
+    pipeline (which state compaction runs), the incremental linker and
+    the two-table link_records path (divergence between them silently
     splits/merges clusters differently per path): null-safe broadcast
     zeta join + FS threshold, with the deterministic-fields exact-match
     pass accepted regardless of zeta (deterministic verdict wins: such
@@ -254,6 +254,23 @@ def _blocked_records(records: DataFrame, cfg: LinkageConfig) -> DataFrame:
     return blocked.drop("band0")
 
 
+def scored_columns(cfg: LinkageConfig) -> list[str]:
+    """The columns of a gamma-scored pair stream that anything
+    downstream reads: the pattern fit reads gamma_*, matched_from_zeta
+    the ids, gamma_* and the deterministic fields. The other a_/b_
+    comparison attrs (title, text_hash, ... on the default spec) are
+    dead after the gamma ladder, and the scored pairs are a run's
+    largest table, so a cut keeps only these (~40% of the stage's bytes
+    saved at the default field spec)."""
+    return list(
+        dict.fromkeys(
+            ["a_rec_id", "b_rec_id"]
+            + [c for f in cfg.deterministic_fields for c in (f"a_{f}", f"b_{f}")]
+            + [f"gamma_{f.name}" for f in cfg.fields]
+        )
+    )
+
+
 def link_dedupe(
     spark: SparkSession, pages: DataFrame, cfg: LinkageConfig | None = None
 ) -> LinkageResult:
@@ -272,7 +289,26 @@ def link_dedupe(
     records = ckpt.stage(
         "records", lambda: prepare_pages(pages, cfg), inputs=("pages",), extra_token=input_tok
     )
+    return link_prepared(spark, records, cfg, ckpt)
 
+
+def link_prepared(
+    spark: SparkSession,
+    records: DataFrame,
+    cfg: LinkageConfig,
+    ckpt: CheckpointManager,
+    em: em_mod.EMResult | None = None,
+) -> LinkageResult:
+    """The linkage core after the records stage: blocking -> candidate
+    pairs -> gamma scoring -> pattern counts -> EM -> matched pairs ->
+    connected components, each a stage of ``ckpt``. ``records`` is a
+    cut ``prepare_pages`` table (block keys materialized).
+
+    ``em=None`` fits the EM (sampled when ``cfg.sample_fraction`` asks,
+    checkpointed as ``em_*.json``). A given ``em`` is applied frozen —
+    the estimate-then-apply contract of ``R/emlinkRS.R``, used by
+    ``IncrementalLinker.compact()`` — with no sampling and no
+    ``em_*.json``."""
     blocked = _blocked_records(records, cfg)
     cand = ckpt.stage(
         "candidate_pairs",
@@ -303,25 +339,10 @@ def link_dedupe(
     _arrow_prev = spark.conf.get(_arrow_key, "10000")
     spark.conf.set(_arrow_key, "50000")
     gcols = [f"gamma_{f.name}" for f in fields]
-    # checkpoint only what downstream reads (r8, guide §2.3/§6): the
-    # pattern fit consumes gamma_*, matched_from_zeta consumes the ids,
-    # gamma_* and the deterministic fields — the remaining a_/b_
-    # comparison attrs (title, text_hash, ... on the default spec) are
-    # dead after the gamma ladder, and the pairs_gamma stage is the
-    # pipeline's LARGEST table: writing, fingerprinting and re-reading
-    # those columns was pure overhead (~40% of the stage's bytes at the
-    # default field spec).
-    keep_cols = list(
-        dict.fromkeys(
-            ["a_rec_id", "b_rec_id"]
-            + [c for f in cfg.deterministic_fields for c in (f"a_{f}", f"b_{f}")]
-            + gcols
-        )
-    )
     try:
         scored = ckpt.stage(
             "pairs_gamma",
-            lambda: gammas.with_gammas(gamma_src, fields).select(*keep_cols),
+            lambda: gammas.with_gammas(gamma_src, fields).select(*scored_columns(cfg)),
             inputs=("candidate_pairs",),
         )
     finally:
@@ -335,7 +356,9 @@ def link_dedupe(
             f"sample_fraction={cfg.sample_fraction} must be in (0, 1] "
             "(1.0 = fit on everything; a percentage like 15 is not a fraction)"
         )
-    sampled = cfg.sample_fraction is not None and 0 < cfg.sample_fraction < 1
+    sampled = (
+        em is None and cfg.sample_fraction is not None and 0 < cfg.sample_fraction < 1
+    )
     fit_src = scored.sample(cfg.sample_fraction, seed=42) if sampled else scored
     # SORT before fitting: emlink_mar's float accumulation is row-order
     # dependent and groupBy().toPandas() order is shuffle-
@@ -349,41 +372,43 @@ def link_dedupe(
         .reset_index(drop=True)
     )
 
-    # em checkpoint is keyed on the config hash AND the pairs_gamma
-    # content fingerprint (r5 review): every parquet stage chains
-    # upstream fingerprints, so without the data term here a resumed
-    # run over CHANGED input would rebuild the pattern table yet serve
-    # the stale EM fit — silently scoring new data with old m/u/lambda.
-    # A fingerprint bump also retires any pre-r5 checkpoint written
-    # under the old sample_fraction=1.0 perturbed-fit semantics.
-    _fp = ckpt.fingerprints.get("pairs_gamma", "")
-    em_key = f"em_{cfg.token()}_{hashlib.md5(_fp.encode()).hexdigest()[:12]}"
-    em_json = ckpt.get_json(em_key)
-    if em_json is not None:
-        em = em_mod.EMResult.from_json(em_json)
-    else:
-        # sample-fit mode must model the COMPLETE level universe: a rare
-        # agreement level absent from the sample would otherwise be
-        # scored as MAR-missing on the full table — dropping the
-        # field's evidence exactly on the rarest (most informative)
-        # patterns. Full-fit mode keeps data-derived levels (identical
-        # behavior and fits to every prior round).
-        em = em_mod.emlink_mar(
-            fit_patterns,
-            gcols,
-            p_m=cfg.p_m,
-            tol=cfg.tol,
-            iter_max=cfg.iter_max,
-            level_universe=(
-                {f"gamma_{f.name}": f.possible_levels() for f in fields}
-                if sampled
-                else None
-            ),
-            # one pseudo-pair so a universe level with zero sample
-            # counts keeps the init's level ordering as evidence
-            dirichlet_w=1.0 if sampled else 0.0,
-        )
-        ckpt.put_json(em_key, em.to_json())
+    if em is None:
+        # em checkpoint is keyed on the config hash AND the pairs_gamma
+        # content fingerprint (r5 review): every parquet stage chains
+        # upstream fingerprints, so without the data term here a resumed
+        # run over CHANGED input would rebuild the pattern table yet
+        # serve the stale EM fit — silently scoring new data with old
+        # m/u/lambda. A fingerprint bump also retires any pre-r5
+        # checkpoint written under the old sample_fraction=1.0
+        # perturbed-fit semantics.
+        _fp = ckpt.fingerprints.get("pairs_gamma", "")
+        em_key = f"em_{cfg.token()}_{hashlib.md5(_fp.encode()).hexdigest()[:12]}"
+        em_json = ckpt.get_json(em_key)
+        if em_json is not None:
+            em = em_mod.EMResult.from_json(em_json)
+        else:
+            # sample-fit mode must model the COMPLETE level universe: a
+            # rare agreement level absent from the sample would
+            # otherwise be scored as MAR-missing on the full table —
+            # dropping the field's evidence exactly on the rarest (most
+            # informative) patterns. Full-fit mode keeps data-derived
+            # levels (identical behavior and fits to every prior round).
+            em = em_mod.emlink_mar(
+                fit_patterns,
+                gcols,
+                p_m=cfg.p_m,
+                tol=cfg.tol,
+                iter_max=cfg.iter_max,
+                level_universe=(
+                    {f"gamma_{f.name}": f.possible_levels() for f in fields}
+                    if sampled
+                    else None
+                ),
+                # one pseudo-pair so a universe level with zero sample
+                # counts keeps the init's level ordering as evidence
+                dirichlet_w=1.0 if sampled else 0.0,
+            )
+            ckpt.put_json(em_key, em.to_json())
 
     full_patterns = (
         fit_patterns

@@ -58,14 +58,13 @@ match edges and merge clusters but never retract — a re-crawl whose
 text stops matching supersedes its own row yet cannot split a cluster
 in-stream (retraction is the classically-hard half of incremental CC).
 ``compact()`` is the split point: it re-links the LATEST crawl rows
-from scratch, so stale merges dissolve there. The relabel map grows
-with the merge count; ``compact()`` (first-class
-since r4) re-links the persisted state through the batch operators and
-empties it — schedule per N batches / map-size threshold, same
-tradeoff as any streaming CC; since r6 the linker can schedule it
-ITSELF via the ``auto_compact_segments`` / ``auto_compact_relabels``
-ctor thresholds (compact-before-batch, see ``__init__``). On Iceberg the relabel would be a MERGE
-INTO over the affected partition subset instead of a read-time map.
+from scratch through the batch linkage core
+(``pipeline.link_prepared``) under the frozen EM, so stale merges
+dissolve there and the relabel map (which grows with the merge count)
+empties. The caller schedules it — per N batches or by segment count /
+relabel-map size, the same tradeoff as any streaming CC. On Iceberg
+the relabel would be a MERGE INTO over the affected partition subset
+instead of a read-time map.
 """
 
 from __future__ import annotations
@@ -74,18 +73,20 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..em import EMResult, apply_em
 from ..operators import gammas
 from ..operators.pairs import candidate_pairs_two
-from ..plans.checkpoint import atomic_write_text
+from ..plans.checkpoint import CheckpointManager, atomic_write_text
 from ..plans.materialize import ScopedMaterializer
 from ..plans.pipeline import (
     LinkageConfig,
+    link_prepared,
     matched_from_zeta,
     prepare_pages,
+    scored_columns,
     zeta_pattern_df,
 )
 from ..session import local_frame
@@ -98,79 +99,21 @@ class IncrementalLinker:
         state_dir: str,
         em: EMResult,
         cfg: LinkageConfig | None = None,
-        *,
-        auto_compact_segments: int | None = None,
-        auto_compact_relabels: int | None = None,
-        keep_generations: int = 0,
     ):
-        """``auto_compact_segments`` / ``auto_compact_relabels`` (r6
-        verdict item 5): optional read-amplification bounds. When the
-        committed manifest lists >= that many record segments, or the
-        relabel map holds >= that many entries, the NEXT process_batch
-        call compacts FIRST (before linking its rows) — so a long-lived
-        stream bounds its own segment count and relabel-map size at
-        threshold+1 without external scheduling. Compact-before-batch
-        (not after) keeps the returned DataFrame valid: a post-batch
-        compact would GC the very segment the return value reads (the
-        VACUUM contract in compact()'s docstring). Corollary (r6
-        review): enabling these thresholds extends that contract to
-        every process_batch call — a LATER batch may auto-compact and
-        GC the segments backing frames returned by EARLIER calls, so
-        collect or persist a returned frame before the next batch if
-        you need it to outlive one. None (default) = never
-        auto-compact; call compact() manually.
-
-        ``keep_generations`` (r6 verdict item 4): retention grace for
-        compact()'s GC. 0 (default) keeps the strict VACUUM contract —
-        retired segments are deleted at commit, invalidating frames
-        handed out earlier. N >= 1 RELAXES it: the manifest carries the
-        last N superseded segment sets (``retained``) and GC spares
-        them, so a frame obtained before up to N compactions still
-        reads; generations roll off FIFO, so cleanup is eventual, not
-        cancelled — the same knob as Iceberg's snapshot retention
-        (expire_snapshots retain-last)."""
         self.spark = spark
         self.state_dir = state_dir
         self.em = em
         self.cfg = cfg or LinkageConfig()
-        for name, v in (
-            ("auto_compact_segments", auto_compact_segments),
-            ("auto_compact_relabels", auto_compact_relabels),
-        ):
-            if v is not None and v < 1:
-                raise ValueError(f"{name} must be >= 1, got {v}")
-        self.auto_compact_segments = auto_compact_segments
-        self.auto_compact_relabels = auto_compact_relabels
-        if keep_generations < 0:
-            raise ValueError(f"keep_generations must be >= 0, got {keep_generations}")
-        self.keep_generations = keep_generations
         # stage-wall counters of the most recent process_batch (see
         # _process_batch_inner) — observability only, never read back
         # by the engine itself
         self.last_batch_metrics: dict | None = None
         os.makedirs(state_dir, exist_ok=True)
 
-    def should_compact(self, manifest: dict | None = None) -> bool:
-        """The auto-compaction policy, also callable standalone by an
-        external scheduler: True when the committed state's segment
-        count or relabel-map size crosses the configured threshold."""
-        manifest = manifest if manifest is not None else self._load_manifest()
-        if (
-            self.auto_compact_segments is not None
-            and len(manifest["records"]) >= self.auto_compact_segments
-        ):
-            return True
-        return (
-            self.auto_compact_relabels is not None
-            and len(manifest.get("relabels", {})) >= self.auto_compact_relabels
-        )
-
     # -- state: manifest-pointer layout -----------------------------------
     # MANIFEST.json is the ONE commit point: {"version": 2, "seq": N,
     # "last_batch_id": B, "records": [segdir...], "entities":
-    # [segdir...], "relabels": {label: label}, "retained":
-    # [{seq, records, entities}...] (optional — keep_generations
-    # history; those segments are GC-exempt until they roll off)}.
+    # [segdir...], "relabels": {label: label}}.
     # Segment dirs are immutable once referenced; writers stage new
     # segments then swap the manifest via atomic rename.
     def _path(self, name: str) -> str:
@@ -201,14 +144,10 @@ class IncrementalLinker:
         """Best-effort removal of state dirs no manifest references —
         orphan segments from crashed batches and segments retired by
         compact(). Runs AFTER a successful commit only, so nothing
-        live is ever touched. Segment sets listed in the manifest's
-        ``retained`` history (keep_generations > 0) count as live
-        until their generation rolls off."""
+        live is ever touched."""
         import shutil
 
         live = set(manifest["records"]) | set(manifest["entities"])
-        for gen in manifest.get("retained", []):
-            live |= set(gen.get("records", [])) | set(gen.get("entities", []))
         for d in os.listdir(self.state_dir):
             full = os.path.join(self.state_dir, d)
             if d.startswith("seg_") and d not in live and os.path.isdir(full):
@@ -296,19 +235,14 @@ class IncrementalLinker:
     ) -> DataFrame | None:
         """Link one micro-batch; returns the new entities rows.
 
-        ``batch_id``: pass the foreachBatch id (stream_from_files does)
-        to make redelivered batches no-ops after a full commit; direct
-        ad-hoc calls may omit it (no replay dedup)."""
+        ``batch_id``: pass the foreachBatch id
+        (``writeStream.foreachBatch(lambda df, bid:
+        linker.process_batch(df, bid))``) to make redelivered batches
+        no-ops after a full commit; direct ad-hoc calls may omit it (no
+        replay dedup)."""
         manifest = self._load_manifest()
         if batch_id is not None and batch_id <= manifest["last_batch_id"]:
             return None  # replayed batch, already fully applied
-        if self.should_compact(manifest):
-            # compact-before-batch: atomic in itself (own manifest
-            # rename), so a crash between the compact and this batch's
-            # commit replays cleanly — the replay sees compacted state,
-            # a now-false should_compact, and stages the same seq
-            self.compact()
-            manifest = self._load_manifest()
         seq = manifest["seq"] + 1
         # ONE scratch namespace for the whole batch, deleted right
         # after the manifest commit (ADVICE r4: per-cut resolve(None)
@@ -395,9 +329,14 @@ class IncrementalLinker:
             skew_threshold=cfg.skew_threshold,
             target_block=cfg.target_block,
         ).where(F.col("a_rec_id") != F.col("b_rec_id"))
-        scored = gammas.with_gammas(pairs, fields)
         gcols = [f"gamma_{f.name}" for f in fields]
         t0 = time.time()
+        # cut once: the pattern collect and the matched-pair rule both
+        # read the scored pairs, which would otherwise run the pair join
+        # and the JW UDFs twice
+        scored = mat(
+            gammas.with_gammas(pairs, fields).select(*scored_columns(cfg)), "scored"
+        )
         patt = gammas.pattern_counts(scored, fields).toPandas()
         walls["index_pairs_gamma"] = round(time.time() - t0, 3)
         t0 = time.time()
@@ -569,11 +508,6 @@ class IncrementalLinker:
             "entities": manifest["entities"] + [ent_seg],
             "relabels": new_relabels,
         }
-        # carry the retention history through batch commits unchanged —
-        # dropping it here would let this commit's GC delete segments a
-        # pre-compact reader still holds (keep_generations contract)
-        if manifest.get("retained"):
-            committed["retained"] = manifest["retained"]
         self._commit_manifest(committed)
         self._gc_unreferenced(committed)
         walls["stage_commit"] = round(time.time() - t0, 3)
@@ -599,50 +533,31 @@ class IncrementalLinker:
     def compact(self) -> DataFrame | None:
         """Periodic state compaction — the module-docstring tradeoff
         ("a periodic re-run of batch CC compacts the relabel map")
-        made a first-class op. Re-links the ENTIRE persisted record
-        state through the batch operators with the FROZEN EM (salted
-        grid self-join -> gamma scoring -> the shared matched_from_zeta
-        rule -> large-star/small-star CC), rewrites BOTH states to the
-        latest-crawl rows (records keeps one row per rec_id; entities
-        gets the CC labels), and empties the relabel map. After
-        compact(), ``entities()`` serves exactly the clusters a
-        from-scratch batch run over the same pages with the same frozen
-        parameters produces, and read-time relabel/latest-wins cost is
-        zero until the next batch. Cost = one batch link over the
-        corpus — schedule it off-peak; every stage is the same
-        scale-audited plan the batch pipeline runs (no new shuffle
-        shapes). Commit protocol: the compacted rows are staged to
-        fresh ``seg_<seq>_compact_*`` segments and published by the
-        same atomic manifest rename as a batch — a crash mid-compact
-        leaves the pre-compact state fully intact; the retired
-        segments are garbage-collected after the commit. NOTE the
-        VACUUM contract: that GC invalidates DataFrames handed out by
-        earlier process_batch()/entities() calls (their lazy plans
-        point at retired segment dirs) — the same semantics as
-        expiring Iceberg snapshots; materialize anything you need
-        across a compaction, OR construct the linker with
-        ``keep_generations=N`` to retain the last N superseded segment
-        sets (pre-compact frames stay readable for N generations; see
-        __init__)."""
+        made a first-class op. Takes the LATEST crawl of every
+        persisted record and runs the batch linkage core
+        (``pipeline.link_prepared``: salted grid self-join -> gamma
+        scoring -> the shared matched_from_zeta rule -> large-star/
+        small-star CC) with the FROZEN EM, rewrites BOTH states to
+        those rows (records keeps one row per rec_id; entities gets the
+        CC labels), and empties the relabel map. After compact(),
+        ``entities()`` serves the clusters ``link_dedupe`` gives over
+        the same pages with the same frozen parameters — by
+        construction, one code path — and read-time relabel/latest-wins
+        cost is zero until the next batch. Cost = one batch link over
+        the corpus; schedule it off-peak. Commit protocol: the
+        compacted rows are staged to fresh ``seg_<seq>_compact_*``
+        segments and published by the same atomic manifest rename as a
+        batch — a crash mid-compact leaves the pre-compact state fully
+        intact; the retired segments are garbage-collected after the
+        commit. NOTE the VACUUM contract: that GC invalidates
+        DataFrames handed out by earlier process_batch()/entities()
+        calls (their lazy plans point at retired segment dirs) — the
+        same semantics as expiring Iceberg snapshots; materialize
+        anything you need across a compaction."""
         manifest = self._load_manifest()
-        records = self._read_segments(manifest, "records")
-        if records is None:
+        state = self._read_segments(manifest, "records")
+        if state is None:
             return None
-        cfg = self.cfg
-        fields = list(cfg.fields)
-        gcols = [f"gamma_{f.name}" for f in fields]
-        mat = ScopedMaterializer()
-        try:
-            return self._compact_inner(manifest, records, cfg, fields, gcols, mat)
-        finally:
-            mat.close()
-
-    def _compact_inner(self, manifest, records, cfg, fields, gcols, mat):
-        from pyspark.sql import Window
-
-        from ..operators.cluster import connected_components
-        from ..operators.pairs import candidate_pairs
-        from ..plans.pipeline import _blocked_records
         # re-crawled urls appear once per batch in the append-only
         # records state (same rec_id = xxhash64(url)); keep the LATEST
         # crawl deterministically (_seq desc; content-hash tiebreak for
@@ -652,37 +567,7 @@ class IncrementalLinker:
         # attributes.
         wins = Window.partitionBy("rec_id").orderBy(
             F.desc("_seq"),
-            F.asc(F.xxhash64(*[c for c in records.columns if c != "rec_id"])),
-        )
-        records = mat(
-            records.withColumn("_rn", F.row_number().over(wins))
-            .where(F.col("_rn") == 1)
-            .drop("_rn"),
-            "compact_records",
-        )
-
-        blocked = _blocked_records(records, cfg)
-        pairs = candidate_pairs(
-            blocked, skew_threshold=cfg.skew_threshold, target_block=cfg.target_block
-        )
-        scored = gammas.with_gammas(pairs, fields)
-        patt = gammas.pattern_counts(scored, fields).toPandas()
-        if len(patt):
-            zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            edges = matched_from_zeta(
-                scored,
-                zdf,
-                gcols,
-                threshold=cfg.threshold,
-                deterministic_fields=cfg.deterministic_fields,
-            ).select("a_rec_id", "b_rec_id")
-        else:
-            edges = records.select(
-                F.col("rec_id").alias("a_rec_id")
-            ).limit(0).withColumn("b_rec_id", F.col("a_rec_id"))
-
-        labels = connected_components(
-            edges, records.select(F.col("rec_id").alias("id")), materializer=mat
+            F.asc(F.xxhash64(*[c for c in state.columns if c != "rec_id"])),
         )
         # compaction BUMPS seq: reusing manifest['seq'] would name the
         # staged segments identically to a previous compact's LIVE
@@ -691,20 +576,29 @@ class IncrementalLinker:
         # the current manifest still references, exactly the corruption
         # the pointer protocol exists to prevent (r5 review finding)
         seq = manifest["seq"] + 1
-        stamp = F.lit(seq).cast("long")
-        new_ent = (
-            labels.withColumnRenamed("id", "rec_id")
-            .join(records.select("rec_id", "url"), "rec_id")
-            .select("rec_id", "cluster_id", "url")
-            .withColumn("_seq", stamp)
-        )
-        # stage the compacted states as fresh segments (records state
-        # compacts too: superseded crawl rows are dead weight for every
-        # future batch's index scan), then swap the manifest
         rec_seg = f"seg_{seq:06d}_compact_records"
         ent_seg = f"seg_{seq:06d}_compact_entities"
-        new_ent.write.mode("overwrite").parquet(self._path(ent_seg))
-        records.write.mode("overwrite").parquet(self._path(rec_seg))
+        # no root: every stage is a scratch cut, freed once the compacted
+        # segments are written (nothing reads the cuts after that)
+        ckpt = CheckpointManager(self.spark, None)
+        try:
+            records = ckpt.stage(
+                "compact_records",
+                lambda: state.withColumn("_rn", F.row_number().over(wins))
+                .where(F.col("_rn") == 1)
+                .drop("_rn"),
+            )
+            linked = link_prepared(self.spark, records, self.cfg, ckpt, em=self.em)
+            new_ent = linked.entities.select("rec_id", "cluster_id", "url").withColumn(
+                "_seq", F.lit(seq).cast("long")
+            )
+            # stage the compacted states as fresh segments (records
+            # state compacts too: superseded crawl rows are dead weight
+            # for every future batch's index scan), then swap the manifest
+            new_ent.write.mode("overwrite").parquet(self._path(ent_seg))
+            records.write.mode("overwrite").parquet(self._path(rec_seg))
+        finally:
+            ckpt.close()
         committed = {
             "version": 2,
             "seq": seq,  # bumped: the compacted rows supersede everything
@@ -713,37 +607,10 @@ class IncrementalLinker:
             "entities": [ent_seg],
             "relabels": {},
         }
-        if self.keep_generations > 0:
-            # retention grace (keep_generations contract): the
-            # superseded segment set joins the retained history; the
-            # oldest generation rolls off FIFO and becomes GC-eligible
-            retired = {
-                "seq": manifest["seq"],
-                "records": manifest["records"],
-                "entities": manifest["entities"],
-            }
-            committed["retained"] = (manifest.get("retained", []) + [retired])[
-                -self.keep_generations :
-            ]
         self._commit_manifest(committed)
         self._gc_unreferenced(committed)
         return (
             self.spark.read.schema(new_ent.schema)
             .parquet(self._path(ent_seg))
             .drop("_seq")
-        )
-
-    # -- streaming wiring ---------------------------------------------------
-    def stream_from_files(self, input_dir: str, checkpoint_dir: str, schema):
-        """readStream(file source) -> foreachBatch(process_batch). The
-        real batch_id flows through, so redelivered batches after a
-        restart are no-ops once committed."""
-        stream = self.spark.readStream.schema(schema).parquet(input_dir)
-        return (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.process_batch(df, bid) and None
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -178,78 +178,6 @@ def test_process_batch_skips_state_read_when_nothing_matched(spark, tmp_path):
     assert len(set(got.values())) == 5  # five singletons
 
 
-# --------------------------- verdict item 5: auto-compaction policy
-
-
-def test_auto_compact_bounds_segments_and_matches_manual(spark, tmp_path):
-    """r6 verdict item 5: with auto_compact_segments=2 a long stream
-    bounds its own read amplification — the committed manifest never
-    lists more than 2 record segments at batch START (threshold
-    compacts before linking), and the final partition (after a closing
-    compact) equals the never-auto-compacted linker's."""
-    from fastlink_spark.plans.pipeline import LinkageConfig, link_dedupe
-    from fastlink_spark.sources.fixtures import generate_pages
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-
-    fx = generate_pages(n_base=36, seed=13)
-    pdf = fx.pages.reset_index(drop=True)
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    rows = [
-        (r["url"], r["warc_ts"].to_pydatetime(), r["html"], r["text"], r["lang"])
-        for _, r in pdf.iterrows()
-    ]
-    batch = link_dedupe(spark, spark.createDataFrame(rows, schema), LinkageConfig())
-    n_batches = 5
-    auto = IncrementalLinker(
-        spark, str(tmp_path / "auto"), batch.em, LinkageConfig(),
-        auto_compact_segments=2,
-    )
-    manual = IncrementalLinker(spark, str(tmp_path / "man"), batch.em, LinkageConfig())
-    for b in range(n_batches):
-        chunk = [rows[i] for i in range(len(rows)) if i % n_batches == b]
-        auto.process_batch(spark.createDataFrame(chunk, schema), batch_id=b)
-        manual.process_batch(spark.createDataFrame(chunk, schema), batch_id=b)
-        m = auto._load_manifest()
-        # threshold 2: a batch either appended to 1 segment (now 2) or
-        # found 2, compacted to 1, and appended (now 2) — never 3+
-        assert len(m["records"]) <= 2 and len(m["entities"]) <= 2
-
-    def parts(linker):
-        by = {}
-        for r in linker.entities().collect():
-            by.setdefault(r["cluster_id"], set()).add(r["url"])
-        return sorted(map(frozenset, by.values()), key=sorted)
-
-    auto.compact()
-    manual.compact()
-    assert parts(auto) == parts(manual)
-
-
-def test_should_compact_thresholds(spark, tmp_path):
-    from fastlink_spark.em import EMResult
-    from fastlink_spark.plans.pipeline import LinkageConfig
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-
-    em = EMResult(
-        gamma_cols=[], levels={}, lam=0.1, m={}, u={},
-        iterations=0, converged=True,
-    )
-    with pytest.raises(ValueError, match="auto_compact_segments"):
-        IncrementalLinker(
-            spark, str(tmp_path / "bad"), em, LinkageConfig(), auto_compact_segments=0
-        )
-    lk = IncrementalLinker(
-        spark, str(tmp_path / "s"), em, LinkageConfig(),
-        auto_compact_segments=3, auto_compact_relabels=2,
-    )
-    assert not lk.should_compact({"records": ["a", "b"], "entities": [], "relabels": {}})
-    assert lk.should_compact({"records": ["a", "b", "c"], "entities": [], "relabels": {}})
-    assert lk.should_compact({"records": [], "entities": [], "relabels": {"1": 0, "2": 0}})
-    # default: never
-    lk2 = IncrementalLinker(spark, str(tmp_path / "s2"), em, LinkageConfig())
-    assert not lk2.should_compact({"records": ["a"] * 99, "entities": [], "relabels": {}})
-
-
 _ = np  # imported for later round-6 sections
 
 

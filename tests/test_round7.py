@@ -1,11 +1,9 @@
 """Round-7 regression tests: the r6 ADVICE items and the r7 verdict
-work list (compact retention, skew stress, LSAP oracle twin)."""
+work list (compact's VACUUM contract, skew stress, LSAP oracle twin)."""
 
 from __future__ import annotations
 
 import os
-
-import pytest
 
 
 def _page_rows(n_base: int, seed: int):
@@ -21,50 +19,12 @@ def _page_rows(n_base: int, seed: int):
     return rows, schema
 
 
-# --------------------------- verdict item 4: compact() retention grace
-
-
-def test_compact_keep_generations_retention(spark, tmp_path):
-    """r7 verdict item 4: keep_generations=1 lets a frame obtained
-    BEFORE compact() still read afterwards (its segments ride in the
-    manifest's retained history), while a second compaction rolls the
-    generation off and GC eventually removes the dirs — retention is a
-    grace period, not a leak."""
-    from fastlink_spark.plans.pipeline import LinkageConfig, link_dedupe
-    from fastlink_spark.streaming.incremental import IncrementalLinker
-
-    rows, schema = _page_rows(30, 17)
-    batch = link_dedupe(spark, spark.createDataFrame(rows, schema), LinkageConfig())
-    linker = IncrementalLinker(
-        spark, str(tmp_path / "st"), batch.em, LinkageConfig(), keep_generations=1
-    )
-    half = len(rows) // 2
-    frame0 = linker.process_batch(spark.createDataFrame(rows[:half], schema), batch_id=0)
-    n0 = frame0.count()
-    gen0_dirs = set(linker._load_manifest()["records"]) | set(
-        linker._load_manifest()["entities"]
-    )
-    linker.compact()
-    # grace: pre-compact frame still reads, byte-for-byte row count
-    assert frame0.count() == n0
-    m = linker._load_manifest()
-    assert len(m["retained"]) == 1
-    assert all(os.path.isdir(tmp_path / "st" / d) for d in gen0_dirs)
-    # a BATCH commit must carry the retained history through unchanged
-    linker.process_batch(spark.createDataFrame(rows[half:], schema), batch_id=1)
-    assert len(linker._load_manifest()["retained"]) == 1
-    assert all(os.path.isdir(tmp_path / "st" / d) for d in gen0_dirs)
-    # second compact: gen-0 rolls off (keep_generations=1) and its
-    # dirs are GC'd — eventual cleanup still holds
-    linker.compact()
-    m2 = linker._load_manifest()
-    assert len(m2["retained"]) == 1
-    assert not any(os.path.isdir(tmp_path / "st" / d) for d in gen0_dirs)
+# --------------------------- compact(): the VACUUM contract
 
 
 def test_compact_default_contract_unchanged(spark, tmp_path):
-    """keep_generations=0 (default): the strict VACUUM contract — the
-    superseded segments are gone right after compact()."""
+    """The strict VACUUM contract: the superseded segments are gone
+    right after compact()."""
     from fastlink_spark.plans.pipeline import LinkageConfig, link_dedupe
     from fastlink_spark.streaming.incremental import IncrementalLinker
 
@@ -74,12 +34,7 @@ def test_compact_default_contract_unchanged(spark, tmp_path):
     linker.process_batch(spark.createDataFrame(rows, schema), batch_id=0)
     gen0_dirs = set(linker._load_manifest()["records"])
     linker.compact()
-    assert "retained" not in linker._load_manifest()
     assert not any(os.path.isdir(tmp_path / "st0" / d) for d in gen0_dirs)
-    with pytest.raises(ValueError):
-        IncrementalLinker(
-            spark, str(tmp_path / "neg"), batch.em, LinkageConfig(), keep_generations=-1
-        )
 
 
 # --------------------------- verdict item 5: adversarial skew stress
