@@ -183,9 +183,19 @@ class CheckpointManager:
         # downstream tokens chain these so upstream content changes
         # invalidate automatically
         self.fingerprints: dict[str, str] = {}
-        self._op_stages_wiped = False
-        # no root: every stage is cut into this one scratch namespace
+        # operator scratch (materializer()): under the root when there is
+        # one, with prior-RUN orphans wiped before this run cuts any (a
+        # shorter re-run would otherwise leave higher-suffix round dirs
+        # behind forever); else the application's scratch root
+        self._op_root = None if root is None else os.path.join(root, "_op_stages")
+        if self._op_root is not None:
+            import shutil
+
+            shutil.rmtree(self._op_root, ignore_errors=True)
+        # no root: every stage is cut into this one scratch namespace;
+        # close() frees it and every materializer() handed out
         self._scratch = ScopedMaterializer()
+        self._handed = [self._scratch]
 
     def _paths(self, name: str) -> tuple[str, str]:
         assert self.root is not None
@@ -275,10 +285,12 @@ class CheckpointManager:
         return out
 
     def close(self) -> None:
-        """Free the stage cuts of a manager without a root; frames read
-        from its stages are dead afterwards. A rooted manager's stages
-        are the checkpoint and stay on disk."""
-        self._scratch.close()
+        """Free the run's scratch: the stage cuts of a manager without a
+        root and every ``materializer()`` it handed out. Frames read
+        from them are dead afterwards. A rooted manager's stages are the
+        checkpoint and stay on disk. Idempotent."""
+        for mat in self._handed:
+            mat.close()
 
     def materializer(self):
         """Handle for OPERATOR-INTERNAL lineage cuts (CC rounds, LSH
@@ -289,20 +301,11 @@ class CheckpointManager:
         transient scratch — they carry no resume token and are
         rewritten on every run. Call once per operator invocation: each
         handle binds its own ``inv_<n>`` namespace (plans/materialize.py
-        says why), and ``close()`` frees it once nothing reads its cuts."""
-        if self.root is None:
-            return ScopedMaterializer()
-        scratch = os.path.join(self.root, "_op_stages")
-        if not self._op_stages_wiped:
-            # wipe prior-RUN orphans once per manager (a shorter re-run
-            # would otherwise leave higher-suffix round dirs behind
-            # forever); never mid-run — a later wipe could delete
-            # scratch that an earlier invocation's live frames read.
-            import shutil
-
-            shutil.rmtree(scratch, ignore_errors=True)
-            self._op_stages_wiped = True
-        return ScopedMaterializer(scratch)
+        says why). Its ``close()`` frees it once nothing reads its cuts;
+        the manager's ``close()`` frees every handle still open."""
+        mat = ScopedMaterializer(self._op_root)
+        self._handed.append(mat)
+        return mat
 
     def put_json(self, name: str, payload: str) -> None:
         if self.root is None:

@@ -6,6 +6,10 @@ Unlike plans/pipeline.link_dedupe (the dedupe branch + clustering that
 the BASELINE north star centers on), this returns MATCHED PAIRS with
 posteriors — fastLink's native output shape — plus the optional 1:1
 ``dedupeMatches`` pass and ``getMatches``-style row materialization.
+The scoring tail (pattern counts -> EM -> zeta -> threshold) is the
+dedupe pipeline's own ``pipeline.fit_and_match``; the one cut, the
+scored pairs, is stage ``pairs_gamma`` of a rootless
+``CheckpointManager`` that the result keeps, so ``close()`` frees it.
 """
 
 from __future__ import annotations
@@ -19,7 +23,10 @@ from .. import em as em_mod
 from ..operators import gammas
 from ..operators.dedupe_matches import dedupe_matches
 from ..operators.pairs import candidate_pairs_two
-from .materialize import resolve as _resolve_mat
+from .checkpoint import CheckpointManager
+# unused here; perfbench/trace.py patches this name, so it must import
+from .materialize import resolve as _resolve_mat  # noqa: F401
+from .pipeline import LinkageConfig, fit_and_match
 
 
 @dataclass
@@ -27,6 +34,11 @@ class LinkTwoResult:
     matched_pairs: DataFrame  # (a_<id>, b_<id>, zeta)
     em: em_mod.EMResult
     pattern_counts: "object"
+    checkpoint: CheckpointManager
+
+    def close(self) -> None:
+        """Free the scratch ``matched_pairs`` reads; it is dead afterwards."""
+        self.checkpoint.close()
 
 
 def link_records(
@@ -68,44 +80,33 @@ def link_records(
     pairs = candidate_pairs_two(
         blocked(df_a), blocked(df_b), id_col=id_col, skew_threshold=skew_threshold
     )
-    gcols = [f"gamma_{f.name}" for f in fields]
-    # ONE slim cut, after scoring: pattern_counts and matched_from_zeta
-    # both read it (uncut, every string-field UDF would score the pairs
-    # twice), and they read only the ids and gamma_*. The compared
-    # strings are dead once scored, so a cut of the raw pairs, or
-    # strings kept in this one, would only be written and read back
-    # (the pipeline's pairs_gamma stage keeps columns the same way).
-    scored = _resolve_mat(None)(
-        gammas.with_gammas(pairs, fields).select(
-            f"a_{id_col}", f"b_{id_col}", *gcols
+    cfg = LinkageConfig(
+        fields=tuple(fields), threshold=threshold, p_m=p_m, tol=tol,
+        iter_max=iter_max, deterministic_fields=(),
+    )
+    ckpt = CheckpointManager(spark, None)
+    id_a, id_b = f"a_{id_col}", f"b_{id_col}"
+    # ONE slim cut, after scoring: the pattern collect and the
+    # matched-pair rule both read it, and only its ids and gamma_*
+    # (the compared strings are dead once scored; scored_columns keeps
+    # the dedupe pipeline's pairs_gamma stage slim the same way)
+    scored = ckpt.stage(
+        "pairs_gamma",
+        lambda: gammas.with_gammas(pairs, fields).select(
+            id_a, id_b, *[f"gamma_{f.name}" for f in fields]
         ),
-        "link_two_scored",
     )
-    # sort before fitting: emlink_mar's float accumulation is row-order
-    # dependent and toPandas() order is shuffle-nondeterministic (same
-    # r5 determinism fix as the pipeline path)
-    patt = (
-        gammas.pattern_counts(scored, fields)
-        .toPandas()
-        .sort_values(gcols, na_position="last")
-        .reset_index(drop=True)
-    )
-    em = em_mod.emlink_mar(patt, gcols, p_m=p_m, tol=tol, iter_max=iter_max)
-    scored_patterns = em_mod.apply_em(patt, em)
-
-    # the SHARED matched-pair rule (plans.pipeline) — an inline copy
-    # here had already drifted from the pipeline's version once
-    from .pipeline import matched_from_zeta, zeta_pattern_df
-
-    zdf = zeta_pattern_df(spark, scored_patterns, gcols)
-    matched = matched_from_zeta(
-        scored, zdf, gcols, id_a=f"a_{id_col}", id_b=f"b_{id_col}", threshold=threshold
+    em, scored_patterns, matched = fit_and_match(
+        spark, scored, cfg, ckpt, id_a=id_a, id_b=id_b
     )
     if one_to_one:
         matched = dedupe_matches(
-            matched, id_a=f"a_{id_col}", id_b=f"b_{id_col}", method=assignment
+            matched, id_a=id_a, id_b=id_b, method=assignment,
+            materializer=ckpt.materializer(),
         )
-    return LinkTwoResult(matched_pairs=matched, em=em, pattern_counts=scored_patterns)
+    return LinkTwoResult(
+        matched_pairs=matched, em=em, pattern_counts=scored_patterns, checkpoint=ckpt
+    )
 
 
 def get_matches(

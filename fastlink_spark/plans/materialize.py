@@ -204,16 +204,16 @@ class ScopedMaterializer:
     usable), taking the session from the frame it cuts.
     ``resolve(None)`` returns one per operator invocation;
     ``CheckpointManager.materializer`` returns one rooted at
-    ``<checkpoint>/_op_stages``. Without ``close()`` a namespace lives
-    until JVM exit (the app root's atexit hook) or the next checkpoint
-    run's orphan wipe — fine for a one-shot batch job, but a
-    long-running streaming driver calling an operator per micro-batch
-    would accumulate a parquet copy of every batch's intermediates
-    until shutdown (ADVICE r4). A caller that knows its cuts' lifetime
-    (e.g. IncrementalLinker.process_batch: nothing re-reads the cuts
-    after the state commit) creates one of these per unit of work and
-    closes it when done. close() is idempotent; a call after close
-    lazily re-opens a fresh namespace."""
+    ``<checkpoint>/_op_stages`` (or the app root without a checkpoint),
+    and a rootless ``CheckpointManager`` cuts its stages into one.
+    Without ``close()`` a namespace lives until JVM exit (the app
+    root's atexit hook) or the next checkpoint run's orphan wipe — a
+    long-running driver would accumulate a parquet copy of every unit
+    of work's intermediates. Every linkage entry point cuts through a
+    ``CheckpointManager`` whose ``close()`` closes these (a result's
+    ``close()``; ``process_batch`` and ``compact()`` close theirs
+    themselves). close() is idempotent; a call after close lazily
+    re-opens a fresh namespace."""
 
     def __init__(self, root: str | None = None):
         self._root = root

@@ -77,6 +77,7 @@ class LinkageConfig:
                 "threshold": self.threshold,
                 "p_m": self.p_m,
                 "tol": self.tol,
+                "iter_max": self.iter_max,
                 "blocks": [
                     self.use_host_block,
                     self.use_minhash_block,
@@ -102,6 +103,12 @@ class LinkageResult:
     em: em_mod.EMResult
     pattern_counts: "object"  # pandas DataFrame (gamma_*, cnt, zeta)
     metrics: dict
+    checkpoint: CheckpointManager
+
+    def close(self) -> None:
+        """Free the run's scratch; without ``checkpoint_dir`` that kills
+        ``entities`` and ``matched_pairs`` (``CheckpointManager.close``)."""
+        self.checkpoint.close()
 
 
 def prepare_pages(pages: DataFrame, cfg: "LinkageConfig | None" = None) -> DataFrame:
@@ -142,12 +149,8 @@ def zeta_pattern_df(
 ) -> DataFrame:
     """Fitted (gamma pattern -> zeta) pandas frame -> the <=3^K-row
     literal DataFrame broadcast into the matched-pair join (NULL gamma
-    levels stay NULL).
-
-    Built as a JVM LocalRelation (``session.local_frame``), never with
-    ``createDataFrame(<list>)``: that is a Python RDD, and the
-    matched-pair job reading it would start a second ``pyspark.daemon``
-    and fresh workers just to unpickle a few dozen rows."""
+    levels stay NULL), a JVM LocalRelation (``session.local_frame``
+    says why)."""
     import pandas as pd
 
     zrows = [
@@ -168,33 +171,24 @@ def matched_from_zeta(
     id_a: str = "a_rec_id",
     id_b: str = "b_rec_id",
 ) -> DataFrame:
-    """THE matched-pair rule — one definition shared by the batch
-    pipeline (which state compaction runs), the incremental linker and
-    the two-table link_records path (divergence between them silently
-    splits/merges clusters differently per path): null-safe broadcast
-    zeta join + FS threshold, with the deterministic-fields exact-match
-    pass accepted regardless of zeta (deterministic verdict wins: such
-    a pair carries zeta 1.0, the max of both branches). Input pairs are
-    unique per (id_a, id_b) — every producer dedupes on that key — so
-    one projected pass emits the same byte-stable pair list the old
-    two-branch union+groupBy(max) shape did, minus one full scan of the
-    pair stream and one exchange."""
+    """THE matched-pair rule, called in the package only from
+    ``fit_and_match`` — the one scoring tail of the batch pipeline (which state compaction
+    runs), the incremental linker and two-table ``link_records``, so
+    the paths cannot split or merge clusters differently. Lazy: the
+    caller cuts it. Null-safe broadcast zeta join + FS threshold, with
+    the deterministic-fields exact-match pass accepted regardless of
+    zeta (such a pair carries zeta 1.0, the max of both verdicts).
+
+    One projected pass over the pair stream: input pairs are unique
+    per (id_a, id_b) — every producer dedupes on that key — so no
+    union + groupBy(max) of two branches is needed. The LEFT join lets
+    a pattern absent from ``zeta_df`` (impossible when it covers the
+    observed patterns, as every caller's does) survive iff
+    deterministic."""
     cond = None
     for c in gcols:
         eq = scored[c].eqNullSafe(zeta_df[c])
         cond = eq if cond is None else (cond & eq)
-    # ONE pass over the pair stream (r8 optimization — guide §2.3/§2.4):
-    # the old shape scanned `scored` twice (FS branch + deterministic
-    # branch) and paid a union + groupBy(max) exchange to merge them.
-    # Candidate pairs are unique per (id_a, id_b) — every producer
-    # (candidate_pairs / candidate_pairs_two, dedupe_pairs=True) dedupes
-    # on exactly that key — so the merge never collapses anything except
-    # the pair-in-both-branches case, which a single projected
-    # when(det, 1.0).otherwise(zeta) resolves identically (zeta <= 1.0,
-    # so max(zeta, 1.0) == 1.0 == the deterministic verdict). LEFT join
-    # keeps the old inner+union semantics for a pattern absent from
-    # zeta_df (impossible when zeta_df covers the observed patterns, as
-    # every caller's does): such a pair survives iff deterministic.
     det_cond = None
     for f in deterministic_fields:
         eq = (
@@ -271,86 +265,28 @@ def scored_columns(cfg: LinkageConfig) -> list[str]:
     )
 
 
-def link_dedupe(
-    spark: SparkSession, pages: DataFrame, cfg: LinkageConfig | None = None
-) -> LinkageResult:
-    """Dedupe-mode linkage (dfA ≡ dfB branch of ``fastLink()``) over a
-    Common-Crawl-style pages table; returns entity clusters."""
-    cfg = cfg or LinkageConfig()
-    ckpt = CheckpointManager(spark, cfg.checkpoint_dir, cfg.token())
-
-    # bind the first stage to its raw input: Iceberg snapshot id in
-    # production; the input plan's semanticHash here (catches a changed
-    # input path/plan — in-place content edits need the snapshot id)
-    try:
-        input_tok = str(pages.semanticHash())
-    except Exception:
-        input_tok = ""
-    records = ckpt.stage(
-        "records", lambda: prepare_pages(pages, cfg), inputs=("pages",), extra_token=input_tok
-    )
-    return link_prepared(spark, records, cfg, ckpt)
-
-
-def link_prepared(
+def fit_and_match(
     spark: SparkSession,
-    records: DataFrame,
+    scored: DataFrame,
     cfg: LinkageConfig,
     ckpt: CheckpointManager,
     em: em_mod.EMResult | None = None,
-) -> LinkageResult:
-    """The linkage core after the records stage: blocking -> candidate
-    pairs -> gamma scoring -> pattern counts -> EM -> matched pairs ->
-    connected components, each a stage of ``ckpt``. ``records`` is a
-    cut ``prepare_pages`` table (block keys materialized).
-
-    ``em=None`` fits the EM (sampled when ``cfg.sample_fraction`` asks,
-    checkpointed as ``em_*.json``). A given ``em`` is applied frozen —
-    the estimate-then-apply contract of ``R/emlinkRS.R``, used by
-    ``IncrementalLinker.compact()`` — with no sampling and no
-    ``em_*.json``."""
-    blocked = _blocked_records(records, cfg)
-    cand = ckpt.stage(
-        "candidate_pairs",
-        lambda: pairs_mod.candidate_pairs(
-            blocked,
-            skew_threshold=cfg.skew_threshold,
-            target_block=cfg.target_block,
-        ),
-        inputs=("records",),
-    )
-
+    *,
+    id_a: str = "a_rec_id",
+    id_b: str = "b_rec_id",
+) -> tuple[em_mod.EMResult, "object", DataFrame]:
+    """THE scoring tail of ``link_prepared``, ``link_two.link_records``
+    and ``IncrementalLinker.process_batch``: pattern counts -> EM
+    (``R/emlinkMARmov.R``) -> zeta per pattern -> threshold, over a CUT
+    scored pair stream. ``em=None`` fits the EM (sampled when
+    ``cfg.sample_fraction`` asks, kept in ``ckpt`` as ``em_*.json``); a
+    given ``em`` is applied frozen (``R/emlinkRS.R``): no sampling, no
+    ``em_*.json``. Returns ``(em, scored_patterns, matched)``, with
+    ``matched`` lazy: the caller decides where it is cut."""
     fields = list(cfg.fields)
-    # Repartition before the UDF stage ONLY when the pair stream arrives
-    # in fewer partitions than 4x cores: smooths per-partition JW-content
-    # skew (the gamma wall is set by the slowest task) for small/skewed
-    # inputs, but at 100 TB the candidate-pair table is the job's largest
-    # table and already lands in thousands of well-distributed partitions
-    # — a full exchange there would be the bottleneck. AQE's skew
-    # handling covers the residual case.
-    par = spark.sparkContext.defaultParallelism * 4
-    gamma_src = cand if cand.rdd.getNumPartitions() >= par else cand.repartition(par)
-    # 50k-row Arrow batches for the scoring stage only: amortizes
-    # per-batch UDF overhead and widens the JW kernel's unique-pair
-    # factorization window (~7% measured). Pair rows are slim strings
-    # (~20 MB/batch); the OPH UDF stage keeps the 10k default — its
-    # rows carry token arrays.
-    _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    _arrow_prev = spark.conf.get(_arrow_key, "10000")
-    spark.conf.set(_arrow_key, "50000")
     gcols = [f"gamma_{f.name}" for f in fields]
-    try:
-        scored = ckpt.stage(
-            "pairs_gamma",
-            lambda: gammas.with_gammas(gamma_src, fields).select(*scored_columns(cfg)),
-            inputs=("candidate_pairs",),
-        )
-    finally:
-        spark.conf.set(_arrow_key, _arrow_prev)
     # ONE predicate decides both whether sampling happens and whether
-    # the fit gets sample-mode regularization below (ADVICE r4:
-    # sample_fraction=1.0 used to skip the sample yet still perturb the
-    # fit with level_universe + dirichlet pseudo-counts)
+    # the fit gets sample-mode regularization below
     if cfg.sample_fraction is not None and not (0 < cfg.sample_fraction <= 1):
         raise ValueError(
             f"sample_fraction={cfg.sample_fraction} must be in (0, 1] "
@@ -361,10 +297,9 @@ def link_prepared(
     )
     fit_src = scored.sample(cfg.sample_fraction, seed=42) if sampled else scored
     # SORT before fitting: emlink_mar's float accumulation is row-order
-    # dependent and groupBy().toPandas() order is shuffle-
-    # nondeterministic — without this the fitted EM differs in the last
-    # ulp across identical runs (r5 review, reproduced; the oracle twin
-    # _fit_em sorts for the same reason). na_position pins NA patterns.
+    # dependent and toPandas() order is shuffle-nondeterministic (the
+    # oracle twin _fit_em sorts for the same reason). na_position pins
+    # NA patterns.
     fit_patterns = (
         gammas.pattern_counts(fit_src, fields)
         .toPandas()
@@ -373,14 +308,9 @@ def link_prepared(
     )
 
     if em is None:
-        # em checkpoint is keyed on the config hash AND the pairs_gamma
-        # content fingerprint (r5 review): every parquet stage chains
-        # upstream fingerprints, so without the data term here a resumed
-        # run over CHANGED input would rebuild the pattern table yet
-        # serve the stale EM fit — silently scoring new data with old
-        # m/u/lambda. A fingerprint bump also retires any pre-r5
-        # checkpoint written under the old sample_fraction=1.0
-        # perturbed-fit semantics.
+        # keyed on the config hash AND the pairs_gamma content
+        # fingerprint: without the data term a resumed run over CHANGED
+        # input would rebuild the pattern table yet serve the stale fit
         _fp = ckpt.fingerprints.get("pairs_gamma", "")
         em_key = f"em_{cfg.token()}_{hashlib.md5(_fp.encode()).hexdigest()[:12]}"
         em_json = ckpt.get_json(em_key)
@@ -417,41 +347,113 @@ def link_prepared(
     )
     scored_patterns = em_mod.apply_em(full_patterns, em)
 
-    # null-safe broadcast join on the gamma pattern (<=3^K rows) +
-    # deterministic pass — the shared rule (matched_from_zeta) keeps
-    # batch / streaming / compaction semantics identical by definition
     zeta_df = zeta_pattern_df(spark, scored_patterns, gcols)
-    matched = ckpt.stage(
-        "matched_pairs",
-        lambda: matched_from_zeta(
-            scored,
-            zeta_df,
-            gcols,
-            threshold=cfg.threshold,
-            deterministic_fields=cfg.deterministic_fields,
-        ),
-        inputs=("pairs_gamma",),
+    matched = matched_from_zeta(
+        scored,
+        zeta_df,
+        gcols,
+        threshold=cfg.threshold,
+        deterministic_fields=cfg.deterministic_fields,
+        id_a=id_a,
+        id_b=id_b,
     )
+    return em, scored_patterns, matched
+
+
+def link_dedupe(
+    spark: SparkSession, pages: DataFrame, cfg: LinkageConfig | None = None
+) -> LinkageResult:
+    """Dedupe-mode linkage (dfA ≡ dfB branch of ``fastLink()``) over a
+    Common-Crawl-style pages table; returns entity clusters."""
+    cfg = cfg or LinkageConfig()
+    ckpt = CheckpointManager(spark, cfg.checkpoint_dir, cfg.token())
+
+    # bind the first stage to its raw input: Iceberg snapshot id in
+    # production; the input plan's semanticHash here (catches a changed
+    # input path/plan — in-place content edits need the snapshot id)
+    try:
+        input_tok = str(pages.semanticHash())
+    except Exception:
+        input_tok = ""
+    records = ckpt.stage(
+        "records", lambda: prepare_pages(pages, cfg), inputs=("pages",), extra_token=input_tok
+    )
+    return link_prepared(spark, records, cfg, ckpt)
+
+
+def link_prepared(
+    spark: SparkSession,
+    records: DataFrame,
+    cfg: LinkageConfig,
+    ckpt: CheckpointManager,
+    em: em_mod.EMResult | None = None,
+) -> LinkageResult:
+    """The linkage core after the records stage: blocking -> candidate
+    pairs -> gamma scoring -> pattern counts -> EM -> matched pairs ->
+    connected components, each a stage of ``ckpt``. ``records`` is a
+    cut ``prepare_pages`` table (block keys materialized).
+
+    ``em=None`` fits the EM; a given ``em`` is applied frozen — the
+    estimate-then-apply contract of ``R/emlinkRS.R``, used by
+    ``IncrementalLinker.compact()`` (``fit_and_match``). The result
+    keeps ``ckpt``: its ``close()`` frees the run's scratch."""
+    blocked = _blocked_records(records, cfg)
+    cand = ckpt.stage(
+        "candidate_pairs",
+        lambda: pairs_mod.candidate_pairs(
+            blocked,
+            skew_threshold=cfg.skew_threshold,
+            target_block=cfg.target_block,
+        ),
+        inputs=("records",),
+    )
+
+    fields = list(cfg.fields)
+    # Repartition before the UDF stage ONLY when the pair stream arrives
+    # in fewer partitions than 4x cores: smooths per-partition JW-content
+    # skew (the gamma wall is set by the slowest task) for small/skewed
+    # inputs, but at 100 TB the candidate-pair table is the job's largest
+    # table and already lands in thousands of well-distributed partitions
+    # — a full exchange there would be the bottleneck. AQE's skew
+    # handling covers the residual case.
+    par = spark.sparkContext.defaultParallelism * 4
+    gamma_src = cand if cand.rdd.getNumPartitions() >= par else cand.repartition(par)
+    # 50k-row Arrow batches for the scoring stage only: amortizes
+    # per-batch UDF overhead and widens the JW kernel's unique-pair
+    # factorization window (~7% measured). Pair rows are slim strings
+    # (~20 MB/batch); the OPH UDF stage keeps the 10k default — its
+    # rows carry token arrays.
+    _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    _arrow_prev = spark.conf.get(_arrow_key, "10000")
+    spark.conf.set(_arrow_key, "50000")
+    try:
+        scored = ckpt.stage(
+            "pairs_gamma",
+            lambda: gammas.with_gammas(gamma_src, fields).select(*scored_columns(cfg)),
+            inputs=("candidate_pairs",),
+        )
+    finally:
+        spark.conf.set(_arrow_key, _arrow_prev)
+    em, scored_patterns, matched_plan = fit_and_match(spark, scored, cfg, ckpt, em)
+    matched = ckpt.stage("matched_pairs", lambda: matched_plan, inputs=("pairs_gamma",))
 
     # CC's round cuts are read only while the clusters stage is
     # written; its read-back replaces them, so the namespace is freed as
-    # soon as the stage returns. A resumed stage opens none.
-    cc_mat = None
-
-    def _build_clusters() -> DataFrame:
-        nonlocal cc_mat
-        cc_mat = ckpt.materializer()
-        return cluster.connected_components(
-            matched.select("a_rec_id", "b_rec_id"),
-            records.select(F.col("rec_id").alias("id")),
-            materializer=cc_mat,
-        )
-
+    # soon as the stage returns. A resumed stage opens none (the
+    # materializer binds its namespace at its first cut).
+    cc_mat = ckpt.materializer()
     try:
-        labels = ckpt.stage("clusters", _build_clusters, inputs=("matched_pairs",))
+        labels = ckpt.stage(
+            "clusters",
+            lambda: cluster.connected_components(
+                matched.select("a_rec_id", "b_rec_id"),
+                records.select(F.col("rec_id").alias("id")),
+                materializer=cc_mat,
+            ),
+            inputs=("matched_pairs",),
+        )
     finally:
-        if cc_mat is not None:
-            cc_mat.close()
+        cc_mat.close()
 
     entities = labels.withColumnRenamed("id", "rec_id").join(
         records.select("rec_id", "url"), "rec_id"
@@ -467,4 +469,5 @@ def link_prepared(
         em=em,
         pattern_counts=scored_patterns,
         metrics=metrics,
+        checkpoint=ckpt,
     )

@@ -11,9 +11,10 @@ each micro-batch of arriving pages. Per batch:
      equi-join over the persisted inverted index, PRUNED to the batch's
      own block keys (per-batch cost scales with the batch, not the
      corpus) and deduped to each record's latest crawl;
-  3. gamma scoring + the batch pipeline's EXACT matched-pair rule
-     (pipeline.matched_from_zeta: frozen zeta threshold + the
-     deterministic-fields pass) — one shared definition, no drift;
+  3. gamma scoring, then the batch pipeline's own scoring tail
+     (pipeline.fit_and_match with the frozen EM: pattern counts ->
+     zeta -> the matched_from_zeta threshold + deterministic-fields
+     pass) — one code path, no drift;
   4. accepted pairs assign each new record to min(own rec_id, partner
      labels) — a single distributed groupBy, no iteration;
   5. label DISAGREEMENT edges (matched pairs whose two endpoints ended
@@ -76,18 +77,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..em import EMResult, apply_em
+from ..em import EMResult
 from ..operators import gammas
 from ..operators.pairs import candidate_pairs_two
 from ..plans.checkpoint import CheckpointManager, atomic_write_text
-from ..plans.materialize import ScopedMaterializer
 from ..plans.pipeline import (
     LinkageConfig,
+    fit_and_match,
     link_prepared,
-    matched_from_zeta,
     prepare_pages,
     scored_columns,
-    zeta_pattern_df,
 )
 from ..session import local_frame
 
@@ -244,19 +243,17 @@ class IncrementalLinker:
         if batch_id is not None and batch_id <= manifest["last_batch_id"]:
             return None  # replayed batch, already fully applied
         seq = manifest["seq"] + 1
-        # ONE scratch namespace for the whole batch, deleted right
-        # after the manifest commit (ADVICE r4: per-cut resolve(None)
-        # namespaces lived until JVM exit — a long-running stream
-        # accumulated a parquet copy of every batch's intermediates).
-        # Closing is safe because the returned DataFrame is re-read
-        # from the COMMITTED state segment, not from scratch.
-        mat = ScopedMaterializer()
+        # ONE rootless manager for the whole batch: every cut is one of
+        # its stages, deleted right after the manifest commit, so a
+        # long-running stream never accumulates scratch. Safe: the
+        # returned DataFrame is re-read from the COMMITTED state segment.
+        ckpt = CheckpointManager(self.spark, None)
         try:
             return self._process_batch_inner(
-                new_pages, batch_id, manifest, seq, mat
+                new_pages, batch_id, manifest, seq, ckpt
             )
         finally:
-            mat.close()
+            ckpt.close()
 
     def _process_batch_inner(
         self,
@@ -264,20 +261,20 @@ class IncrementalLinker:
         batch_id: int | None,
         manifest: dict,
         seq: int,
-        mat,
+        ckpt: CheckpointManager,
     ) -> DataFrame:
         cfg = self.cfg
         fields = list(cfg.fields)
         # per-stage wall counters (north-star "per-partition lineage
         # and counters"): each entry closes at a real Spark action
-        # boundary (mat() parquet write / toPandas / collect), so the
+        # boundary (a stage's parquet write / toPandas / collect), so the
         # walls are true stage costs, not lazy-plan noise. Read them
         # from ``last_batch_metrics`` after the call — BENCH/
         # stream_scale.py uses them to evidence that state-dependent
         # stages stay flat as the corpus grows (r4+r6 prunes).
         walls: dict = {}
         t0 = time.time()
-        new_rec = mat(prepare_pages(new_pages, cfg), "new_rec")
+        new_rec = ckpt.stage("new_rec", lambda: prepare_pages(new_pages, cfg))
         walls["prepare"] = round(time.time() - t0, 3)
 
         old_rec = self._read_segments(manifest, "records")
@@ -329,36 +326,27 @@ class IncrementalLinker:
             skew_threshold=cfg.skew_threshold,
             target_block=cfg.target_block,
         ).where(F.col("a_rec_id") != F.col("b_rec_id"))
-        gcols = [f"gamma_{f.name}" for f in fields]
         t0 = time.time()
         # cut once: the pattern collect and the matched-pair rule both
         # read the scored pairs, which would otherwise run the pair join
         # and the JW UDFs twice
-        scored = mat(
-            gammas.with_gammas(pairs, fields).select(*scored_columns(cfg)), "scored"
+        scored = ckpt.stage(
+            "scored",
+            lambda: gammas.with_gammas(pairs, fields).select(*scored_columns(cfg)),
         )
-        patt = gammas.pattern_counts(scored, fields).toPandas()
         walls["index_pairs_gamma"] = round(time.time() - t0, 3)
         t0 = time.time()
-        if len(patt) == 0:
-            matched = None
-        else:
-            # THE shared matched-pair rule (frozen zeta + deterministic
-            # pass) — identical by construction to the batch pipeline
-            # and compact(). Materialized once: the frame feeds the
-            # prune-key scan, the partner join AND the conflict check —
-            # three consumers of one gamma-scored plan.
-            zdf = zeta_pattern_df(self.spark, apply_em(patt, self.em), gcols)
-            matched = mat(
-                matched_from_zeta(
-                    scored,
-                    zdf,
-                    gcols,
-                    threshold=cfg.threshold,
-                    deterministic_fields=cfg.deterministic_fields,
-                ),
-                "matched",
-            )
+        # THE batch pipeline's scoring tail under the frozen EM —
+        # identical by construction to link_dedupe and compact(). The
+        # matched pairs are cut once: the frame feeds the prune-key
+        # scan, the partner join AND the conflict check. No pattern at
+        # all (no candidate pair) skips the cut and the state reads.
+        _, patterns, matched_plan = fit_and_match(
+            self.spark, scored, cfg, ckpt, em=self.em
+        )
+        matched = (
+            ckpt.stage("matched", lambda: matched_plan) if len(patterns) else None
+        )
         walls["matched"] = round(time.time() - t0, 3)
         t0 = time.time()
 
@@ -408,8 +396,8 @@ class IncrementalLinker:
             )
         else:
             new_ent = new_ids.withColumn("cluster_id", F.col("rec_id"))
-        new_ent = mat(
-            new_ent.join(new_rec.select("rec_id", "url"), "rec_id"), "new_ent"
+        new_ent = ckpt.stage(
+            "new_ent", lambda: new_ent.join(new_rec.select("rec_id", "url"), "rec_id")
         )
         # the pruned entities-state read + partner join + assignment —
         # THE stage that must stay O(batch) as the corpus grows
@@ -478,13 +466,13 @@ class IncrementalLinker:
                     [(k, v) for k, v in resolved.items() if k != v],
                     "cluster_id long, __to long",
                 )
-                new_ent = mat(
-                    new_ent.join(F.broadcast(mdf), "cluster_id", "left").select(
+                new_ent = ckpt.stage(
+                    "new_ent_relabel",
+                    lambda: new_ent.join(F.broadcast(mdf), "cluster_id", "left").select(
                         "rec_id",
                         F.coalesce("__to", "cluster_id").alias("cluster_id"),
                         "url",
                     ),
-                    "new_ent_relabel",
                 )
 
         walls["reconcile"] = round(time.time() - t0, 3)
@@ -519,7 +507,7 @@ class IncrementalLinker:
             "walls": walls,
         }
         # serve the batch's rows from COMMITTED state, not scratch —
-        # the frame outlives mat.close(), and stays readable until the
+        # the frame outlives ckpt.close(), and stays readable until the
         # next compact() retires this segment (same VACUUM contract as
         # expiring Iceberg snapshots: materialize before compacting if
         # you need it longer). The written schema spares the read-back

@@ -50,20 +50,23 @@ def test_persons_linkage(spark):
 
 
 def test_link_records_one_slim_cut(spark, monkeypatch):
-    """Two-table linkage cuts lineage once, after scoring, and writes
-    only what pattern_counts and matched_from_zeta read: the ids and
-    gamma_* (no pair cut, no compared strings)."""
-    from fastlink_spark.plans import link_two
+    """Two-table linkage cuts lineage once, after scoring, as stage
+    pairs_gamma, and writes only what the pattern collect and
+    matched_from_zeta read: the ids and gamma_* (no pair cut, no
+    compared strings)."""
+    from fastlink_spark.plans.checkpoint import CheckpointManager
 
-    cuts = []
+    stages = []
+    orig = CheckpointManager.stage
 
-    def recording(materializer):
-        def cut(df, name=""):
-            cuts.append((name, df.columns))
+    def recording(mgr, name, build, **kw):
+        def build_recorded():
+            df = build()
+            stages.append((name, df.columns))
             return df
-        return cut
+        return orig(mgr, name, build_recorded, **kw)
 
-    monkeypatch.setattr(link_two, "_resolve_mat", recording)
+    monkeypatch.setattr(CheckpointManager, "stage", recording)
     a_pdf, b_pdf, _ = generate_persons()
     fields = [FieldSpec("firstname", "string"), FieldSpec("lastname", "string")]
     res = link_records(
@@ -71,6 +74,7 @@ def test_link_records_one_slim_cut(spark, monkeypatch):
         id_col="pid", block_cols=["city"],
     )
     assert res.matched_pairs.count() > 0
-    assert cuts == [
-        ("link_two_scored", ["a_pid", "b_pid", "gamma_firstname", "gamma_lastname"])
+    assert stages == [
+        ("pairs_gamma", ["a_pid", "b_pid", "gamma_firstname", "gamma_lastname"])
     ]
+    res.close()

@@ -127,3 +127,10 @@ def test_config_change_invalidates_checkpoint(spark, tmp_path):
     r2 = link_dedupe(spark, pages, LinkageConfig(checkpoint_dir=ck, threshold=0.9))
     # threshold participates in the config token -> matched_pairs must rebuild
     assert r2.metrics["matched_pairs"]["resumed"] is False
+    # so does iter_max: a resumed run must neither serve the earlier
+    # (converged) EM fit nor the matched pairs it produced
+    r3 = link_dedupe(
+        spark, pages, LinkageConfig(checkpoint_dir=ck, threshold=0.9, iter_max=1)
+    )
+    assert r3.metrics["matched_pairs"]["resumed"] is False
+    assert r3.em.iterations == 1 and r2.em.iterations > 1

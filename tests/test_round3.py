@@ -422,7 +422,7 @@ def test_parquet_materializer_retention_and_orphan_wipe(spark, tmp_path):
     os.makedirs(os.path.join(ck, "_op_stages", "inv_0007"))
     man = CheckpointManager(spark, ck, "tok")
     m1 = man.materializer()
-    out = m1(spark.range(3), "fresh")  # wipe happens at materializer() call
+    out = m1(spark.range(3), "fresh")  # the manager wiped the orphan when built
     assert not os.path.exists(os.path.join(ck, "_op_stages", "inv_0007"))
     assert out.count() == 3
     # second materializer() in the SAME run must NOT wipe live scratch

@@ -290,6 +290,45 @@ def test_process_batch_leaves_no_scratch_behind(spark, tmp_path):
     assert after == before
 
 
+def test_linkage_results_close_their_scratch(spark):
+    """link_records and link_dedupe without checkpoint_dir cut into
+    scratch that only the caller knows is dead: each result's close()
+    frees it, so repeated calls in one JVM leave no inv_<n> dir behind
+    (three link_records(one_to_one=True) calls used to leave 2, 4, then
+    6)."""
+    from fastlink_spark.operators.gammas import FieldSpec
+    from fastlink_spark.plans.link_two import link_records
+    from fastlink_spark.plans.materialize import _discover_root
+    from fastlink_spark.plans.pipeline import LinkageConfig, link_dedupe
+    from fastlink_spark.sources.fixtures import generate_pages, generate_persons
+
+    a_pdf, b_pdf, _ = generate_persons()
+    df_a, df_b = spark.createDataFrame(a_pdf), spark.createDataFrame(b_pdf)
+    root = _discover_root(df_a)
+    assert root is not None
+
+    def inv_dirs():
+        return {d for d in os.listdir(root) if d.startswith("inv_")}
+
+    before = inv_dirs()
+    fields = [FieldSpec("firstname", "string"), FieldSpec("lastname", "string")]
+    for _ in range(3):
+        res = link_records(
+            spark, df_a, df_b, fields, id_col="pid", block_cols=["city"],
+            one_to_one=True,
+        )
+        assert res.matched_pairs.count() > 0
+        assert inv_dirs() != before  # the result reads live scratch
+        res.close()
+        assert inv_dirs() == before
+    pages = spark.createDataFrame(generate_pages(n_base=20).pages)
+    res = link_dedupe(spark, pages, LinkageConfig())
+    assert res.entities.count() > 0
+    assert inv_dirs() != before
+    res.close()
+    assert inv_dirs() == before
+
+
 def test_rm_path_warns_on_failed_remote_delete(spark, capsys):
     from fastlink_spark.plans.materialize import _rm_path
 
